@@ -187,6 +187,8 @@ def etl_rows_per_sec(spark, sf_dir: str) -> tuple[float, int]:
         for tdf in export.tables.values():
             materialize(tdf)
     dt = time.time() - t0
+    for export in exports.values():
+        export.unpersist()
     return (n_rows / dt if dt > 0 else float("inf"), n_rows)
 
 

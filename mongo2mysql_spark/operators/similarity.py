@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from mongo2mysql_spark.functions.vector import dot_seq, norm_seq
+from mongo2mysql_spark.plans.ddl import quote_ident
 
 
 def _pair_cosine(dot: Column, norm_a: Column, norm_b: Column, scale: int = 6) -> Column:
@@ -445,7 +446,7 @@ def sign_pack(
     :func:`topk_hamming` as ``corpus_packed``."""
     words = sign_pack_sql(vec_col, dim)
     return df.selectExpr(
-        id_col, *[f"{w} AS __w{i}" for i, w in enumerate(words)]
+        quote_ident(id_col), *[f"{w} AS __w{i}" for i, w in enumerate(words)]
     )
 
 
@@ -469,10 +470,11 @@ def simhash_pack(
     # construction, paid on every query-side pack).  One selectExpr per
     # stage ships the same expression texts as a single string batch —
     # the parsed plan (Project over Alias) is identical.
+    id_sql = quote_ident(id_col)
     for stage in stages:
-        cur = cur.selectExpr(id_col, *[f"{txt} AS {n}" for n, txt in stage])
+        cur = cur.selectExpr(id_sql, *[f"{txt} AS {n}" for n, txt in stage])
     return cur.selectExpr(
-        id_col, *[f"{w} AS __w{i}" for i, w in enumerate(words)]
+        id_sql, *[f"{w} AS __w{i}" for i, w in enumerate(words)]
     )
 
 

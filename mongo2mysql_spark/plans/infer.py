@@ -9,6 +9,12 @@ max length / all-ISO / all-null statistics, and the driver maps those
 to reference type strings via the lattice.  Cost at 100 TB: a single
 scan with partial aggregation (max/min combine map-side), no shuffle
 wider than one row per column.
+
+The statistics are mergeable summaries (count adds, max length and
+all-ISO take max/min), so a :class:`~mongo2mysql_spark.operators.
+sequence.Numbering` passed in place of a DataFrame supplies them from
+its own per-(table, partition) aggregation: the same job that fits its
+``_num`` offsets, merged per table on the driver.
 """
 
 from __future__ import annotations
@@ -16,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.operators.sequence import Numbering
 from mongo2mysql_spark.plans.lattice import db_type_for_spark
 
 # Spark-side mirror of lattice.ISO_DATETIME_RE (Java regex, Porter.php:372).
@@ -33,6 +40,30 @@ def _schema_stat_aggs(fields) -> list:
                 F.min(F.col(name).rlike(ISO_RE_SQL).cast("int")).alias(f"__iso__{name}")
             )
     return aggs
+
+
+# how two partial statistics of one column combine, keyed by the
+# 7-character name prefix _schema_stat_aggs gives each statistic
+_COMBINE = {"__cnt__": lambda a, b: a + b, "__len__": max, "__iso__": min}
+
+
+def _numbered_stats(num: Numbering, fields) -> dict:
+    """{group → merged statistics} of ``num``'s numbered frame from the
+    numbering's one aggregation.  Each (group, partition) row is a
+    partial summary; ``num.out_col`` is never null, so its count is the
+    run's row count."""
+    aggs = _schema_stat_aggs([f for f in fields if f.name != num.out_col])
+    merged: dict = {}
+    for row in num.aggregate(*aggs):
+        row[f"__cnt__{num.out_col}"] = row["__n"]
+        group = row[num.partition_cols[0]] if num.partition_cols else None
+        stats = merged.setdefault(group, {})
+        for name, v in row.items():
+            combine = _COMBINE.get(name[:7])
+            if combine is None or v is None:
+                continue
+            stats[name] = v if stats.get(name) is None else combine(stats[name], v)
+    return merged
 
 
 def _stats_to_schema(fields, stats: dict, strict: bool) -> dict[str, str]:
@@ -54,19 +85,23 @@ def _stats_to_schema(fields, stats: dict, strict: bool) -> dict[str, str]:
     return out
 
 
-def infer_table_schema(df: DataFrame, strict: bool = True) -> dict[str, str]:
+def infer_table_schema(df: DataFrame | Numbering, strict: bool = True) -> dict[str, str]:
     """Return {column → reference db type} for a flat DataFrame.
 
     One aggregation job; string statistics and null counts for all
-    columns are computed in the same pass.
+    columns are computed in the same pass.  ``df`` may be an
+    ungrouped :class:`Numbering`, whose numbered frame is described.
     """
+    if isinstance(df, Numbering):
+        stats = _numbered_stats(df, df.schema.fields).get(None, {})
+        return _stats_to_schema(df.schema.fields, stats, strict)
     aggs = _schema_stat_aggs(df.schema.fields)
     stats = df.agg(*aggs).collect()[0].asDict() if aggs else {}
     return _stats_to_schema(df.schema.fields, stats, strict)
 
 
 def infer_table_schemas_grouped(
-    df: DataFrame, table_col: str = "_table", strict: bool = False
+    df: DataFrame | Numbering, table_col: str = "_table", strict: bool = False
 ) -> dict[str, dict[str, str]]:
     """Per-routed-table schema inference in ONE grouped aggregation.
 
@@ -75,9 +110,15 @@ def infer_table_schemas_grouped(
     the source.  This computes every table's column statistics in a
     single ``groupBy(table_col)`` pass (partial aggregation map-side —
     one shuffle of N×columns stat rows, regardless of input size).
-    Returns {table → {column → reference db type}}.
+    Returns {table → {column → reference db type}}.  ``df`` may be a
+    :class:`Numbering` grouped by ``table_col``.
     """
     fields = [f for f in df.schema.fields if f.name != table_col]
+    if isinstance(df, Numbering):
+        return {
+            t: _stats_to_schema(fields, stats, strict)
+            for t, stats in _numbered_stats(df, fields).items()
+        }
     aggs = _schema_stat_aggs(fields)
     if not aggs:
         return {}

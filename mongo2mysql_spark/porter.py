@@ -6,9 +6,13 @@ Per collection, the reference's per-row loop (route → flatten → filters
 Porter.php:131-235) becomes a set-oriented two-pass plan:
 
   read → _table routing column → flatten (+ spill children)
-       → skip/dataonly/wide guards → _num window
-  Pass 1 (schema): one aggregation per table → widening lattice → DDL
-  Pass 2 (data):  per-table JDBC upsert (or parquet staging)
+       → skip/dataonly/wide guards
+  Pass 1 (one per table family — the routed parent, each spilled
+          child): range-partition by (_table, order key), sort, persist
+          once; ONE aggregation per (table, partition) gives the schema
+          statistics and the _num offsets → widening lattice → DDL
+  Pass 2 (data): per-table JDBC upsert (or parquet staging) of a narrow
+          _num projection over the family's cache
 
 ``run_to_frames`` returns the transformed DataFrames + DDL without a
 sink (what the tests and the rows-only harness query exercise);
@@ -20,7 +24,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from mongo2mysql_spark.operators.flatten import flatten
 from mongo2mysql_spark.operators.guards import (
@@ -30,7 +33,7 @@ from mongo2mysql_spark.operators.guards import (
     table_too_wide,
 )
 from mongo2mysql_spark.operators.routing import DEFAULT_KLUDGE_RULES, add_table_column
-from mongo2mysql_spark.operators.sequence import add_num_two_phase
+from mongo2mysql_spark.operators.sequence import Numbering
 from mongo2mysql_spark.operators.spill import child_table_name, spill_child
 from mongo2mysql_spark.plans.ddl import evolve_schema_sql
 from mongo2mysql_spark.plans.infer import infer_table_schema, infer_table_schemas_grouped
@@ -57,14 +60,16 @@ class CollectionExport:
     schemas: dict[str, dict[str, str]] = field(default_factory=dict)
     ddl: list[str] = field(default_factory=list)
     skipped_wide: list[str] = field(default_factory=list)
-    _cached: DataFrame | None = None  # routed parent held persisted for the split
+    # one persisted Numbering per table family: the routed parent
+    # (keyed by the collection name) and each spilled child table
+    _families: dict[str, Numbering] = field(default_factory=dict)
 
     def unpersist(self) -> None:
-        """Release the cached routed-parent frame (call once the
-        per-table frames have been written/consumed)."""
-        if self._cached is not None:
-            self._cached.unpersist()
-            self._cached = None
+        """Release every family cache (call once the per-table frames
+        have been written/consumed)."""
+        for family in self._families.values():
+            family.unpersist()
+        self._families.clear()
 
 
 class SparkPorter:
@@ -102,47 +107,34 @@ class SparkPorter:
         # (Porter.php:116-117); first column for plain relational frames
         id_col = cfg.id_col if cfg.id_col in flat.parent.columns else df.columns[0]
 
+        # Each table family is numbered (Porter.php:260 — a per-table
+        # counter) and described by ONE aggregation over its one cache;
+        # the write then reads the cache.  Never a window partitioned
+        # by _table: a collection whose rows all route to one table
+        # (every flat relational frame) would sort in a single reducer.
         for spill in flat.spills:
-            child = spill_child(df, spill, id_col=id_col)
-            # per-child-table counter (Porter.php:260): two-phase global
-            # sequence — never a no-partition window (children are the
-            # exploded-array rows, the largest frames in the pipeline)
-            child = add_num_two_phase(child, ["_parentid", "_index"])
             name = child_table_name(collection_name, spill.flat_name)
             if cfg.dataonly and name not in cfg.existing_tables:
                 continue
             if name in cfg.skip:
                 continue
-            out.tables[name] = child
-
-        # Schema inference for child tables: one aggregation each (child
-        # frames are distinct plans; cardinality = number of spill fields).
-        for t, tdf in out.tables.items():
-            out.schemas[t] = infer_table_schema(tdf, strict=False)
+            child = Numbering(spill_child(df, spill, id_col=id_col), ["_parentid", "_index"])
+            out._families[name] = child
+            out.schemas[name] = infer_table_schema(child, strict=False)
+            out.tables[name] = child.frame()
 
         if not parent_skipped:
-            # Routing split: ONE scan for N destination tables.  The routed
-            # parent is persisted, the distinct-table collect and the single
-            # grouped schema aggregation run against the cache, and each
-            # per-table filter below is a narrow cache read.  (At cluster
-            # scale the equivalent is a partitionBy("_table") staging write;
-            # see SURVEY §3.)
-            #
-            # Per-table _num via grouped two-phase, NOT a window
-            # partitioned by _table: a collection whose rows all route to
-            # one table (every flat relational frame) would turn that
-            # window into a single-reducer global sort of the whole
-            # collection.
-            parent = add_num_two_phase(parent, [id_col], partition_cols=["_table"])
-            parent = parent.persist()
-            out._cached = parent
-            # The grouped inference doubles as the distinct-table pass:
-            # its groupBy("_table") output keys ARE the destination-table
-            # list, so ONE cache-materializing job replaces the former
-            # distinct().collect() + inference pair.
-            parent_schemas = infer_table_schemas_grouped(parent, "_table", strict=False)
+            # Routing split: ONE scan for N destination tables.  The
+            # grouped inference doubles as the distinct-table pass: its
+            # (_table, partition) groups ARE the destination-table list,
+            # and each per-table frame below is a narrow cache read.
+            # (At cluster scale the equivalent is a partitionBy("_table")
+            # staging write; see SURVEY §3.)
+            routed = Numbering(parent, [id_col], partition_cols=["_table"])
+            out._families[collection_name] = routed
+            parent_schemas = infer_table_schemas_grouped(routed, "_table", strict=False)
             for t in sorted(parent_schemas):
-                out.tables[t] = parent.filter(F.col("_table") == t).drop("_table")
+                out.tables[t] = routed.frame(t).drop("_table")
                 out.schemas[t] = parent_schemas[t]
 
         # DDL pass (once per table — the reference's per-row
@@ -161,32 +153,9 @@ class SparkPorter:
     # ------------------------------------------------------------------- run
 
     def run_to_frames(self, collections: dict[str, DataFrame]) -> dict[str, CollectionExport]:
-        """Exports are independent per collection and run SERIALLY by
-        default.  Round-12 threaded them (guide §2.6); the round-12
-        driver bench refuted it on cold idle local[32]: the ETL figure
-        fell 830k → 662k rows/s at 32 cores while hitting 1.50M at 8 —
-        concurrent exports fight for the one local executor.  On a
-        real multi-executor cluster overlapping the eager
-        schema-inference barriers back-fills stage tails:
-        ``SPARK_GRAFT_BUILD_THREADS=N`` (N>1) opts in."""
-        import os
-
-        items = list(collections.items())
-        env = os.environ.get("SPARK_GRAFT_BUILD_THREADS")
-        workers = 1
-        if env and env.isdigit():
-            workers = max(1, min(int(env), len(items)))
-        if workers <= 1 or len(items) <= 1:
-            return {name: self.export_collection(df, name) for name, df in items}
-        from mongo2mysql_spark.queries import parallel_branches
-
-        return parallel_branches(
-            {
-                name: (lambda d=df, n=name: self.export_collection(d, n))
-                for name, df in items
-            },
-            max_workers=workers,
-        )
+        """Export each collection, one after another.  Each export
+        holds its family caches until ``CollectionExport.unpersist``."""
+        return {name: self.export_collection(df, name) for name, df in collections.items()}
 
     def run(
         self,
@@ -199,17 +168,23 @@ class SparkPorter:
         (e.g. a partial of sources.jdbc.write_upsert or a parquet
         writer); ``ddl_executor(statements)`` applies the schema pass;
         ``reporter`` (telemetry.ProgressReporter) emits per-table row
-        throughput collected DURING the sink action (A17)."""
-        exports = self.run_to_frames(collections)
-        for export in exports.values():
-            if ddl_executor and export.ddl:
-                ddl_executor(export.ddl)
-            if sink:
-                for t, tdf in export.tables.items():
-                    if reporter is not None:
-                        tdf = reporter.wrap(t, tdf)
-                    sink(t, tdf)
-                    if reporter is not None:
-                        reporter.finish(t)
-            export.unpersist()
+        throughput collected DURING the sink action (A17).  Each
+        collection is exported, written and released before the next
+        one starts, so only one collection's family caches are held at
+        a time."""
+        exports = {}
+        for name, df in collections.items():
+            export = exports[name] = self.export_collection(df, name)
+            try:
+                if ddl_executor and export.ddl:
+                    ddl_executor(export.ddl)
+                if sink:
+                    for t, tdf in export.tables.items():
+                        if reporter is not None:
+                            tdf = reporter.wrap(t, tdf)
+                        sink(t, tdf)
+                        if reporter is not None:
+                            reporter.finish(t)
+            finally:
+                export.unpersist()
         return exports

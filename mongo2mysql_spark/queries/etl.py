@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mongo2mysql_spark.cachereg import slot_persist
 from mongo2mysql_spark.operators.flatten import SpillField, flatten
 from mongo2mysql_spark.operators.routing import add_table_column
 from mongo2mysql_spark.operators.sequence import add_num_two_phase
@@ -103,8 +104,12 @@ def etl_child_spill_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spill = SpillField("token", "token", T.ArrayType(T.StringType()), "array")
     child = spill_child(d, spill)
-    # two-phase global sequence: no single-reducer no-partition window
-    return add_num_two_phase(child, ["_parentid", "_index"])
+    # global sequence over one persisted range partitioning: no
+    # single-reducer no-partition window
+    return add_num_two_phase(
+        child, ["_parentid", "_index"],
+        persist=lambda df: slot_persist(("etl.child_spill_tokens",), df),
+    )
 
 
 # ------------------------------------------------------------------- routing
@@ -213,14 +218,15 @@ def etl_route_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "A11 synthetic _num: per-destination-table 1-based contiguous "
-        "sequence via the grouped two-phase operator (3 routing groups "
+        "sequence via the grouped Numbering operator (3 routing groups "
         "would make a windowed partitionBy 3 reducers at scale)."
     ),
 )
 def etl_num_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = Tb(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_returnflag")
     out = add_num_two_phase(
-        li, ["l_orderkey", "l_linenumber"], partition_cols=["l_returnflag"]
+        li, ["l_orderkey", "l_linenumber"], partition_cols=["l_returnflag"],
+        persist=lambda df: slot_persist(("etl.num_sequence",), df),
     )
     return out.filter(F.col("_num") <= 100)
 

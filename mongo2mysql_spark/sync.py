@@ -69,9 +69,11 @@ def sink_high_water(
 
 def _default_batch_df(spark: SparkSession, batch: list[dict]) -> DataFrame:
     """Documents → DataFrame through the JSON reader (the same dynamic
-    schema-per-batch path the porter's schemaless handling expects)."""
+    schema-per-batch path the porter's schemaless handling expects).
+    One partition: a batch is small, and each Python-worker task costs
+    more than the rows it carries."""
     return spark.read.json(
-        spark.sparkContext.parallelize([json.dumps(d) for d in batch])
+        spark.sparkContext.parallelize([json.dumps(d) for d in batch], 1)
     )
 
 
@@ -99,6 +101,11 @@ def incremental_export(
     ``ddl_executor`` overrides how those statements run (e.g. the
     CLI's sqlite dialect shim); the default executes them over
     ``connection_factory``.
+
+    Each batch frame is persisted once and released after the batch's
+    writes, so the porter's table families read the documents from
+    the cache instead of re-running the batch's source (for the
+    default reader, a Python RDD) once per family.
     """
     hw = sink_high_water(connection_factory, collection_name, id_col)
     make_df = batch_df or (lambda b: _default_batch_df(spark, b))
@@ -112,13 +119,19 @@ def incremental_export(
         collection, batch_size=batch_size, resume_from=hw,
         sort_field=id_col,
     ):
-        export = porter.export_collection(make_df(batch), collection_name)
-        if not ddl_done and export.ddl:
-            run_ddl(export.ddl)
-            ddl_done = True
-        for t, tdf in export.tables.items():
-            write_upsert(tdf, t, connection_factory, max_connections=1)
-            tables.add(t)
-        export.unpersist()
+        docs = make_df(batch).persist()
+        try:
+            export = porter.export_collection(docs, collection_name)
+            try:
+                if not ddl_done and export.ddl:
+                    run_ddl(export.ddl)
+                    ddl_done = True
+                for t, tdf in export.tables.items():
+                    write_upsert(tdf, t, connection_factory, max_connections=1)
+                    tables.add(t)
+            finally:
+                export.unpersist()
+        finally:
+            docs.unpersist()
         n_docs += len(batch)
     return {"docs": n_docs, "tables": tables, "resumed_from": hw}

@@ -297,22 +297,30 @@ def test_porter_skip_and_wide(spark, docs):
 
 
 def test_porter_single_scan_split(spark, docs):
-    """The routing split must not re-scan the parent per destination
-    table: the routed parent is persisted and per-table schemas come
-    from ONE grouped aggregation."""
+    """The routing split must not re-scan the source per destination
+    table: every table family (the routed parent and each spilled
+    child) is persisted once, and its per-table schemas come from ONE
+    aggregation over that cache."""
     from mongo2mysql_spark.plans.infer import infer_table_schema, infer_table_schemas_grouped
 
     exp = SparkPorter(spark, PorterConfig()).run_to_frames({"docs": docs})["docs"]
-    assert exp._cached is not None
-    assert exp._cached.storageLevel.useMemory  # persisted → split reads cache
+    families = dict(exp._families)
+    assert set(families) == {"docs", "docs__tags", "docs__members", "docs__big"}
+    for family in families.values():
+        assert family.cached.storageLevel.useMemory  # persisted → split reads cache
     # grouped inference == per-table inference, table by table
     parents = [t for t in exp.tables if "__" not in t]
-    grouped = infer_table_schemas_grouped(exp._cached, "_table", strict=False)
+    grouped = infer_table_schemas_grouped(families["docs"].frame(), "_table", strict=False)
     for t in parents:
         assert exp.schemas[t] == grouped[t]
         assert grouped[t] == infer_table_schema(exp.tables[t], strict=False)
+    # each child's merged per-partition statistics == its own inference
+    for t in ("docs__tags", "docs__members", "docs__big"):
+        assert exp.schemas[t] == infer_table_schema(exp.tables[t], strict=False)
     exp.unpersist()
-    assert exp._cached is None
+    assert not exp._families
+    for family in families.values():
+        assert not family.cached.storageLevel.useMemory
 
 
 def test_evolve_ddl_edge_cases():

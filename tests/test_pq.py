@@ -594,6 +594,26 @@ def test_sign_pack_sql_word_count_and_width(spark):
         sign_pack_sql("v", 0)
 
 
+def test_packers_quote_id_column(spark):
+    """An id column whose name needs quoting (``doc-id``) packs to the
+    same words as a plain one, under its own name."""
+    from mongo2mysql_spark.operators.similarity import sign_pack, simhash_pack
+
+    vecs = spark.range(6).select(
+        F.col("id").alias("doc_id"),
+        F.array(*[F.sin(F.col("id") * 3 + j) for j in range(8)]).alias("v"),
+    )
+    hyphen = vecs.withColumnRenamed("doc_id", "doc-id")
+    for pack in (
+        lambda df, id_col: sign_pack(df, id_col, "v", 8),
+        lambda df, id_col: simhash_pack(df, id_col, "v", 8, n_bits=16),
+    ):
+        got = pack(hyphen, "doc-id")
+        assert got.columns[0] == "doc-id"
+        want = pack(vecs, "doc_id")
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 def test_topk_hamming_wide_dim_multiword(spark):
     """128-dim vectors (4 packed words — the multi-word path the old
     64-dim cap ruled out) must match an independent NumPy popcount
