@@ -39,13 +39,34 @@ mirror orders by (d2, cid)).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from mongo2mysql_spark.operators.skew import salted_topk_per_group
 
 _DEC = "decimal(30,12)"
+
+
+def _local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """Driver-built rows (query distance tables, cell centroids) as a
+    ``LocalRelation``: the rows cross to the JVM as one Arrow table, so
+    no execution of the frame runs a Python-worker task —
+    ``createDataFrame(list)`` plans a PythonRDD that every execution
+    re-runs.  Values keep their exact bits: doubles are doubles on
+    both sides, and floats that came out of Spark are float32 already.
+    Empty ``rows`` give an empty frame of ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _l2sq_seq(a: Column, b: Column) -> Column:
@@ -794,8 +815,6 @@ def _query_dist_frame(
     oracle states."""
     import math
 
-    from pyspark.sql import types as T
-
     m_sub = len(cb)
     dsub = len(cb[0][0])
     tabs = []
@@ -819,7 +838,8 @@ def _query_dist_frame(
                 row.append(acc)
             dt.append(row)
         tabs.append((int(r[id_col]), dt))
-    return queries.sparkSession.createDataFrame(
+    return _local_frame(
+        queries.sparkSession,
         tabs,
         T.StructType(
             [
@@ -1049,10 +1069,9 @@ def _residual_frame(
     assigned = assign_centroids(
         vectors.select(id_col, vec_col), centroids, id_col, vec_col
     )
-    from pyspark.sql import types as T
-
-    cents_df = vectors.sparkSession.createDataFrame(
-        [(cid, vec) for cid, vec in sorted(cells.items())],
+    cents_df = _local_frame(
+        vectors.sparkSession,
+        sorted(cells.items()),
         T.StructType(
             [
                 T.StructField("centroid_id", T.LongType()),
@@ -1123,12 +1142,19 @@ def build_pq_residual_index(
     (:func:`train_codebook_distributed`), and one map-only
     :func:`pq_encode` of the residuals.  Unit-normalization is staged
     in-plan (sequential-fold norm), matching the cosine IVF cells.
+    The residual frame is computed ONCE: it is persisted for the
+    codebook fit (trained or stride) and the encode, and released
+    before the build returns.
 
     Returns ``(cell_centroids, cb_res, codes_df)``: the normalized
     cell centroids keyed by id (driver-bounded — index metadata), the
-    residual codebook, and the (id, codes, centroid_id) code table.
-    Like the trained-codebook paths this is bench/recall surface, not
-    oracle-restatable (Lloyd means are float-iterative)."""
+    residual codebook, and the (id, codes, centroid_id) code table,
+    ``localCheckpoint``-ed — a lineage-free write-once artifact whose
+    plan is a single ``LogicalRDD`` leaf, so searches neither recompute
+    nor re-analyze the build.  The checkpoint is the only storage the
+    build leaves behind.  Like the trained-codebook paths this is
+    bench/recall surface, not oracle-restatable (Lloyd means are
+    float-iterative)."""
     centroids = corpus.filter(F.col(id_col) % centroid_stride == 0)
     cent_rows = centroids.select(F.col(id_col), F.col(vec_col)).collect()
     cells: dict[int, list[float]] = {}
@@ -1140,22 +1166,27 @@ def build_pq_residual_index(
         n = s ** 0.5
         cells[int(r[id_col])] = [x / n for x in v] if n > 0 else v
 
-    residuals = _residual_frame(corpus, id_col, vec_col, centroids, cells)
-    if train:
-        cb_res = train_codebook_distributed(
-            residuals, id_col, "__res", m_sub,
-            stride=code_stride, k_max=k_max, iters=train_iters,
-        )
-    else:
-        # deterministic stride residual codebook (cid = id//stride on
-        # both engines) — the oracle-restatable variant the hashed
-        # driver branch serves; trained books are the recall path
-        cb_res = collect_codebook(
-            residuals, id_col, "__res", m_sub, code_stride, k_max
-        )
-    codes = pq_encode(
-        residuals, id_col, "__res", cb_res, keep=["centroid_id"]
-    )
+    residuals = _residual_frame(
+        corpus, id_col, vec_col, centroids, cells
+    ).persist()
+    try:
+        if train:
+            cb_res = train_codebook_distributed(
+                residuals, id_col, "__res", m_sub,
+                stride=code_stride, k_max=k_max, iters=train_iters,
+            )
+        else:
+            # deterministic stride residual codebook (cid = id//stride on
+            # both engines) — the oracle-restatable variant the hashed
+            # driver branch serves; trained books are the recall path
+            cb_res = collect_codebook(
+                residuals, id_col, "__res", m_sub, code_stride, k_max
+            )
+        codes = pq_encode(
+            residuals, id_col, "__res", cb_res, keep=["centroid_id"]
+        ).localCheckpoint()
+    finally:
+        residuals.unpersist()
     return cells, cb_res, codes
 
 
@@ -1172,17 +1203,21 @@ def pq_ivfadc_topk(
 ) -> DataFrame:
     """IVFADC search over a :func:`build_pq_residual_index` index.
 
-    Per probed (query, cell) pair the distance table is built from the
-    query's RESIDUAL against that cell (q−c vs the residual codebook) —
-    driver Python over the bounded queries×nprobe set, same contract
-    as ``_query_dist_frame``.  The scan side is identical to
-    :func:`pq_ivf_topk`: broadcast (query, cell, table) rows against
-    the cell-partitioned code table, ADC in decimal, top ``k·rerank``
-    per query by ADC, exact cosine re-rank of the finalists.
+    Per-batch work only: ONE driver action collects each query's
+    ``nprobe`` cells together with its vector (the probe still ranks
+    the corpus stride centroids in Spark).  Per probed (query, cell)
+    pair the distance table is built from the query's RESIDUAL against
+    that cell (q−c vs the residual codebook) — driver Python over the
+    bounded queries×nprobe set, same contract as
+    ``_query_dist_frame``.  The tables and the query vectors enter the
+    plan as Arrow-built local frames (:func:`_local_frame`), so no
+    Python-worker task runs and ``queries`` is read once.  The scan
+    side is identical to :func:`pq_ivf_topk`: broadcast (query, cell,
+    table) rows against the checkpointed code table, ADC in decimal,
+    top ``k·rerank`` per query by ADC, exact cosine re-rank of the
+    finalists against the collected query vectors.
     Returns (query_id, neighbor_id, adc_d2, cosine, rank)."""
     import math
-
-    from pyspark.sql import types as T
 
     from mongo2mysql_spark.functions.vector import cosine_seq
     from mongo2mysql_spark.operators.similarity import assign_centroids
@@ -1190,21 +1225,31 @@ def pq_ivfadc_topk(
     cells, cb_res, codes = index
     m_sub = len(cb_res)
     dsub = len(cb_res[0][0])
+    spark = queries.sparkSession
     centroids = corpus.filter(F.col(id_col) % centroid_stride == 0)
+    # the batch is bounded: in one partition the per-query probe window
+    # needs no shuffle
     probes = assign_centroids(
-        queries, centroids, id_col, vec_col, nprobe=nprobe
-    ).select(F.col(id_col).alias("query_id"), F.col("centroid_id")).collect()
+        queries.select(id_col, vec_col).coalesce(1),
+        centroids, id_col, vec_col, nprobe=nprobe,
+    ).select(
+        F.col(id_col).alias("query_id"),
+        F.col("centroid_id"),
+        F.col(vec_col).alias("__qv"),
+    ).collect()
+    qraw: dict[int, list] = {}
     qvecs: dict[int, list[float]] = {}
-    for r in queries.select(F.col(id_col), F.col(vec_col)).collect():
-        v = [float(x) for x in r[vec_col]]
-        s = 0.0
-        for x in v:
-            s = s + x * x
-        n = math.sqrt(s)
-        qvecs[int(r[id_col])] = [x / n for x in v] if n > 0 else v
     qside_rows = []
     for p in probes:
         qid, cid = int(p["query_id"]), int(p["centroid_id"])
+        if qid not in qraw:
+            qraw[qid] = p["__qv"]
+            v = [float(x) for x in p["__qv"]]
+            s = 0.0
+            for x in v:
+                s = s + x * x
+            n = math.sqrt(s)
+            qvecs[qid] = [x / n for x in v] if n > 0 else v
         qr = [a - b for a, b in zip(qvecs[qid], cells[cid])]
         dt = []
         for j in range(m_sub):
@@ -1217,7 +1262,8 @@ def pq_ivfadc_topk(
                 row.append(acc)
             dt.append(row)
         qside_rows.append((qid, cid, dt))
-    qside = queries.sparkSession.createDataFrame(
+    qside = _local_frame(
+        spark,
         qside_rows,
         T.StructType(
             [
@@ -1226,6 +1272,19 @@ def pq_ivfadc_topk(
                 T.StructField(
                     "__dt", T.ArrayType(T.ArrayType(T.DoubleType()))
                 ),
+            ]
+        ),
+    )
+    # the raw query vectors, in the queries' own element type, so the
+    # re-rank cosine folds exactly the values a scan of ``queries``
+    # would have joined
+    qv = _local_frame(
+        spark,
+        list(qraw.items()),
+        T.StructType(
+            [
+                T.StructField("query_id", T.LongType()),
+                T.StructField("__qv", queries.schema[vec_col].dataType),
             ]
         ),
     )
@@ -1256,15 +1315,7 @@ def pq_ivfadc_topk(
             ),
             "neighbor_id",
         )
-        .join(
-            F.broadcast(
-                queries.select(
-                    F.col(id_col).alias("query_id"),
-                    F.col(vec_col).alias("__qv"),
-                )
-            ),
-            "query_id",
-        )
+        .join(F.broadcast(qv), "query_id")
         .select(
             "query_id",
             "neighbor_id",

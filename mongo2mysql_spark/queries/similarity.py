@@ -186,12 +186,11 @@ def _ivfadc_index(spark: SparkSession, sf_dir: str, e: DataFrame) -> tuple:
     from mongo2mysql_spark.queries import slot_memo
 
     def build() -> tuple:
-        cells, cb_res, codes = build_pq_residual_index(
+        return build_pq_residual_index(
             e, "vec_id", "embedding", m_sub=PQ_M,
             centroid_stride=STRIDE, code_stride=PQ_STRIDE, k_max=PQ_K,
             train=False,
         )
-        return cells, cb_res, codes.localCheckpoint()
 
     return slot_memo(_IVFADC_MEMO, spark, sf_dir, build)
 

@@ -874,3 +874,134 @@ def test_topk_truncated_rescore_degenerates_to_bruteforce(spark):
     assert got == want
     salted, plan = _salted_window_lines(res)
     assert salted, plan
+
+
+def test_local_frame_round_trips_without_python_workers(spark):
+    """Driver-built frames go through Arrow: nested double tables and
+    float vectors come back bit-exact, an empty row list gives an empty
+    frame of the given schema, and executing the frame runs no
+    Python-worker task (no PythonRDD in its RDD lineage)."""
+    from pyspark.sql import types as T
+
+    from mongo2mysql_spark.operators.pq import _local_frame
+
+    schema = T.StructType(
+        [
+            T.StructField("query_id", T.LongType()),
+            T.StructField("dt", T.ArrayType(T.ArrayType(T.DoubleType()))),
+            T.StructField("qv", T.ArrayType(T.FloatType())),
+        ]
+    )
+    rng = np.random.default_rng(5)
+    rows = [
+        (
+            i,
+            [[float(x) for x in rng.normal(size=3)] for _ in range(2)]
+            + [[5e-324, -0.0, 1e308]],
+            [float(x) for x in rng.normal(size=4).astype(np.float32)],
+        )
+        for i in range(3)
+    ]
+    df = _local_frame(spark, rows, schema)
+    assert df.schema == schema
+    got = sorted((r.query_id, r.dt, r.qv) for r in df.collect())
+    assert got == rows
+    assert all(math.copysign(1.0, r.dt[2][1]) == -1.0 for r in df.collect())
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+
+    empty = _local_frame(spark, [], schema)
+    assert empty.schema == schema
+    assert empty.count() == 0
+
+
+def _small_ivfadc(spark, train):
+    from mongo2mysql_spark.operators.pq import build_pq_residual_index
+
+    df, _ = _vectors(spark, n=40, seed=3)
+    idx = build_pq_residual_index(
+        df, "vec_id", "embedding", m_sub=M,
+        centroid_stride=9, code_stride=3, k_max=KMAX, train_iters=2,
+        train=train,
+    )
+    return df, idx
+
+
+def test_ivfadc_index_codes_are_a_checkpointed_leaf(spark):
+    """The code table is a write-once artifact: its analyzed plan is a
+    single LogicalRDD (no build lineage for a search to re-analyze),
+    and the build keeps no storage besides that checkpoint."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    _, (cells, _, codes) = _small_ivfadc(spark, train=True)
+    after = set(jsc.getPersistentRDDs().keySet().toArray())
+    assert len(after - before) <= 1, after - before
+    plan = codes._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "LogicalRDD", plan.toString()
+    assert plan.children().isEmpty(), plan.toString()
+    rows = codes.collect()
+    assert len(rows) == 40 and {r.centroid_id for r in rows} <= set(cells)
+
+
+# (query_id, rank, neighbor_id, adc_d2, cosine) of the small index below,
+# recorded from the implementation that planned the build and the
+# search without a checkpoint or Arrow-built frames: the rewrite must
+# not move a single row
+_IVFADC_ROWS = {
+    True: [
+        (0, 1, 20, 0.546674, 0.523088), (0, 2, 14, 0.438067, 0.505454),
+        (0, 3, 23, 0.7314, 0.446504), (1, 1, 38, 1.063463, 0.470143),
+        (1, 2, 23, 1.142655, 0.233406), (1, 3, 10, 1.122468, 0.102601),
+        (2, 1, 32, 0.80119, 0.584583), (2, 2, 22, 1.132343, 0.361458),
+        (2, 3, 6, 0.986652, 0.203501),
+    ],
+    False: [
+        (0, 1, 20, 0.154673, 0.523088), (0, 2, 14, 0.127856, 0.505454),
+        (0, 3, 23, 0.155097, 0.446504), (1, 1, 38, 1.236959, 0.470143),
+        (1, 2, 26, 1.252473, 0.377507), (1, 3, 22, 1.252473, 0.07975),
+        (2, 1, 32, 1.345562, 0.584583), (2, 2, 14, 1.437644, 0.3512),
+        (2, 3, 28, 1.490754, 0.340099),
+    ],
+}
+
+
+@pytest.mark.parametrize("train", [True, False])
+def test_ivfadc_topk_rows_are_unchanged(spark, train):
+    from mongo2mysql_spark.operators.pq import pq_ivfadc_topk
+
+    df, idx = _small_ivfadc(spark, train)
+    got = pq_ivfadc_topk(
+        df, df.filter(F.col("vec_id") < 3), "vec_id", "embedding", idx,
+        centroid_stride=9, nprobe=2, k=3, rerank=2,
+    ).collect()
+    assert sorted(
+        (r.query_id, r.rank, r.neighbor_id, r.adc_d2, r.cosine) for r in got
+    ) == _IVFADC_ROWS[train]
+
+
+def test_ivfadc_topk_empty_batch_and_job_budget(spark):
+    """An empty query batch answers with no rows.  A 3-query batch
+    runs at most 9 Spark jobs: one driver action collects the probes
+    and query vectors, and the distance tables and query vectors join
+    as local frames (the previous plan re-read the queries and ran
+    10)."""
+    from mongo2mysql_spark.operators.pq import pq_ivfadc_topk
+
+    df, idx = _small_ivfadc(spark, train=False)
+
+    def search(q):
+        return pq_ivfadc_topk(
+            df, q, "vec_id", "embedding", idx,
+            centroid_stride=9, nprobe=2, k=3, rerank=2,
+        ).collect()
+
+    assert search(df.filter(F.col("vec_id") < 0)) == []
+    sc = spark.sparkContext
+    sc.setJobGroup("ivfadc-budget", "one search batch")
+    try:
+        rows = search(df.filter(F.col("vec_id") < 3))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("ivfadc-budget")
+    assert len(rows) == 9
+    assert len(jobs) <= 9, len(jobs)
