@@ -15,36 +15,28 @@ many times the slot is rebuilt.  Releasing a frame whose owning
 session has stopped is a no-op (the registry outlives sessions in
 test processes).
 
-Thread-safety: builders may run from parallel_branches workers when
-``SPARK_GRAFT_BUILD_THREADS>1``; the pop/unpersist/persist/register
-sequence runs under a per-key lock so a concurrent rebuild of the
-SAME site can never unpersist a frame another thread just registered
-and is actively computing over (ADVICE r12).
+Not thread-safe: callers are query builders running on the driver's
+calling thread (the parallel_branches workers run ``operators/``
+functions, which never call it), so the pop/unpersist/persist/register
+sequence takes no lock.
 """
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 
 _REGISTRY: dict = {}
-_KEY_LOCKS: dict = {}
-_KEY_LOCKS_GUARD = threading.Lock()
 
 
 def slot_persist(key: tuple, df: DataFrame) -> DataFrame:
     """persist ``df``, first unpersisting whatever frame this call
     site (identified by ``key``) registered on its previous build."""
-    with _KEY_LOCKS_GUARD:
-        lock = _KEY_LOCKS.setdefault(key, threading.Lock())
-    with lock:
-        old = _REGISTRY.pop(key, None)
-        if old is not None:
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 - owning session already stopped
-                pass
-        out = df.persist()
-        _REGISTRY[key] = out
+    old = _REGISTRY.pop(key, None)
+    if old is not None:
+        try:
+            old.unpersist()
+        except Exception:  # noqa: BLE001 - owning session already stopped
+            pass
+    out = df.persist()
+    _REGISTRY[key] = out
     return out

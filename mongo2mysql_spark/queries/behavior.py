@@ -525,7 +525,6 @@ def behavior_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]:
         conversion_latency,
     )
     from mongo2mysql_spark.operators.selection import exact_quantiles
-    from mongo2mysql_spark.queries import parallel_branches
 
     def _latpair():
         # conversion latency + its distribution summary: p50/p90 via
@@ -553,42 +552,33 @@ def behavior_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]:
         )
         return lat, latdist
 
-    # The funnelstate streaming round-trip mutates the session
-    # shuffle-partitions conf (run_to_memory state-store sizing) — it
-    # runs first, alone, so no sibling builder can checkpoint under
-    # the transient 8-partition conf (VERDICT r12 #2).  The remaining
-    # builders (funnel frontiers' eager checkpoints, the funnelmax
-    # memo, the latency quantile collect) run serially by default;
-    # SPARK_GRAFT_BUILD_THREADS>1 opts in to overlapping them on a
-    # real multi-executor cluster.
+    # The funnelstate streaming round-trip sets the session
+    # shuffle-partitions conf (run_to_memory state-store sizing) while
+    # it runs — it runs first, so the funnel frontiers' eager
+    # checkpoints and the funnelmax memo below never see the transient
+    # 8-partition conf.
     funnelstate = _funnelstate_counts(spark, sf_dir, e).select(
         "step", "event_type", "users", "denom", "rate"
     )
-    _bb = parallel_branches(
-        {
-            "latpair": _latpair,
-            "fun": lambda: funnel_counts(
-                e, "user_id", "event_type", "ts", "event_id", FUNNEL_STEPS
-            ).select("step", "event_type", "users", "denom", "rate"),
-            "funwin": lambda: funnel_counts(
-                e, "user_id", "event_type", "ts", "event_id", FUNNEL_STEPS,
-                within_ms=FUNNEL_WINDOW_MS,
-            ).select("step", "event_type", "users", "denom", "rate"),
-            "funnelmax": lambda: slot_memo(
-                _FUNMAX_MEMO,
-                spark,
-                sf_dir,
-                lambda: funnel_max_level(
-                    e, "user_id", "event_type", "ts", "event_id",
-                    FUNNEL_STEPS, within_ms=FUNNEL_WINDOW_MS,
-                )
-                .select("user_id", F.col("level").alias("step"))
-                .localCheckpoint(),
-            ),
-        }
+    lat, latdist = _latpair()
+    fun = funnel_counts(
+        e, "user_id", "event_type", "ts", "event_id", FUNNEL_STEPS
+    ).select("step", "event_type", "users", "denom", "rate")
+    funwin = funnel_counts(
+        e, "user_id", "event_type", "ts", "event_id", FUNNEL_STEPS,
+        within_ms=FUNNEL_WINDOW_MS,
+    ).select("step", "event_type", "users", "denom", "rate")
+    funnelmax = slot_memo(
+        _FUNMAX_MEMO,
+        spark,
+        sf_dir,
+        lambda: funnel_max_level(
+            e, "user_id", "event_type", "ts", "event_id",
+            FUNNEL_STEPS, within_ms=FUNNEL_WINDOW_MS,
+        )
+        .select("user_id", F.col("level").alias("step"))
+        .localCheckpoint(),
     )
-    fun = _bb["fun"]
-    funwin = _bb["funwin"]
     ret = retention_cohorts(e, "user_id", "ts").select(
         "cohort_week",
         "week_offset",
@@ -614,7 +604,6 @@ def behavior_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]:
         F.col("total").alias("denom"),
         F.col("share").alias("rate"),
     )
-    lat, latdist = _bb["latpair"]
     # attribution models (operators/behavior.attribution_credit):
     # first/last-touch flags + linear credit per (touch, conversion)
     # pair inside the funnel's 24h window — exact integers + booleans,
@@ -643,5 +632,5 @@ def behavior_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]:
         # user-bounded artifact frame — slot-memoized like funnelstate
         # (pass 1 pays the anchor advances, later materializations
         # serve the checkpoint)
-        "funnelmax": _bb["funnelmax"],
+        "funnelmax": funnelmax,
     }

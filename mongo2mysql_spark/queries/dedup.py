@@ -464,7 +464,7 @@ def dedup_pair_families(spark: SparkSession, sf_dir: str) -> DataFrame:
     # best-of-2, branch attribution, repeat driver reads) serves the
     # checkpointed pair lists instead of re-running two corpus passes
     from mongo2mysql_spark.operators.ppjoin import ppjoin_pairs
-    from mongo2mysql_spark.queries import parallel_branches, slot_memo
+    from mongo2mysql_spark.queries import slot_memo
 
     def build_shingle_pairs() -> tuple:
         sh = d.select(
@@ -485,21 +485,10 @@ def dedup_pair_families(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.unpersist()
         return ng_, pp_
 
-    # the two memoized cold builds (the LSH signature pass and the
-    # shingle ngram/ppjoin pair checkpoints — the r5-leak-guarded
-    # persists stay inside their builder) are independent; a cold pass
-    # overlaps them from the thread pool (guide §2.6).  minhash pairs
-    # come from the slot-shared memoized LSH pass.
-    _dp = parallel_branches(
-        {
-            "mh": lambda: _minhash_pairs(spark, sf_dir),
-            "shp": lambda: slot_memo(
-                _SHINGLE_PAIRS_MEMO, spark, sf_dir, build_shingle_pairs
-            ),
-        }
-    )
-    mh = _dp["mh"]
-    ng, pp = _dp["shp"]
+    # minhash pairs come from the slot-shared memoized LSH pass; the
+    # r5-leak-guarded shingle persist stays inside its builder
+    mh = _minhash_pairs(spark, sf_dir)
+    ng, pp = slot_memo(_SHINGLE_PAIRS_MEMO, spark, sf_dir, build_shingle_pairs)
     e = T(spark, sf_dir, "embeddings", fanout=True)
     co = embedding_neardup_pairs(e, "vec_id", "embedding", "label", min_cosine=0.3)
     from mongo2mysql_spark.operators.dedup import fuzzy_value_pairs
@@ -803,8 +792,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         # the five artifacts are independent eager-job chains over the
-        # same (already checkpointed) pair graph — overlap their
-        # fixed-point/iteration jobs from the thread pool (guide §2.6)
+        # same (already checkpointed) pair graph — their fixed-point and
+        # iteration jobs underfill the executor, so they overlap
         g = parallel_branches(
             {
                 "comp": lambda: connected_components(
@@ -826,8 +815,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "clust_coeff",
                 ).localCheckpoint(),
                 "lp": _lp,
-            },
-            max_workers=5,
+            }
         )
         return g["comp"], g["pr"], g["tri"], g["inc"], g["lp"]
 

@@ -685,7 +685,7 @@ def _cms_stream_frame(spark: SparkSession, sf_dir: str, hk) -> DataFrame:
 def profile_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo2mysql_spark.operators.integrity import integrity_report
     from mongo2mysql_spark.operators.profile import profile_table
-    from mongo2mysql_spark.queries import parallel_branches, tagged_union
+    from mongo2mysql_spark.queries import tagged_union
 
     d = T(spark, sf_dir, "documents", fanout=True)
     prof = profile_table(
@@ -760,30 +760,25 @@ def profile_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rescan selectivity; invariance pinned by
     # test_bucket_granularity_invariant + the literal-chain test;
     # measured 10.6-13.3 -> 6.8-8.5 s for the pair on idle local[32])
-    _eager = parallel_branches(
-        {
-            "histli": lambda: equi_depth_histogram(
-                li, "l_extendedprice", _HIST_BUCKETS,
-                bucket_expr="FLOOR({c} / 256)",
-            ),
-            "histod": lambda: equi_depth_histogram(
-                T(spark, sf_dir, "orders", fanout=True),
-                "o_totalprice",
-                _HIST_BUCKETS,
-                bucket_expr="FLOOR({c} / 256)",
-            ),
-            "cmsst": lambda: slot_memo(
-                _CMSSTREAM_MEMO, spark, sf_dir,
-                lambda: _cms_stream_frame(spark, sf_dir, hk),
-            ),
-        }
+    hist_li = equi_depth_histogram(
+        li, "l_extendedprice", _HIST_BUCKETS,
+        bucket_expr="FLOOR({c} / 256)",
     )
-    hist_li = _eager["histli"]
+    hist_od = equi_depth_histogram(
+        T(spark, sf_dir, "orders", fanout=True),
+        "o_totalprice",
+        _HIST_BUCKETS,
+        bucket_expr="FLOOR({c} / 256)",
+    )
+    cmsst = slot_memo(
+        _CMSSTREAM_MEMO, spark, sf_dir,
+        lambda: _cms_stream_frame(spark, sf_dir, hk),
+    )
     hist = (
         hist_li
         .select(F.lit("lineitem.l_extendedprice").alias("column"), "*")
         .unionByName(
-            _eager["histod"]
+            hist_od
             .select(F.lit("orders.o_totalprice").alias("column"), "*")
         )
     )
@@ -857,7 +852,6 @@ def profile_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("exact").alias("n_rows"),
         F.col("est").alias("mean_value"),
     )
-    cmsst = _eager["cmsst"]
     return tagged_union(
         {
             "profile": prof,
@@ -1825,48 +1819,38 @@ def resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo2mysql_spark.operators.bars import ohlc_bars, twap_bars
     from mongo2mysql_spark.operators.forecast import seasonal_backtest
     from mongo2mysql_spark.operators.trend import hourly_trend
-    from mongo2mysql_spark.queries import parallel_branches
 
-    # the forecast/backtest and mad builders run eager driver actions
-    # (checkpointed quantile phases, bound collects); constructing the
-    # independent branches from a thread pool overlaps those jobs
-    # (guide §2.6) — the frames themselves are unchanged
-    built = parallel_branches(
-        {
-            "fcbt": lambda: seasonal_backtest(
-                ev, "event_type", "ts",
-                split_frac_num=_FC_SPLIT_NUM, split_frac_den=_FC_SPLIT_DEN,
-            ),
-            "ohlc": lambda: ohlc_bars(
-                ev, "event_type", "ts", "value", "event_id",
-                interval_seconds=_RESAMPLE_INTERVAL,
-            ),
-            "trend": lambda: hourly_trend(ev, "event_type", "ts"),
-            "twap": lambda: twap_bars(
-                ev, "event_type", "ts", "value", "event_id",
-                interval_seconds=_RESAMPLE_INTERVAL,
-            ),
-            "mad": lambda: mad_outliers(
-                ev.select("event_type", "event_id", "value"),
-                ["event_type"], "value", ["event_id"], k=_MAD_K,
-            ).select(
-                F.col("event_type").alias("key"), "event_id",
-                F.col("value").alias("raw_value"),
-                "med", "mad", "abs_dev", "is_degenerate", "is_mad_outlier",
-            ),
-        }
+    fc, bt = seasonal_backtest(
+        ev, "event_type", "ts",
+        split_frac_num=_FC_SPLIT_NUM, split_frac_den=_FC_SPLIT_DEN,
     )
-    fc, bt = built["fcbt"]
+    ohlc = ohlc_bars(
+        ev, "event_type", "ts", "value", "event_id",
+        interval_seconds=_RESAMPLE_INTERVAL,
+    )
+    trend = hourly_trend(ev, "event_type", "ts")
+    twap = twap_bars(
+        ev, "event_type", "ts", "value", "event_id",
+        interval_seconds=_RESAMPLE_INTERVAL,
+    )
+    mad = mad_outliers(
+        ev.select("event_type", "event_id", "value"),
+        ["event_type"], "value", ["event_id"], k=_MAD_K,
+    ).select(
+        F.col("event_type").alias("key"), "event_id",
+        F.col("value").alias("raw_value"),
+        "med", "mad", "abs_dev", "is_degenerate", "is_mad_outlier",
+    )
     return tagged_union(
         {
             "resample": rs,
             "zscore": zs,
             "forecast": fc,
             "backtest": bt,
-            "ohlc": built["ohlc"],
-            "trend": built["trend"],
-            "twap": built["twap"],
-            "mad": built["mad"],
+            "ohlc": ohlc,
+            "trend": trend,
+            "twap": twap,
+            "mad": mad,
         }
     )
 

@@ -945,8 +945,7 @@ def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
                      _HJ_BUCKETS),
                 ccount("r", region),
             ),
-        },
-        max_workers=6,
+        }
     )
     pct = _eg["pct"]
     agg = (

@@ -466,33 +466,25 @@ def sample_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mongo2mysql_spark.functions.text import tokens
     from mongo2mysql_spark.operators.unimax import unimax_mixture
-    from mongo2mysql_spark.queries import parallel_branches
 
     # the three memoized cold builds (DSIR fit, UniMax waterfill,
-    # priority-sample streaming store) are independent — overlap them
-    # from the thread pool (guide §2.6); warm passes hit the memos
-    _sb = parallel_branches(
-        {
-            "dsir": lambda: slot_memo(_DSIR_MEMO, spark, sf_dir, build_dsir),
-            "uni": lambda: slot_memo(
-                _UNIMAX_MEMO,
-                spark,
-                sf_dir,
-                lambda: unimax_mixture(
-                    d,
-                    "source",
-                    F.size(tokens(F.col("text"))).cast("long"),
-                    budget_frac=Fraction(UNIMAX_B_NUM, UNIMAX_B_DEN),
-                    e_max=UNIMAX_EMAX,
-                ),
-            ),
-            "prio": lambda: slot_memo(
-                _PRIO_MEMO, spark, sf_dir,
-                lambda: _prio_store_frame(spark, sf_dir),
-            ),
-        }
+    # priority-sample streaming store); warm passes hit the memos
+    dsir = slot_memo(_DSIR_MEMO, spark, sf_dir, build_dsir)
+    uni = slot_memo(
+        _UNIMAX_MEMO,
+        spark,
+        sf_dir,
+        lambda: unimax_mixture(
+            d,
+            "source",
+            F.size(tokens(F.col("text"))).cast("long"),
+            budget_frac=Fraction(UNIMAX_B_NUM, UNIMAX_B_DEN),
+            e_max=UNIMAX_EMAX,
+        ),
     )
-    dsir = _sb["dsir"]
+    ps = slot_memo(
+        _PRIO_MEMO, spark, sf_dir, lambda: _prio_store_frame(spark, sf_dir)
+    )
     fixedn = stratified_fixed_n(
         d.select("doc_id", "lang"), ["lang"], "doc_id", n=FIXED_N
     ).select("doc_id", "lang")
@@ -521,7 +513,6 @@ def sample_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("__n_labels") == 1).alias("leak_free"),
         )
     )
-    uni = _sb["uni"]
     # 'priority' (r12): priority sampling (operators/priority.py —
     # Duffield/Lund/Thorup JACM 2007, derandomized): the PRIO_K
     # highest-priority docs per language, weighted by n_chars.  Column
@@ -542,7 +533,6 @@ def sample_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # restatement hashes it: same-answer-different-path across the
     # streaming boundary (the cmsstream gate pattern, here for the
     # weighted-sample state shape).
-    ps = _sb["prio"]
     prio_items = ps.select(
         "lang",
         F.col("prank").cast("long").alias("n_docs"),

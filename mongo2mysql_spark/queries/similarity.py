@@ -555,54 +555,35 @@ def ann_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk_truncated_rescore,
     )
 
-    from mongo2mysql_spark.queries import parallel_branches
-
     e = T(spark, sf_dir, "embeddings", fanout=True)
     q = e.filter(F.col("vec_id") < N_QUERIES)
     cols = ["query_id", "neighbor_id", "cosine", "rank"]
 
     # packed BQ words are INDEX STATE (a deployment stores the words —
     # that is the 32× read cut): built once per (app, sf_dir), serving
-    # scans them; the bounded query side packs per call.  The builders
-    # run from a thread pool (guide §2.6): the arrow path's query
-    # collect, the memoized BQ-index checkpoints, and the streaming
-    # serve round-trip overlap instead of queueing as serial barriers.
-    def _bq_paths():
-        signs, shwords = _bq_index(spark, sf_dir, e)
-        ham = topk_hamming(
-            e, q, "vec_id", "embedding", dim=EMB_DIM, k=10,
-            corpus_packed=signs,
-        )
-        bqr = topk_hamming_rescore(
-            e, q, "vec_id", "embedding", dim=EMB_DIM, k=10, overfetch=10,
-            corpus_packed=signs,
-        )
-        sh = topk_simhash(
-            e, q, "vec_id", "embedding", dim=EMB_DIM, n_bits=SH_BITS, k=10,
-            corpus_packed=shwords,
-        )
-        return ham, bqr, sh
-
-    _ab = parallel_branches(
-        {
-            "fold": lambda: topk_bruteforce(
-                e, q, "vec_id", "embedding", k=10
-            ).select(*cols),
-            "arrow": lambda: topk_bruteforce_arrow(
-                e, q, "vec_id", "embedding", k=10
-            ).select(*cols),
-            "bq": _bq_paths,
-            "mrl": lambda: topk_truncated_rescore(
-                e, q, "vec_id", "embedding",
-                prefix_dim=MRL_PREFIX, k=10, overfetch=MRL_OVERFETCH,
-            ),
-            "served": lambda: _ann_served(spark, sf_dir, e),
-        }
+    # scans them; the bounded query side packs per call.
+    fold = topk_bruteforce(e, q, "vec_id", "embedding", k=10).select(*cols)
+    arrow = topk_bruteforce_arrow(e, q, "vec_id", "embedding", k=10).select(
+        *cols
     )
-    fold = _ab["fold"]
-    arrow = _ab["arrow"]
-    ham, bqr, sh = _ab["bq"]
-    mrl = _ab["mrl"]
+    signs, shwords = _bq_index(spark, sf_dir, e)
+    ham = topk_hamming(
+        e, q, "vec_id", "embedding", dim=EMB_DIM, k=10,
+        corpus_packed=signs,
+    )
+    bqr = topk_hamming_rescore(
+        e, q, "vec_id", "embedding", dim=EMB_DIM, k=10, overfetch=10,
+        corpus_packed=signs,
+    )
+    sh = topk_simhash(
+        e, q, "vec_id", "embedding", dim=EMB_DIM, n_bits=SH_BITS, k=10,
+        corpus_packed=shwords,
+    )
+    mrl = topk_truncated_rescore(
+        e, q, "vec_id", "embedding",
+        prefix_dim=MRL_PREFIX, k=10, overfetch=MRL_OVERFETCH,
+    )
+    served = _ann_served(spark, sf_dir, e)
     nul_int = F.lit(None).cast("int")
     nul_dbl = F.lit(None).cast("double")
     return (
@@ -633,7 +614,7 @@ def ann_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .unionByName(
-            _ab["served"].select(
+            served.select(
                 F.lit("hamserve").alias("path"),
                 "query_id",
                 "neighbor_id",
@@ -1188,7 +1169,7 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo2mysql_spark.queries import tagged_union
 
     from mongo2mysql_spark.operators.pq import pq_ivf_topk, pq_ivfadc_topk
-    from mongo2mysql_spark.queries import parallel_branches, slot_memo
+    from mongo2mysql_spark.queries import slot_memo
     from mongo2mysql_spark.sources.ivfstore import topk_ivf_partitioned
 
     e = T(spark, sf_dir, "embeddings", fanout=True)
@@ -1219,20 +1200,13 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
 
     # the four write-once index artifacts (mined triplets, PQ book +
-    # codes, IVFADC residual index, partitioned IVF store) are
-    # independent memoized builds — construct them from a thread pool
-    # (guide §2.6) so a cold pass overlaps their trainer/write jobs
-    _ib = parallel_branches(
-        {
-            "trip": lambda: slot_memo(_TRIPLETS_MEMO, spark, sf_dir, mine),
-            "pq": lambda: _pq_index(spark, sf_dir, e),
-            "adc": lambda: _ivfadc_index(spark, sf_dir, e),
-            "store": lambda: _ivf_store_path(spark, sf_dir, e),
-            "div": lambda: diversify_branches(spark, sf_dir, e),
-        }
-    )
-    trip = _ib["trip"]
-    cb, codes = _ib["pq"]
+    # codes, IVFADC residual index, partitioned IVF store) are memoized
+    # builds: a cold pass pays their trainer/write jobs once
+    trip = slot_memo(_TRIPLETS_MEMO, spark, sf_dir, mine)
+    cb, codes = _pq_index(spark, sf_dir, e)
+    adc = _ivfadc_index(spark, sf_dir, e)
+    store = _ivf_store_path(spark, sf_dir, e)
+    div = diversify_branches(spark, sf_dir, e)
     ivfpq = pq_ivf_topk(
         e, q, "vec_id", "embedding", cb,
         centroid_stride=STRIDE, nprobe=NPROBE, k=5,
@@ -1242,7 +1216,7 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside the memoized build) so the oracle can restate the whole
     # index; trained residual books are the bench recall path
     ivfadc = pq_ivfadc_topk(
-        e, q, "vec_id", "embedding", _ib["adc"],
+        e, q, "vec_id", "embedding", adc,
         centroid_stride=STRIDE, nprobe=NPROBE, k=5, rerank=IVFPQ_RERANK,
     )
     # the same IVF search served from the PARTITIONED store
@@ -1251,13 +1225,12 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle states the same answer as 'ivf' — the hash proves layout
     # and raw paths bit-identical
     ivfp = topk_ivf_partitioned(
-        spark, _ib["store"], q, "vec_id", "embedding",
+        spark, store, q, "vec_id", "embedding",
         k=5, nprobe=NPROBE,
     ).select(
         "query_id", "neighbor_id", "cosine",
         F.col("rank").cast("int").alias("rank"),
     )
-    div = _ib["div"]
     return tagged_union(
         {
             "ivf": ivf,
@@ -1646,22 +1619,10 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codebook + checkpointed code table are the slot-shared memoized
     # PQ index (ann_topk_ivf's ivfpq branch searches the same codes).
     # The stride-book chain (index -> store codes) and the trained
-    # Lloyd book are independent memoized builds — overlap them from a
-    # thread pool (guide §2.6)
-    from mongo2mysql_spark.queries import parallel_branches
-
-    def _pq_chain():
-        cb, codes_df = _pq_index(spark, sf_dir, e)
-        ps_delta, ps_base = _pq_store_codes_memo(spark, sf_dir, cb)
-        return cb, codes_df, ps_delta, ps_base
-
-    _eb = parallel_branches(
-        {
-            "pqchain": _pq_chain,
-            "pqt": lambda: _pqt_index(spark, sf_dir, e),
-        }
-    )
-    cb, codes_df, ps_delta, ps_base = _eb["pqchain"]
+    # Lloyd book are memoized builds.
+    cb, codes_df = _pq_index(spark, sf_dir, e)
+    ps_delta, ps_base = _pq_store_codes_memo(spark, sf_dir, cb)
+    cb_t, codes_t = _pqt_index(spark, sf_dir, e)
     pqc = codes_df.select(
         "vec_id",
         F.concat_ws(
@@ -1699,7 +1660,6 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the TRAINED serving path (VERDICT r7 ask #3): codes + ADC search
     # under the decimal-exact Lloyd book — same serving operators, a
     # learned codebook, every value still driver-hashed
-    cb_t, codes_t = _eb["pqt"]
     pqt = codes_t.select(
         "vec_id",
         F.concat_ws(

@@ -321,26 +321,15 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     words_df = bloom_build(bcust, "c_custkey", _BJ_WORDS, _BJ_K)
     # The enrich stream's availableNow round-trip mutates the session
-    # shuffle-partitions conf (state-store sizing), so it must NEVER
-    # overlap sibling builders whose checkpoints would freeze the
-    # transient 8-partition layout (VERDICT r12: this slot regressed
-    # 0.434x under the r12 pool) — it runs first, alone.  The memoized
-    # join-view store (cold) and the bloom words collect follow; the
-    # pool is serial by default (SPARK_GRAFT_BUILD_THREADS opts in).
-    from mongo2mysql_spark.queries import parallel_branches
-
+    # shuffle-partitions conf (state-store sizing) while it runs — it
+    # runs before the memoized join-view store (cold) and the bloom
+    # words collect, so their checkpoints never see the transient
+    # 8-partition conf.
     enrich = run_to_memory(agg, shuffle_partitions=8)
-    _se = parallel_branches(
-        {
-            "jv": lambda: slot_memo(
-                _JOINVIEW_MEMO, spark, sf_dir,
-                lambda: _join_view_frame(spark, sf_dir),
-            ),
-            "words": lambda: bloom_words_array(words_df, _BJ_WORDS),
-        }
+    jv = slot_memo(
+        _JOINVIEW_MEMO, spark, sf_dir, lambda: _join_view_frame(spark, sf_dir)
     )
-    jv = _se["jv"]
-    words = _se["words"]
+    words = bloom_words_array(words_df, _BJ_WORDS)
     evb = _lt(spark, sf_dir, "events").select("user_id", "value")
     passed = evb.filter(
         bloom_might_contain(F.col("user_id"), words, _BJ_K)

@@ -870,38 +870,29 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo2mysql_spark.queries import slot_memo
 
     def build_winnow() -> tuple:
-        from mongo2mysql_spark.queries import parallel_branches
-
         pos = doc_fingerprints_pos(
             d, "doc_id", "text", WINNOW_K, WINNOW_W
         ).persist()
         # fps_ materializes the positional cache; the pair and span
-        # chains below then read the warmed cache independently, so
-        # their eager jobs overlap from the thread pool (guide §2.6)
+        # chains below then read the warmed cache
         fps_ = pos.select("doc_id", "fp").distinct().localCheckpoint()
-        _w = parallel_branches(
-            {
-                "pairs": lambda: passage_dup_pairs(
-                    d,
-                    "doc_id",
-                    "text",
-                    k=WINNOW_K,
-                    w=WINNOW_W,
-                    min_shared=PASSAGE_MIN_SHARED,
-                    max_fp_df=PASSAGE_MAX_FP_DF,
-                    fps=fps_,
-                ),
-                "spans": lambda: self_repetition_spans(
-                    d, "doc_id", "text",
-                    k=WINNOW_K, w=WINNOW_W,
-                    min_anchors=SELFREP_MIN_ANCHORS,
-                    merge_gap=SELFREP_MERGE_GAP,
-                    pos_fps=pos,
-                ).localCheckpoint(),
-            }
+        pairs_ = passage_dup_pairs(
+            d,
+            "doc_id",
+            "text",
+            k=WINNOW_K,
+            w=WINNOW_W,
+            min_shared=PASSAGE_MIN_SHARED,
+            max_fp_df=PASSAGE_MAX_FP_DF,
+            fps=fps_,
         )
-        pairs_ = _w["pairs"]
-        spans_ = _w["spans"]
+        spans_ = self_repetition_spans(
+            d, "doc_id", "text",
+            k=WINNOW_K, w=WINNOW_W,
+            min_anchors=SELFREP_MIN_ANCHORS,
+            merge_gap=SELFREP_MERGE_GAP,
+            pos_fps=pos,
+        ).localCheckpoint()
         # fps is checkpointed above and the pair/span consumers
         # materialize internally (passages.py localCheckpoints its
         # pair-bounded results), so the positional cache can go

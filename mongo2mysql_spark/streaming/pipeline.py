@@ -19,21 +19,11 @@ from __future__ import annotations
 import itertools
 import os
 import tempfile
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _MEM_COUNTER = itertools.count()
-
-# run_to_memory mutates the session-global spark.sql.shuffle.partitions
-# around the bounded stream replay; overlapping calls from driver
-# threads (SPARK_GRAFT_BUILD_THREADS>1) would race the save/restore and
-# could leave the session at the override permanently (ADVICE r12).
-# One reentrant module lock serializes the whole mutate/run/restore
-# window; builds are serial by default, so this only gates the opt-in
-# threaded path.
-_CONF_LOCK = threading.RLock()
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,28 +156,28 @@ def run_to_memory(
     fixed at first start by the checkpoint).  Streaming state wants
     sizing to the stream's key cardinality, not the session-wide batch
     default — a bounded fixture replay runs ~3× faster at 8 than at 32,
-    while a production deployment sizes it up with ingest volume."""
+    while a production deployment sizes it up with ingest volume.  The
+    override is set on the shared session conf, so calls on one session
+    must not overlap; it is restored on every exit, a query that fails
+    to start included."""
     spark = agg.sparkSession
     name = f"__stream_out_{next(_MEM_COUNTER)}"
-    with _CONF_LOCK:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    if shuffle_partitions:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        q = (
+            agg.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
         try:
-            q = (
-                agg.writeStream.outputMode(mode)
-                .format("memory")
-                .queryName(name)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            q.processAllAvailable()
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
+            q.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
     return spark.table(name)
 
 

@@ -8,10 +8,12 @@ green but these fail.
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
-from mongo2mysql_spark.queries import load_all
+from mongo2mysql_spark.queries import load_all, parallel_branches, slot_memo
 from tests.conftest import SF_DIR
 
 REGISTRY = load_all()
@@ -475,6 +477,90 @@ def test_slot_persist_releases_previous_generation(spark):
     _REGISTRY.pop(key).unpersist()
 
 
+def test_parallel_branches_preserves_insertion_order_and_values():
+    out = parallel_branches(
+        {
+            "c": lambda: 3,
+            "a": lambda: 1,
+            "b": lambda: 2,
+        }
+    )
+    assert list(out) == ["c", "a", "b"]
+    assert out == {"c": 3, "a": 1, "b": 2}
+
+
+def test_parallel_branches_builder_error_propagates():
+    def boom():
+        raise ValueError("builder failed")
+
+    with pytest.raises(ValueError, match="builder failed"):
+        parallel_branches({"ok": lambda: 1, "bad": boom})
+
+
+def test_parallel_branches_builders_overlap():
+    # two 0.15 s sleeps complete in well under 0.3 s when threaded
+    t0 = time.time()
+    parallel_branches({
+        "a": lambda: time.sleep(0.15),
+        "b": lambda: time.sleep(0.15),
+    })
+    assert time.time() - t0 < 0.27
+
+
+def test_parallel_branches_raises_first_error():
+    # the raised error is a real builder failure even when an
+    # earlier-submitted builder is still running
+    def slow_ok():
+        time.sleep(0.2)
+        return 1
+
+    def fast_boom():
+        time.sleep(0.01)
+        raise RuntimeError("fast failure")
+
+    t0 = time.time()
+    with pytest.raises(RuntimeError, match="fast failure"):
+        parallel_branches({"slow": slow_ok, "boom": fast_boom})
+    # the failure surfaced promptly, not after every future resolved
+    # in insertion order (pool shutdown still waits for slow_ok)
+    assert time.time() - t0 < 2.0
+
+
+class _FakeCtx:
+    applicationId = "app-test"
+
+
+class _FakeSpark:
+    sparkContext = _FakeCtx()
+
+
+def test_slot_memo_builds_once_and_keeps_one_entry(tmp_path):
+    memo: dict = {}
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    first = slot_memo(memo, _FakeSpark(), a, build)
+    assert slot_memo(memo, _FakeSpark(), a, build) is first
+    assert len(calls) == 1
+    # another sf_dir replaces the entry: one entry's blocks at a time
+    second = slot_memo(memo, _FakeSpark(), b, build)
+    assert second is not first and len(calls) == 2
+    assert list(memo.values()) == [second]
+
+    def boom():
+        raise RuntimeError("build failed")
+
+    # a failed build raises and leaves the previous entry in place
+    with pytest.raises(RuntimeError, match="build failed"):
+        slot_memo(memo, _FakeSpark(), a, boom)
+    assert list(memo.values()) == [second]
+    assert slot_memo(memo, _FakeSpark(), b, build) is second
+
+
 def test_every_persist_site_has_a_release_path():
     """The round-5 bench regression's standing guard: any non-test
     module that persist()s a DataFrame must also contain an
@@ -504,6 +590,54 @@ def test_every_persist_site_has_a_release_path():
     assert not offenders, (
         f"persist() without any unpersist() release path: {offenders}"
     )
+
+
+def test_environment_reads_are_deployment_settings_only():
+    """The package reads the environment only for deployment settings:
+    the data path, the core count and the driver heap.  A behaviour
+    switch read from the environment is a second code path no test or
+    benchmark selects.  AST-based, like the persist guard above."""
+    import ast
+    import pathlib
+
+    allowed = {"SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY"}
+
+    def is_environ(node) -> bool:
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == "environ"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "mongo2mysql_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = None
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                f = node.func
+                env_get = f.attr == "get" and is_environ(f.value)
+                getenv = (
+                    f.attr == "getenv"
+                    and isinstance(f.value, ast.Name)
+                    and f.value.id == "os"
+                )
+                if not (env_get or getenv):
+                    continue
+                name = node.args[0] if node.args else None
+            elif (
+                isinstance(node, ast.Subscript)
+                and isinstance(node.ctx, ast.Load)
+                and is_environ(node.value)
+            ):
+                name = node.slice
+            else:
+                continue
+            key = name.value if isinstance(name, ast.Constant) else None
+            if key not in allowed:
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not offenders, f"environment read outside {sorted(allowed)}: {offenders}"
 
 
 def test_centroid_assignment_is_aggregate_not_window(spark):

@@ -10,6 +10,7 @@ import tempfile
 
 import pytest
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from mongo2mysql_spark.streaming.pipeline import (
@@ -48,6 +49,28 @@ def test_streaming_route_matches_batch(spark):
         .collect()
     )
     assert sorted(map(repr, got)) == sorted(map(repr, batch))
+
+
+def test_run_to_memory_restores_conf(spark, tmp_path):
+    """The shuffle-partitions override lasts for one call: the session
+    conf is back to its value after each call, and after a query that
+    fails to start."""
+    df = spark.range(20).selectExpr("id", "cast(id % 3 as long) as k")
+    src = str(tmp_path / "in")
+    df.write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    agg = stream.groupBy("k").count()
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    for n in (3, 5):
+        got = run_to_memory(agg, "complete", n)
+        assert sorted((r["k"], r["count"]) for r in got.collect()) == [
+            (0, 7), (1, 7), (2, 6)
+        ]
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # complete mode needs a streaming aggregation: start() raises
+    with pytest.raises(AnalysisException, match="STREAMING_OUTPUT_MODE"):
+        run_to_memory(stream, "complete", 7)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_streaming_watermark_present(spark):

@@ -1,5 +1,5 @@
 """Graph-executor probe (r12): chosen vs worst join order on a SKEWED
-CYCLIC graph — same REST-measured-shuffle protocol as probe_r12.py.
+CYCLIC graph — shuffle bytes measured through the UI REST API.
 
 Fixture: the q5 shape at synthetic scale — customers and suppliers
 each join nation (the cycle edge), orders fan out of customers,

@@ -1,8 +1,8 @@
 """Z-order layout probe (r12): measure the ACTUAL bytes/files a
 selective scan reads from parquet written in z-clustered vs
-linear-clustered vs unclustered layouts — the REST-measured-bytes
-protocol (same as probe_r12.py; scan input metrics come from the
-stage's inputBytes, which parquet row-group/file pruning reduces).
+linear-clustered vs unclustered layouts — bytes measured through the
+UI REST API (scan input metrics come from the stage's inputBytes,
+which parquet row-group/file pruning reduces).
 
 The gated 'zorder' branch hashes the zone-map GEOMETRY (bucket boxes
 + prune verdicts); this probe closes the loop to the physical scan:
