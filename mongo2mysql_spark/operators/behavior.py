@@ -98,7 +98,7 @@ def funnel_counts(
                 reached.select(user_col, "__anchor_ms"), user_col
             )
         # r11 shape, restored after the round-12 driver bench refuted
-        # the lazy slot_persist conversion (5.7 → 35.9 s at 32 cores):
+        # the lazy held-persist conversion (5.7 → 35.9 s at 32 cores):
         # a lazy persist defers to the sink, where AQE materializes the
         # union's per-step count subtrees concurrently and the unfilled
         # caches race — each subtree recomputes the whole frontier

@@ -100,7 +100,7 @@ class Numbering:
     result to be deterministic; ``partition_cols`` holds at most one
     column, whose values must be non-null (the porter's ``_table``
     always is).  ``persist`` holds the cache (default
-    ``DataFrame.persist``; registry slots pass ``cachereg.slot_persist``);
+    ``DataFrame.persist``; registry slots pass ``artifacts.held``);
     :meth:`unpersist` releases it.
     """
 

@@ -43,33 +43,6 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn]
     return deco
 
 
-def slot_memo(memo: dict, spark: SparkSession, sf_dir: str, build: Callable[[], object]):
-    """Single-slot cache for write-once slot artifacts (PQ code tables,
-    IVFADC index state, mined triplet sets, streaming-store frames)
-    keyed by ``(applicationId, abspath(sf_dir))`` — ONE shared policy
-    instead of a copy per memo dict (VERDICT r7 housekeeping #3):
-
-    - ``build`` runs only on miss; its result is the cached value.
-      localCheckpoint-ing frames inside the value is the builder's
-      business (checkpointed RDD blocks are released by Spark's
-      ContextCleaner when the entry is replaced — never CacheManager
-      entries, so nothing leaks into a long-lived session).
-    - CLEAR-then-set after a successful build: a long session sweeping
-      scale factors holds at most one entry's blocks; a failed build
-      leaves the previous entry intact and raises.
-
-    Bench lever: pass 1 pays the build, pass 2 measures serving — the
-    shape a deployment has (index built once, searched many times)."""
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in memo:
-        val = build()
-        memo.clear()
-        memo[key] = val
-    return memo[key]
-
-
 # widest overlap parallel_branches runs (the relational gatherers' 8
 # builders run 6 at a time; the dedup graph artifacts' 5 all overlap)
 _BRANCH_THREADS = 6

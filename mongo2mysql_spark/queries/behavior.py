@@ -17,10 +17,11 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mongo2mysql_spark.artifacts import artifact, held, scratch_dir
 
 FUNNEL_STEPS = ["signup", "view", "click", "purchase"]
 FUNNEL_WINDOW_MS = 86_400_000  # windowFunnel bound: 24h from step 1
@@ -446,8 +447,6 @@ def behavior_oracle_parts() -> tuple[str, str]:
     return ctes, legs
 
 
-_FUNSTATE_MEMO: dict[tuple, DataFrame] = {}
-_FUNMAX_MEMO: dict[tuple, DataFrame] = {}
 _FUNSTATE_PIVOT = "2024-01-15"
 
 
@@ -455,11 +454,10 @@ def _funnelstate_counts(spark, sf_dir: str, e: DataFrame) -> DataFrame:
     """Drive the STATEFUL streaming funnel (streaming/funnel.py) over
     the events table split into two time-ordered micro-batches, and
     collapse the per-user stage emissions into the batch funnel's
-    count rows.  Memoized per (application, sf_dir); the oracle states
+    count rows.  Built once per (application, sf_dir); the oracle states
     the batch funnel rows, so the driver hash proves per-user state
     carried across micro-batches reproduces the batch operator
     exactly (the 'hamserve' proof pattern, now for bespoke state)."""
-    from mongo2mysql_spark.queries import slot_memo
 
     def build() -> DataFrame:
         from mongo2mysql_spark.streaming.funnel import (
@@ -470,10 +468,9 @@ def _funnelstate_counts(spark, sf_dir: str, e: DataFrame) -> DataFrame:
 
         cols = e.select("event_id", "ts", "user_id", "event_type")
         pivot = F.lit(_FUNSTATE_PIVOT).cast("timestamp")
-        work = tempfile.mkdtemp(prefix="funnelstate_")
-        src = os.path.join(work, "in")
-        os.makedirs(src)
-        try:
+        with scratch_dir("funnelstate_") as work:
+            src = os.path.join(work, "in")
+            os.makedirs(src)
             for i, batch in enumerate(
                 (cols.filter(F.col("ts") < pivot),
                  cols.filter(F.col("ts") >= pivot))
@@ -500,17 +497,14 @@ def _funnelstate_counts(spark, sf_dir: str, e: DataFrame) -> DataFrame:
             return funnel_counts_from_progress(
                 res, "user_id", FUNNEL_STEPS
             ).localCheckpoint()
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
-    return slot_memo(_FUNSTATE_MEMO, spark, sf_dir, build)
+    return artifact("behavior.funnel_state", spark, sf_dir, build)
 
 
 def behavior_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]:
     """'funnel' / 'retention' / 'transitions' / 'funnelstate' frames in
     the `events_sessionize` union shape (tagged_union supplies the
     session columns as typed NULLs)."""
-    from mongo2mysql_spark.queries import slot_memo
     from mongo2mysql_spark.operators.behavior import (
         event_transitions,
         funnel_counts,
@@ -519,7 +513,6 @@ def behavior_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]:
         session_paths,
     )
 
-    from mongo2mysql_spark.cachereg import slot_persist
     from mongo2mysql_spark.operators.behavior import (
         attribution_credit,
         conversion_latency,
@@ -530,12 +523,12 @@ def behavior_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]:
         # conversion latency + its distribution summary: p50/p90 via
         # exact_quantiles (bit-identical to quantile_cont) cross-joined
         # with the 1-row converter count — the house-allowlisted 1-row
-        # broadcast crossJoin.  persist (deferred release via
-        # cachereg): bounded one-row-per-converter frame consumed ~5x
+        # broadcast crossJoin.  held (persisted, released on the next
+        # build): bounded one-row-per-converter frame consumed ~5x
         # (the quantile collect, the converter count, and the
         # 'latency'/'latdist' union legs)
-        lat = slot_persist(
-            ("behavior.lat",),
+        lat = held(
+            "behavior.latency",
             conversion_latency(
                 e, "user_id", "event_type", "ts", "event_id",
                 "view", "purchase",
@@ -555,7 +548,7 @@ def behavior_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]:
     # The funnelstate streaming round-trip sets the session
     # shuffle-partitions conf (run_to_memory state-store sizing) while
     # it runs — it runs first, so the funnel frontiers' eager
-    # checkpoints and the funnelmax memo below never see the transient
+    # checkpoints and the funnelmax artifact below never see the transient
     # 8-partition conf.
     funnelstate = _funnelstate_counts(spark, sf_dir, e).select(
         "step", "event_type", "users", "denom", "rate"
@@ -568,8 +561,8 @@ def behavior_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]:
         e, "user_id", "event_type", "ts", "event_id", FUNNEL_STEPS,
         within_ms=FUNNEL_WINDOW_MS,
     ).select("step", "event_type", "users", "denom", "rate")
-    funnelmax = slot_memo(
-        _FUNMAX_MEMO,
+    funnelmax = artifact(
+        "behavior.funnel_max",
         spark,
         sf_dir,
         lambda: funnel_max_level(

@@ -19,6 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.artifacts import (
+    artifact,
+    await_query,
+    held,
+    scratch_dir,
+)
 from mongo2mysql_spark.functions.text import (
     dup_token_fraction,
     fingerprint,
@@ -260,8 +266,6 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DECONTAM_N = 8
 BENCH_STRIDE = 97  # doc_id % 97 == 0 stands in for the eval/benchmark set
-# write-once streaming bloom seen-set filter, keyed (applicationId, sf_dir)
-_BLOOM_SEEN_MEMO: dict = {}
 # 'bloom' branch: filter geometry (operators/bloom.py defaults) — at
 # sf0.1 the benchmark sets ~11% of the 64Ki bits, giving a real but
 # small false-positive rate, so n_bloom_hits >= exact overlap with
@@ -360,13 +364,11 @@ def decontam_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = T(spark, sf_dir, "documents", fanout=True)
     bench = d.filter(F.col("doc_id") % BENCH_STRIDE == 0)
-    # persist (deferred release via cachereg): prof feeds BOTH the
+    # held (persisted, released on the next build): prof feeds BOTH the
     # 'profile' branch and the bloom_superset_ok join below — without
     # it the contamination shingle join runs twice per materialization
-    from mongo2mysql_spark.cachereg import slot_persist
-
-    prof = slot_persist(
-        ("decontam.profile",), contamination_profile(d, bench, n=DECONTAM_N)
+    prof = held(
+        "corpus.decontam_profile", contamination_profile(d, bench, n=DECONTAM_N)
     )
 
     doc_sh = d.select(
@@ -382,9 +384,6 @@ def decontam_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingles (union idempotence — the module invariant), so the
     # oracle below stays the one-shot restatement while the hash gate
     # rides the incremental store round-trip.
-    import shutil
-    import tempfile
-
     from mongo2mysql_spark.streaming.seenset import (
         read_bloom_store,
         streaming_bloom_refresh,
@@ -392,14 +391,13 @@ def decontam_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build_filter():
         # write-once streaming state (the two-half fold ≡ one-shot
-        # build is the module invariant the gate rides), slot-memoized
+        # build is the module invariant the gate rides), built once
         # per (application, sf_dir) like the sibling streaming stores
         # (funnelstate, annserve, rollup partials, cmsstream): pass 1
         # pays the micro-batch round-trips, later materializations
         # serve the checkpointed filter words
         raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        work = tempfile.mkdtemp(prefix="bloom_seen_")
-        try:
+        with scratch_dir("bloom_seen_") as work:
             for half in (0, 1):
                 stream_docs = (
                     spark.readStream.schema(raw_schema)
@@ -425,23 +423,13 @@ def decontam_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                     k=BLOOM_K,
                     checkpoint_dir=f"{work}/ck{half}",
                 )
-                # awaitTermination(timeout) returns False on timeout
-                # with the query STILL RUNNING — proceeding would
-                # rmtree the store under it and serve a half-built
-                # filter to the hash gate.  Stop and fail loudly.
-                if not q.awaitTermination(300):
-                    q.stop()
-                    raise TimeoutError(
-                        "bloom seen-set refresh did not drain within 300s"
-                    )
+                # a timed-out query is stopped and fails the build: a
+                # half-built filter must never reach the hash gate
+                await_query(q, "bloom seen-set refresh")
             # materialize before the store dir is deleted
             return read_bloom_store(spark, f"{work}/store").localCheckpoint()
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
-    from mongo2mysql_spark.queries import slot_memo
-
-    fltr = slot_memo(_BLOOM_SEEN_MEMO, spark, sf_dir, _build_filter)
+    fltr = artifact("corpus.bloom_seen", spark, sf_dir, _build_filter)
     # one-pass membership (operators/bloom.bloom_hit_counts): the old
     # probe-then-join shape computed doc_sh (a full corpus shingle
     # explode) TWICE — once for the distinct-h probe, once to join the
@@ -875,15 +863,11 @@ def corpus_clean_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signal with one IEEE division
     from mongo2mysql_spark.operators.sampling import mix_gini
 
-    # persist (deferred release via cachereg): the sharded permutation
+    # held (persisted, released on the next build): the sharded permutation
     # feeds BOTH the 'shuffle' branch and the gini join below — without
     # it the salted-md5 rank pass over the corpus runs twice per
     # materialization
-    from mongo2mysql_spark.cachereg import slot_persist
-
-    sharded = slot_persist(
-        ("corpus.sharded",), corpus_shuffle_shards(spark, sf_dir)
-    )
+    sharded = held("corpus.sharded", corpus_shuffle_shards(spark, sf_dir))
     gini = mix_gini(
         sharded.select("doc_id", "shard").join(
             d.select("doc_id", "source"), "doc_id"
@@ -933,16 +917,13 @@ def corpus_builder_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cross-engine check rides the exact counts.
     """
     import math
-    import shutil
-    import tempfile
 
     from mongo2mysql_spark.pipelines import CorpusConfig, build_training_corpus
 
     d = T(spark, sf_dir, "documents")
     ref = d.filter(F.col("source") == LM_REF_SOURCE)
     bench = d.filter(F.col("doc_id") % 97 == 0)
-    out_dir = tempfile.mkdtemp(prefix="corpus_builder_")
-    try:
+    with scratch_dir("corpus_builder_") as out_dir:
         r = build_training_corpus(
             d,
             out_dir,
@@ -958,8 +939,6 @@ def corpus_builder_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             lm_reference=ref,
             dsir_target=ref,
         )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
     chain = [
         r["input_docs"],
         r["after_quality_filter"],

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.artifacts import artifact, held
 from mongo2mysql_spark.functions.text import tokens, word_shingles
 from mongo2mysql_spark.queries.text import sql_quality
 from mongo2mysql_spark.operators.dedup import (
@@ -40,13 +41,6 @@ BANDS = 8
 # localCheckpoint RDD blocks (released by Spark's ContextCleaner when
 # the entry is replaced), not CacheManager entries — nothing leaks into
 # a long-lived session.
-_PAIRS_MEMO: dict[tuple, DataFrame] = {}
-# ngram + ppjoin pair lists (pair-bounded localCheckpoints) shared
-# across materializations of dedup_pair_families
-_SHINGLE_PAIRS_MEMO: dict[tuple, tuple] = {}
-# (closure, pagerank, triangle) doc-bounded artifact frames shared
-# across materializations of dedup_connected_components
-_CLOSURE_MEMO: dict[tuple, tuple] = {}
 
 # label propagation over the near-dup graph (operators/labelprop.py):
 # seeds deterministically corrupted (doc_id % MOD -> 'zz') so the
@@ -58,7 +52,6 @@ _LPA_CORRUPT_MOD = 3
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo2mysql_spark.operators.dedup import lsh_incremental_pairs
-    from mongo2mysql_spark.queries import slot_memo
 
     def build() -> DataFrame:
         d = T(spark, sf_dir, "documents", fanout=True)
@@ -82,7 +75,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig.unpersist()
         return mh
 
-    return slot_memo(_PAIRS_MEMO, spark, sf_dir, build)
+    return artifact("dedup.minhash_pairs", spark, sf_dir, build)
 
 # DuckDB 3-token shingle set per doc (mirrors functions/text.word_shingles)
 _SHINGLES_CTE = """
@@ -246,14 +239,12 @@ def dedup_exact_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("token_set").alias("method"), F.col("fingerprint").alias("hash"),
                 "doc_id", "n_docs")
     )
-    # project to the two columns downstream needs, then persist with
-    # deferred release (cachereg): the (doc_id, sha256) frame feeds
-    # THREE consumers (counts, batch 1, batch 2) — without it the
-    # full-text hash pass ran three times
-    from mongo2mysql_spark.cachereg import slot_persist
-
-    hashed = slot_persist(
-        ("dedup.content_hash",),
+    # project to the two columns downstream needs, then hold it
+    # (persisted, released on the next build): the (doc_id, sha256)
+    # frame feeds THREE consumers (counts, batch 1, batch 2) — without
+    # it the full-text hash pass ran three times
+    hashed = held(
+        "dedup.content_hash",
         d.select(
             "doc_id", content_hash(F.col("text")).alias("content_hash")
         ),
@@ -291,9 +282,8 @@ def dedup_exact_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_docs",
     )
-    # persist (deferred release): host-bounded aggregate serving two
-    # branch projections
-    hp = slot_persist(("dedup.host_profile",), host_profile(urls))
+    # held: host-bounded aggregate serving two branch projections
+    hp = held("dedup.host_profile", host_profile(urls))
     uhost = hp.select(
         F.lit("url_host").alias("method"), F.col("host").alias("hash"),
         "doc_id", "n_docs",
@@ -459,12 +449,11 @@ def _cos_sql(a: str, b: str) -> str:
 def dedup_pair_families(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents", fanout=True)
     # ngram + ppjoin are pair-bounded eager checkpoints derived from
-    # the same shingle pass — build them ONCE per (application, sf_dir)
-    # (slot_memo): every later materialization of this union (bench
+    # the same shingle pass — one build-once artifact per (application,
+    # sf_dir): every later materialization of this union (bench
     # best-of-2, branch attribution, repeat driver reads) serves the
     # checkpointed pair lists instead of re-running two corpus passes
     from mongo2mysql_spark.operators.ppjoin import ppjoin_pairs
-    from mongo2mysql_spark.queries import slot_memo
 
     def build_shingle_pairs() -> tuple:
         sh = d.select(
@@ -485,10 +474,12 @@ def dedup_pair_families(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.unpersist()
         return ng_, pp_
 
-    # minhash pairs come from the slot-shared memoized LSH pass; the
+    # minhash pairs come from the slot-shared LSH artifact; the
     # r5-leak-guarded shingle persist stays inside its builder
     mh = _minhash_pairs(spark, sf_dir)
-    ng, pp = slot_memo(_SHINGLE_PAIRS_MEMO, spark, sf_dir, build_shingle_pairs)
+    ng, pp = artifact(
+        "dedup.shingle_pairs", spark, sf_dir, build_shingle_pairs
+    )
     e = T(spark, sf_dir, "embeddings", fanout=True)
     co = embedding_neardup_pairs(e, "vec_id", "embedding", "label", min_cosine=0.3)
     from mongo2mysql_spark.operators.dedup import fuzzy_value_pairs
@@ -721,7 +712,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mongo2mysql_spark.functions.text import quality_score, tokens
     from mongo2mysql_spark.operators.components import connected_components
-    from mongo2mysql_spark.queries import slot_memo, tagged_union
+    from mongo2mysql_spark.queries import tagged_union
 
     d = T(spark, sf_dir, "documents", fanout=True)
     # the pair list is the slot-shared memoized LSH pass (identical to
@@ -819,8 +810,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return g["comp"], g["pr"], g["tri"], g["inc"], g["lp"]
 
-    comp, pr, tri, inc, lp = slot_memo(
-        _CLOSURE_MEMO, spark, sf_dir, build_graph_artifacts
+    comp, pr, tri, inc, lp = artifact(
+        "dedup.graph", spark, sf_dir, build_graph_artifacts
     )
     labeled = (
         d.join(comp, d.doc_id == comp.id, "left")

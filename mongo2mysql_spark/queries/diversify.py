@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.artifacts import artifact
 from mongo2mysql_spark.functions.vector import sql_dot, sql_norm
 from mongo2mysql_spark.operators.diversify import sql_l2sq
 
@@ -140,20 +141,16 @@ def _kcenter_ctes(k: int) -> tuple[str, list[str]]:
     return ",\n    ".join(ctes), names
 
 
-_DIV_MEMO: dict[tuple, dict] = {}
-
-
 def diversify_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]:
     """The two diversity branches in `ann_topk_ivf`'s union shape:
     'mmr' maps relevance onto the slot's ``cosine`` column (it IS the
     ROUND(·,6) query cosine) and carries the pick-time criterion in
     ``score``; 'kcenter' is corpus-global (NULL query_id/cosine) with
-    the squared cover radius in ``score``.  Memoized per
+    the squared cover radius in ``score``.  Built once per
     (application, sf_dir) — see the build() comment.  Registered under
     `ann_topk_ivf` rather than an own slot per the registry slot
     policy (COVERAGE.md — the driver checks at most 50 entries)."""
     from mongo2mysql_spark.operators.diversify import kcenter_select, mmr_topk
-    from mongo2mysql_spark.queries import slot_memo
 
     def build() -> dict:
         q = e.filter(F.col("vec_id") < N_QUERIES)
@@ -180,7 +177,7 @@ def diversify_branches(spark, sf_dir: str, e: DataFrame) -> dict[str, DataFrame]
         # once per (application, sf_dir)
         return {"mmr": mmr.localCheckpoint(), "kcenter": kc.localCheckpoint()}
 
-    return slot_memo(_DIV_MEMO, spark, sf_dir, build)
+    return artifact("diversify.selections", spark, sf_dir, build)
 
 
 def diversify_oracle_parts() -> tuple[str, str]:

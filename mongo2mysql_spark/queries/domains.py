@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.artifacts import artifact
 from mongo2mysql_spark.operators.diversify import sql_l2sq
 from mongo2mysql_spark.operators.dsir import sql_hashed_grams
 
@@ -95,20 +96,16 @@ def domains_oracle_ctes() -> str:
     return ",\n    ".join(ctes)
 
 
-_DOM_MEMO: dict[tuple, dict] = {}
-
-
 def domains_branches(spark, sf_dir: str, d: DataFrame) -> dict[str, DataFrame]:
     """'domains' (per-doc assignment) and 'domainsizes' (mixing-stage
-    shares) frames in the `text_term_frequency` union shape.  Memoized
-    per (application, sf_dir): a clustering is a write-once artifact
+    shares) frames in the `text_term_frequency` union shape.  Built
+    once per (application, sf_dir): a clustering is a write-once artifact
     (run once, read by every mixing stage), and the multi-round plan
     carries real driver-side analysis cost."""
     from mongo2mysql_spark.operators.domains import (
         discover_domains,
         domain_sizes,
     )
-    from mongo2mysql_spark.queries import slot_memo
 
     def build() -> dict:
         assign = discover_domains(
@@ -124,4 +121,4 @@ def domains_branches(spark, sf_dir: str, d: DataFrame) -> dict[str, DataFrame]:
         )
         return {"domains": doms, "domainsizes": sizes}
 
-    return slot_memo(_DOM_MEMO, spark, sf_dir, build)
+    return artifact("domains.assignment", spark, sf_dir, build)

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mongo2mysql_spark.cachereg import slot_persist
+from mongo2mysql_spark.artifacts import held
 from mongo2mysql_spark.operators.flatten import SpillField, flatten
 from mongo2mysql_spark.operators.routing import add_table_column
 from mongo2mysql_spark.operators.sequence import add_num_two_phase
@@ -108,7 +108,7 @@ def etl_child_spill_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-reducer no-partition window
     return add_num_two_phase(
         child, ["_parentid", "_index"],
-        persist=lambda df: slot_persist(("etl.child_spill_tokens",), df),
+        persist=lambda df: held("etl.child_spill_tokens", df),
     )
 
 
@@ -226,7 +226,7 @@ def etl_num_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = Tb(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_returnflag")
     out = add_num_two_phase(
         li, ["l_orderkey", "l_linenumber"], partition_cols=["l_returnflag"],
-        persist=lambda df: slot_persist(("etl.num_sequence",), df),
+        persist=lambda df: held("etl.num_sequence", df),
     )
     return out.filter(F.col("_num") <= 100)
 

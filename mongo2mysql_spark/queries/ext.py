@@ -14,11 +14,16 @@ the stated semantics (same pattern as queries/interval.py).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.artifacts import (
+    artifact,
+    await_query,
+    held_dir,
+    scratch_dir,
+)
 from mongo2mysql_spark.operators.bars import ohlc_bars_sql, twap_bars_sql
 from mongo2mysql_spark.operators.forecast import seasonal_backtest_sql
 from mongo2mysql_spark.operators.trend import hourly_trend_sql
@@ -72,9 +77,6 @@ _FD_CHECKS = [
 _FD_CHECKS_SQL = _FD_CHECKS
 
 
-_CMSSTREAM_MEMO: dict[tuple, "DataFrame"] = {}
-
-
 def _cms_stream_frame(spark: SparkSession, sf_dir: str, hk) -> DataFrame:
     """Drive the streaming CMS store end-to-end: THREE writers fold
     orderkey-sliced lineitem grids into one store — two through the
@@ -92,10 +94,6 @@ def _cms_stream_frame(spark: SparkSession, sf_dir: str, hk) -> DataFrame:
     through both entry points — what the extra two streaming queries
     bought was only their ~3 s apiece startup, the single heaviest
     gate build in the registry (20.4 s)."""
-    import os
-    import shutil
-    import tempfile
-
     from mongo2mysql_spark.operators.cms import cms_estimate
     from mongo2mysql_spark.streaming.cmsstore import (
         read_cms_store,
@@ -103,10 +101,9 @@ def _cms_stream_frame(spark: SparkSession, sf_dir: str, hk) -> DataFrame:
         streaming_cms_refresh,
     )
 
-    work = tempfile.mkdtemp(prefix="cmsstore_slot_")
-    store = os.path.join(work, "store")
-    os.makedirs(store)
-    try:
+    with scratch_dir("cmsstore_slot_") as work:
+        store = os.path.join(work, "store")
+        os.makedirs(store)
         path = os.path.join(sf_dir, "lineitem.parquet")
         raw = spark.read.parquet(path)
         for i in (0, 1):
@@ -127,9 +124,7 @@ def _cms_stream_frame(spark: SparkSession, sf_dir: str, hk) -> DataFrame:
             depth=_CMS_DEPTH, width=_CMS_WIDTH,
             checkpoint_dir=os.path.join(work, "ck2"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("cms-store refresh did not finish")
+        await_query(q, "cms-store refresh")
         grid = read_cms_store(spark, store)
         return (
             cms_estimate(grid, hk, "__kv",
@@ -137,8 +132,6 @@ def _cms_stream_frame(spark: SparkSession, sf_dir: str, hk) -> DataFrame:
             .select("column", "key", "key_n", "rank", "est")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 
@@ -743,7 +736,6 @@ def profile_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one literal-comparison-chain scan
     from mongo2mysql_spark.operators.cms import cms_build, cms_estimate
     from mongo2mysql_spark.operators.selection import equi_depth_histogram
-    from mongo2mysql_spark.queries import slot_memo
 
     hk = heavy_keys(li, "l_suppkey", k=10).select(
         "column", "key", "key_n", "rank",
@@ -770,8 +762,8 @@ def profile_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         _HIST_BUCKETS,
         bucket_expr="FLOOR({c} / 256)",
     )
-    cmsst = slot_memo(
-        _CMSSTREAM_MEMO, spark, sf_dir,
+    cmsst = artifact(
+        "ext.cms_stream", spark, sf_dir,
         lambda: _cms_stream_frame(spark, sf_dir, hk),
     )
     hist = (
@@ -1053,12 +1045,13 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo2mysql_spark.sources.versioned import commit, read_version, rollback
 
     n = T(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="versioned_ttl_"), "nation_versions"
-    )
-    commit(n, table, mode="overwrite")
-    commit(n.filter(F.col("n_regionkey") != 2), table, mode="overwrite")
-    rollback(table, 0)
+    # the returned plan reads the table lazily: its directory is held
+    # until the next call replaces it
+    with held_dir("ext.versioned_table", "versioned_ttl_") as work:
+        table = os.path.join(work, "nation_versions")
+        commit(n, table, mode="overwrite")
+        commit(n.filter(F.col("n_regionkey") != 2), table, mode="overwrite")
+        rollback(table, 0)
     out = None
     for v in (0, 1, 2):
         part = read_version(spark, table, v).select(

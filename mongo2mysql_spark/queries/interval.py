@@ -14,6 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.artifacts import (
+    artifact,
+    await_query,
+    held,
+    scratch_dir,
+)
 from mongo2mysql_spark.functions.scalar import dsum, sql_dsum
 from mongo2mysql_spark.operators.rangejoin import range_join_bucketed
 from mongo2mysql_spark.operators.rollup import sliding_distinct_sql
@@ -147,9 +153,6 @@ def range_join_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # trailing-24h distinct users per (event_type, hour)
 _SLIDE_HOURS = 24
 
-# write-once streaming rollup store, keyed (applicationId, sf_dir)
-_ROLLUP_STORE_MEMO: dict = {}
-
 
 @register(
     "events_hypertable_rollup",
@@ -218,9 +221,6 @@ _ROLLUP_STORE_MEMO: dict = {}
     ),
 )
 def events_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from mongo2mysql_spark.operators.rollup import (
         rollup_levels_from_partials,
         sliding_distinct,
@@ -233,50 +233,45 @@ def events_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build_store():
         # write-once streaming state (the two-batch fold is the replay
-        # contract), slot-memoized per (application, sf_dir) like the
+        # contract), built once per (application, sf_dir) like the
         # sibling streaming artifacts (funnelstate, annserve,
         # cmsstream): pass 1 pays the micro-batch round-trips, later
         # materializations serve the checkpointed partials
-        work = tempfile.mkdtemp(prefix="rollup_refresh_")
-        store_dir = f"{work}/store"
-        for batch_no in range(2):
-            q = streaming_rollup_refresh(
-                stream_events(spark, sf_dir).filter(
-                    F.col("event_id") % 2 == batch_no
-                ),
-                store_dir,
-                ts_col="ts",
-                group_cols=["event_type"],
-                value_col="value",
-                checkpoint_dir=f"{work}/ck{batch_no}",
-            )
-            q.awaitTermination(300)
-        out = read_partial_store(spark, store_dir).localCheckpoint()
-        shutil.rmtree(work, ignore_errors=True)
-        return out
+        with scratch_dir("rollup_refresh_") as work:
+            store_dir = f"{work}/store"
+            for batch_no in range(2):
+                q = streaming_rollup_refresh(
+                    stream_events(spark, sf_dir).filter(
+                        F.col("event_id") % 2 == batch_no
+                    ),
+                    store_dir,
+                    ts_col="ts",
+                    group_cols=["event_type"],
+                    value_col="value",
+                    checkpoint_dir=f"{work}/ck{batch_no}",
+                )
+                await_query(q, "rollup store refresh")
+            return read_partial_store(spark, store_dir).localCheckpoint()
 
-    from mongo2mysql_spark.queries import slot_memo
-
-    store = slot_memo(_ROLLUP_STORE_MEMO, spark, sf_dir, _build_store)
+    store = artifact("interval.rollup_store", spark, sf_dir, _build_store)
     levels = rollup_levels_from_partials(
         store, ["event_type"], levels=("hour", "day", "week")
     )
     ev = T(spark, sf_dir, "events", fanout=True)
-    # persist (deferred release via cachereg): the activity-cell dedup
+    # held (persisted, released on the next build): the activity-cell dedup
     # (the slot's one corpus-sized shuffle) is shared by BOTH sliding
     # paths (r13 — HLL sketches are duplicate-insensitive, so building
     # them from cells is bit-identical and saves the second raw scan),
     # and sd (bounded keys x windows rows) feeds BOTH the 'sliding24h'
     # leg and the HLL verdict join
-    from mongo2mysql_spark.cachereg import slot_persist
     from mongo2mysql_spark.operators.rollup import activity_cells
 
-    cells = slot_persist(
-        ("interval.sliding_cells",),
+    cells = held(
+        "interval.sliding_cells",
         activity_cells(ev, "event_type", "ts", "user_id"),
     )
-    sd = slot_persist(
-        ("interval.sliding_dau",),
+    sd = held(
+        "interval.sliding_dau",
         sliding_distinct(
             ev, "event_type", "ts", "user_id", window_hours=_SLIDE_HOURS,
             cells=cells,

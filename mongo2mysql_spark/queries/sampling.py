@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.artifacts import artifact, await_query, scratch_dir
 from mongo2mysql_spark.operators.priority import priority_sample_sql
 from mongo2mysql_spark.operators.sampling import (
     hash_sample_flag,
@@ -42,13 +43,6 @@ UNIMAX_B_NUM, UNIMAX_B_DEN, UNIMAX_EMAX = 1, 2, 2
 from mongo2mysql_spark.queries import register
 from mongo2mysql_spark.sources import load_table as T
 
-# eager per-slot artifacts built once per (application, sf_dir): the
-# DSIR fit (persist + totals action + doc-bounded checkpoint), the
-# UniMax allocation (one corpus aggregation collected to D rows), and
-# the stream-folded priority sample (store build + finalize)
-_DSIR_MEMO: dict[tuple, DataFrame] = {}
-_UNIMAX_MEMO: dict[tuple, DataFrame] = {}
-_PRIO_MEMO: dict[tuple, DataFrame] = {}
 
 
 def _prio_store_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,8 +53,6 @@ def _prio_store_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority_sample of all documents (the merge theorem), which is
     what the unchanged oracle restatement hashes."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -70,10 +62,9 @@ def _prio_store_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_prio_refresh,
     )
 
-    work = tempfile.mkdtemp(prefix="priostore_slot_")
-    store = os.path.join(work, "store")
-    os.makedirs(store)
-    try:
+    with scratch_dir("priostore_slot_") as work:
+        store = os.path.join(work, "store")
+        os.makedirs(store)
         raw = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         cols = ["doc_id", "lang", "n_chars"]
         for i in (0, 1):
@@ -100,14 +91,10 @@ def _prio_store_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             group_cols=["lang"],
             checkpoint_dir=os.path.join(work, "ck"),
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("priority-store refresh did not finish")
+        await_query(q, "priority-store refresh")
         return prio_store_sample(
             spark, store, PRIO_K, group_cols=["lang"]
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _dsir_oracle() -> str:
@@ -416,8 +403,6 @@ def sample_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc-bounded checkpoint) — build it ONCE per (application, sf_dir)
     # so bench best-of-2 / branch attribution / repeat driver reads
     # serve the checkpointed frame instead of re-tokenizing the corpus
-    from mongo2mysql_spark.queries import slot_memo
-
     def build_dsir() -> DataFrame:
         counts = bucket_counts(
             hashed_grams(d, "doc_id", "text", m=DSIR_M), "doc_id"
@@ -467,11 +452,13 @@ def sample_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo2mysql_spark.functions.text import tokens
     from mongo2mysql_spark.operators.unimax import unimax_mixture
 
-    # the three memoized cold builds (DSIR fit, UniMax waterfill,
-    # priority-sample streaming store); warm passes hit the memos
-    dsir = slot_memo(_DSIR_MEMO, spark, sf_dir, build_dsir)
-    uni = slot_memo(
-        _UNIMAX_MEMO,
+    # the three build-once artifacts (DSIR fit: persist + totals action
+    # + doc-bounded checkpoint; UniMax waterfill: one corpus aggregation
+    # collected to D rows; priority-sample streaming store); warm passes
+    # serve the registry entries
+    dsir = artifact("sampling.dsir", spark, sf_dir, build_dsir)
+    uni = artifact(
+        "sampling.unimax",
         spark,
         sf_dir,
         lambda: unimax_mixture(
@@ -482,8 +469,9 @@ def sample_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
             e_max=UNIMAX_EMAX,
         ),
     )
-    ps = slot_memo(
-        _PRIO_MEMO, spark, sf_dir, lambda: _prio_store_frame(spark, sf_dir)
+    ps = artifact(
+        "sampling.prio_store", spark, sf_dir,
+        lambda: _prio_store_frame(spark, sf_dir),
     )
     fixedn = stratified_fixed_n(
         d.select("doc_id", "lang"), ["lang"], "doc_id", n=FIXED_N

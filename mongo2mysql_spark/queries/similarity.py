@@ -13,6 +13,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.artifacts import (
+    artifact,
+    await_query,
+    held_dir,
+    scratch_dir,
+)
 from mongo2mysql_spark.functions.vector import norm_seq, sql_dot, sql_norm
 from mongo2mysql_spark.operators.similarity import (
     topk_bruteforce,
@@ -84,12 +90,10 @@ def _cos(a: str, b: str) -> str:
 # at index-build time.  localCheckpoint-backed (released by Spark's
 # ContextCleaner when the entry is replaced), never a CacheManager
 # entry — same ownership pattern as queries/dedup._minhash_pairs.
-_PQ_INDEX_MEMO: dict[tuple, tuple] = {}
 
 
 def _pq_index(spark: SparkSession, sf_dir: str, e: DataFrame) -> tuple:
     from mongo2mysql_spark.operators.pq import collect_codebook, pq_encode
-    from mongo2mysql_spark.queries import slot_memo
 
     def build() -> tuple:
         cb = collect_codebook(
@@ -101,7 +105,7 @@ def _pq_index(spark: SparkSession, sf_dir: str, e: DataFrame) -> tuple:
         ).localCheckpoint()
         return cb, codes
 
-    return slot_memo(_PQ_INDEX_MEMO, spark, sf_dir, build)
+    return artifact("similarity.pq_index", spark, sf_dir, build)
 
 
 def _pq_store_codes(spark: SparkSession, sf_dir: str, cb) -> tuple:
@@ -122,9 +126,6 @@ def _pq_store_codes(spark: SparkSession, sf_dir: str, cb) -> tuple:
     hashed oracle (pq_encode over the corrected corpus with the frozen
     codebook) proves the delta-chain resolution AND the compaction are
     bit-identical to a fresh one-shot encode."""
-    import shutil
-    import tempfile
-
     from mongo2mysql_spark.streaming.pqstore import (
         compact_pq_store,
         read_pq_store,
@@ -146,17 +147,14 @@ def _pq_store_codes(spark: SparkSession, sf_dir: str, cb) -> tuple:
         .filter(F.col("vec_id") % PQSTORE_UPD_MOD == 0)
         .withColumn("embedding", F.transform("embedding", lambda v: -v)),
     ]
-    work = tempfile.mkdtemp(prefix="pqstore_slot_")
-    store = os.path.join(work, "store")
-    try:
+    with scratch_dir("pqstore_slot_") as work:
+        store = os.path.join(work, "store")
         for i, batch in enumerate(batches):
             q = streaming_pq_refresh(
                 batch, store, "vec_id", "embedding", cb,
                 checkpoint_dir=os.path.join(work, f"ck{i}"),
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("pq store refresh did not finish in 300s")
+            await_query(q, "pq store refresh")
 
         def to_str(df: DataFrame) -> DataFrame:
             return df.select(
@@ -169,21 +167,17 @@ def _pq_store_codes(spark: SparkSession, sf_dir: str, cb) -> tuple:
         delta = to_str(read_pq_store(spark, store)).localCheckpoint()
         compact_pq_store(spark, store)
         base = to_str(read_pq_store(spark, store)).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return delta, base
 
 
 # IVFADC index state (cells + stride residual codebook + checkpointed
 # code table), built once per (application, sf_dir) — same ownership
-# pattern as _PQ_INDEX_MEMO: a deployment encodes at index-build time,
+# pattern as _pq_index: a deployment encodes at index-build time,
 # searches only scan
-_IVFADC_MEMO: dict[tuple, tuple] = {}
 
 
 def _ivfadc_index(spark: SparkSession, sf_dir: str, e: DataFrame) -> tuple:
     from mongo2mysql_spark.operators.pq import build_pq_residual_index
-    from mongo2mysql_spark.queries import slot_memo
 
     def build() -> tuple:
         return build_pq_residual_index(
@@ -192,39 +186,17 @@ def _ivfadc_index(spark: SparkSession, sf_dir: str, e: DataFrame) -> tuple:
             train=False,
         )
 
-    return slot_memo(_IVFADC_MEMO, spark, sf_dir, build)
+    return artifact("similarity.ivfadc_index", spark, sf_dir, build)
 
-
-# mined contrastive triplets, built once per (application, sf_dir):
-# a triplet set is a write-once TRAINING-DATA artifact (the mining job
-# runs once, the trainer reads it many times) — same ownership pattern
-# as the code tables
-_TRIPLETS_MEMO: dict[tuple, DataFrame] = {}
-
-
-# streaming-store driver branches, built once per (application, sf_dir):
-# the store frames are localCheckpoint-backed so repeat bench passes
-# measure SERVING cost, not a rebuild of the same store
-_PQSTORE_MEMO: dict[tuple, tuple] = {}
-
-
-def _pq_store_codes_memo(spark: SparkSession, sf_dir: str, cb) -> tuple:
-    from mongo2mysql_spark.queries import slot_memo
-
-    return slot_memo(
-        _PQSTORE_MEMO, spark, sf_dir, lambda: _pq_store_codes(spark, sf_dir, cb)
-    )
 
 
 # packed BQ signatures (raw sign words + FWHT-SimHash words) — the
 # stored binary index a deployment serves from, built once per
 # (application, sf_dir)
-_BQ_MEMO: dict[tuple, tuple] = {}
 
 
 def _bq_index(spark: SparkSession, sf_dir: str, e: DataFrame) -> tuple:
     from mongo2mysql_spark.operators.similarity import sign_pack, simhash_pack
-    from mongo2mysql_spark.queries import slot_memo
 
     def build() -> tuple:
         actual = e.select(F.size("embedding").alias("d")).first()["d"]
@@ -240,23 +212,15 @@ def _bq_index(spark: SparkSession, sf_dir: str, e: DataFrame) -> tuple:
             ).localCheckpoint(),
         )
 
-    return slot_memo(_BQ_MEMO, spark, sf_dir, build)
+    return artifact("similarity.bq_index", spark, sf_dir, build)
 
 
 # streaming ANN serving (streaming/annserve.py): the 5 slot queries
 # submitted as two disjoint micro-batches against the stored BQ words,
 # result log read back through merge-on-read — the driver row proving
 # the streaming serving path ≡ the batch Hamming search bit-for-bit
-_ANNSERVE_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _ann_served(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
-    from mongo2mysql_spark.queries import slot_memo
-
     def build() -> DataFrame:
-        import shutil
-        import tempfile
-
         from mongo2mysql_spark.streaming.annserve import (
             read_ann_results,
             streaming_ann_serve,
@@ -280,55 +244,44 @@ def _ann_served(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
                 (F.col("vec_id") >= 3) & (F.col("vec_id") < N_QUERIES)
             ),
         ]
-        work = tempfile.mkdtemp(prefix="annserve_slot_")
-        store = os.path.join(work, "store")
-        try:
+        with scratch_dir("annserve_slot_") as work:
+            store = os.path.join(work, "store")
             for i, batch in enumerate(batches):
                 q = streaming_ann_serve(
                     batch, store, signs, "vec_id", "embedding",
                     dim=EMB_DIM, k=10,
                     checkpoint_dir=os.path.join(work, f"ck{i}"),
                 )
-                if not q.awaitTermination(300):
-                    q.stop()
-                    raise TimeoutError("ann serve batch did not finish in 300s")
+                await_query(q, "ann serve batch")
             return read_ann_results(spark, store).localCheckpoint()
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
-    return slot_memo(_ANNSERVE_MEMO, spark, sf_dir, build)
+    return artifact("similarity.ann_served", spark, sf_dir, build)
 
 
 # IVF-partitioned store path (sources/ivfstore — the index as table
 # layout), written once per (application, sf_dir): index builds are
-# write-once, probes read only their cells' directories
-_IVFPART_MEMO: dict[tuple, str] = {}
-
-
+# write-once, probes read only their cells' directories.  The directory
+# is held until the next build replaces it.
 def _ivf_store_path(spark: SparkSession, sf_dir: str, e: DataFrame) -> str:
-    import tempfile
-
-    from mongo2mysql_spark.queries import slot_memo
     from mongo2mysql_spark.sources.ivfstore import write_ivf_store
 
     def build() -> str:
-        path = tempfile.mkdtemp(prefix="ivfstore_") + "/ivf"
-        write_ivf_store(
-            e, path, "vec_id", "embedding", centroid_stride=STRIDE
-        )
+        with held_dir("similarity.ivf_store_dir", "ivfstore_") as work:
+            path = work + "/ivf"
+            write_ivf_store(
+                e, path, "vec_id", "embedding", centroid_stride=STRIDE
+            )
         return path
 
-    return slot_memo(_IVFPART_MEMO, spark, sf_dir, build)
+    return artifact("similarity.ivf_store", spark, sf_dir, build)
 
 
 # TRAINED book + its code table (decimal-exact Lloyd — the hash-gated
 # trained serving path), built once per (application, sf_dir)
-_PQT_MEMO: dict[tuple, tuple] = {}
 
 
 def _pqt_index(spark: SparkSession, sf_dir: str, e: DataFrame) -> tuple:
     from mongo2mysql_spark.operators.pq import pq_encode, train_codebook_exact
-    from mongo2mysql_spark.queries import slot_memo
 
     def build() -> tuple:
         cb_t = train_codebook_exact(
@@ -341,7 +294,7 @@ def _pqt_index(spark: SparkSession, sf_dir: str, e: DataFrame) -> tuple:
         ).localCheckpoint()
         return cb_t, codes
 
-    return slot_memo(_PQT_MEMO, spark, sf_dir, build)
+    return artifact("similarity.pqt_index", spark, sf_dir, build)
 
 
 _BRUTEFORCE_ORACLE = f"""
@@ -1169,7 +1122,6 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo2mysql_spark.queries import tagged_union
 
     from mongo2mysql_spark.operators.pq import pq_ivf_topk, pq_ivfadc_topk
-    from mongo2mysql_spark.queries import slot_memo
     from mongo2mysql_spark.sources.ivfstore import topk_ivf_partitioned
 
     e = T(spark, sf_dir, "embeddings", fanout=True)
@@ -1200,9 +1152,11 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
 
     # the four write-once index artifacts (mined triplets, PQ book +
-    # codes, IVFADC residual index, partitioned IVF store) are memoized
-    # builds: a cold pass pays their trainer/write jobs once
-    trip = slot_memo(_TRIPLETS_MEMO, spark, sf_dir, mine)
+    # codes, IVFADC residual index, partitioned IVF store) are
+    # build-once artifacts: a cold pass pays their trainer/write jobs
+    # once.  A triplet set is TRAINING DATA (the mining job runs once,
+    # the trainer reads it many times).
+    trip = artifact("similarity.triplets", spark, sf_dir, mine)
     cb, codes = _pq_index(spark, sf_dir, e)
     adc = _ivfadc_index(spark, sf_dir, e)
     store = _ivf_store_path(spark, sf_dir, e)
@@ -1277,7 +1231,6 @@ _CBINV_CHECKS = (
     "lloyd_beats_stride",
 )
 _CBINV_VALUES = ", ".join("('%s')" % c for c in _CBINV_CHECKS)
-_CBINV_MEMO: dict[tuple, "DataFrame"] = {}
 
 
 def _codebook_invariants(spark, sf_dir: str, e) -> "DataFrame":
@@ -1310,12 +1263,10 @@ def _codebook_invariants(spark, sf_dir: str, e) -> "DataFrame":
     sample (bounded) — the DISTRIBUTED artifacts under test are the
     mapInPandas trainer partials and the rotation stage.
     """
-    from mongo2mysql_spark.queries import slot_memo
-
-    def build() -> "DataFrame":
-        return _codebook_invariants_build(spark, e)
-
-    return slot_memo(_CBINV_MEMO, spark, sf_dir, build)
+    return artifact(
+        "similarity.codebook_invariants", spark, sf_dir,
+        lambda: _codebook_invariants_build(spark, e),
+    )
 
 
 def _codebook_invariants_build(spark, e) -> "DataFrame":
@@ -1616,12 +1567,17 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalized intermediate would be a corpus-sized transform — and a
     # lazy one re-evaluates per element_at reference); re-score is on
     # the raw vectors (the oracle's cosine is raw-vs-raw).  The
-    # codebook + checkpointed code table are the slot-shared memoized
-    # PQ index (ann_topk_ivf's ivfpq branch searches the same codes).
+    # codebook + checkpointed code table are the slot-shared PQ index
+    # artifact (ann_topk_ivf's ivfpq branch searches the same codes).
     # The stride-book chain (index -> store codes) and the trained
-    # Lloyd book are memoized builds.
+    # Lloyd book are build-once artifacts; the store frames are
+    # localCheckpoint-backed so repeat bench passes measure SERVING
+    # cost, not a rebuild of the same store.
     cb, codes_df = _pq_index(spark, sf_dir, e)
-    ps_delta, ps_base = _pq_store_codes_memo(spark, sf_dir, cb)
+    ps_delta, ps_base = artifact(
+        "similarity.pq_store", spark, sf_dir,
+        lambda: _pq_store_codes(spark, sf_dir, cb),
+    )
     cb_t, codes_t = _pqt_index(spark, sf_dir, e)
     pqc = codes_df.select(
         "vec_id",

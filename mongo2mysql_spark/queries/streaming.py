@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.artifacts import artifact, await_query, scratch_dir
 from mongo2mysql_spark.queries import register
 from mongo2mysql_spark.streaming.pipeline import (
     run_to_memory,
@@ -102,11 +103,6 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# joinview branch (streaming/joinview.py): store frames built once per
-# (application, sf_dir) — bench passes measure serving, not a rebuild
-_JOINVIEW_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _join_view_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the incremental join-view store end-to-end: four
     interleaved availableNow insert batches (views/purchases, halved by
@@ -114,17 +110,14 @@ def _join_view_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the served view — hash-gated against the plain batch
     join-aggregate."""
     import os
-    import shutil
-    import tempfile
 
     from mongo2mysql_spark.streaming.joinview import (
         read_join_view,
         streaming_join_view_refresh,
     )
 
-    work = tempfile.mkdtemp(prefix="joinview_slot_")
-    store = os.path.join(work, "store")
-    try:
+    with scratch_dir("joinview_slot_") as work:
+        store = os.path.join(work, "store")
         runs = [("a", "view", 0), ("b", "purchase", 0),
                 ("a", "view", 1), ("b", "purchase", 1)]
         for i, (side, et, half) in enumerate(runs):
@@ -141,9 +134,7 @@ def _join_view_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 group_col="grp", value_col="value",
                 checkpoint_dir=os.path.join(work, f"ck{i}"),
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("join-view refresh did not finish in 300s")
+            await_query(q, "join-view refresh")
         return (
             read_join_view(spark, store)
             .select(
@@ -154,8 +145,6 @@ def _join_view_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # bloom join-pruning fixture (operators/bloomjoin.py): filter built
@@ -281,7 +270,7 @@ _BJ_BUILD_SQL = (
     ),
 )
 def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongo2mysql_spark.queries import slot_memo, tagged_union
+    from mongo2mysql_spark.queries import tagged_union
     from mongo2mysql_spark.sources.parquet import load_table
 
     ev = stream_events(spark, sf_dir)
@@ -322,12 +311,14 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     words_df = bloom_build(bcust, "c_custkey", _BJ_WORDS, _BJ_K)
     # The enrich stream's availableNow round-trip mutates the session
     # shuffle-partitions conf (state-store sizing) while it runs — it
-    # runs before the memoized join-view store (cold) and the bloom
-    # words collect, so their checkpoints never see the transient
-    # 8-partition conf.
+    # runs before the join-view store artifact (built once per
+    # (application, sf_dir); cold here, so bench passes measure
+    # serving) and the bloom words collect, so their checkpoints never
+    # see the transient 8-partition conf.
     enrich = run_to_memory(agg, shuffle_partitions=8)
-    jv = slot_memo(
-        _JOINVIEW_MEMO, spark, sf_dir, lambda: _join_view_frame(spark, sf_dir)
+    jv = artifact(
+        "streaming.join_view", spark, sf_dir,
+        lambda: _join_view_frame(spark, sf_dir),
     )
     words = bloom_words_array(words_df, _BJ_WORDS)
     evb = _lt(spark, sf_dir, "events").select("user_id", "value")

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo2mysql_spark.artifacts import artifact
 from mongo2mysql_spark.functions.scalar import sql_dsum
 from mongo2mysql_spark.functions.text import (
     BPE_SPLIT_PATTERN,
@@ -154,9 +155,6 @@ _COLL_MIN_PAIR, _COLL_NUM, _COLL_DEN = 5, 1, 30
 # novelty/heaps branches (operators/novelty.py)
 _NOVELTY_N = 3
 _HEAPS_CHECKPOINTS = 10
-# doc-bounded artifact frames shared across materializations
-_TFX_MEMO: dict[tuple, tuple] = {}
-_POSTINGS_MEMO: dict[tuple, "DataFrame"] = {}
 # postings branch (operators/postings.py): segmented build, 64-id
 # shards — window partitions bounded by the span, never by a term's df
 _POSTINGS_K = 30
@@ -370,13 +368,12 @@ def text_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # redundancy-growth readouts (operators/novelty.py): per-doc
     # n-gram novelty (what MinHash dedup misses — templated text with
     # no single near-dup twin) and the Heaps-law vocabulary curve —
-    # doc-bounded artifacts, slot-memoized (pass 1 pays the gram
-    # shuffle, later materializations serve the checkpoints)
+    # doc-bounded build-once artifacts (pass 1 pays the gram shuffle,
+    # later materializations serve the checkpoints)
     from mongo2mysql_spark.operators.novelty import (
         heaps_growth,
         ngram_novelty,
     )
-    from mongo2mysql_spark.queries import slot_memo
 
     def build_tfx() -> tuple:
         nov_ = ngram_novelty(
@@ -398,7 +395,7 @@ def text_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
         return nov_, hp_
 
-    nov, hp = slot_memo(_TFX_MEMO, spark, sf_dir, build_tfx)
+    nov, hp = artifact("text.novelty_heaps", spark, sf_dir, build_tfx)
     return tagged_union(
         {
             "tf": tf,
@@ -655,10 +652,9 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delta+varint byte costs of the top-df posting lists — the codec
     # decision the index builder makes before writing segments
     from mongo2mysql_spark.operators.postings import posting_compression
-    from mongo2mysql_spark.queries import slot_memo
 
-    pc = slot_memo(
-        _POSTINGS_MEMO,
+    pc = artifact(
+        "text.postings",
         spark,
         sf_dir,
         # SEGMENTED build (shard_span): the 100 TB stop-word shape —
@@ -681,9 +677,6 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 WINNOW_K, WINNOW_W = 5, 4
-# (fps, pairs, spans) winnowing artifacts shared across
-# materializations of text_winnow_fingerprints (slot_memo)
-_WINNOW_MEMO: dict[tuple, tuple] = {}
 # passage-dup pairing over the fingerprint stream (operators/passages.py)
 PASSAGE_MIN_SHARED, PASSAGE_MAX_FP_DF = 2, 100
 # self-repetition span detection + stripping (operators/passages.py)
@@ -863,12 +856,10 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumes the same projection, the self-repetition spans use the
     # positions.  The three artifacts are exactly the state a MOSS-style
     # deployment stores (fingerprint index, duplicate-pair list, span
-    # table) — built ONCE per (application, sf_dir) via slot_memo; the
+    # table) — one build-once artifact per (application, sf_dir); the
     # positional cache is owned by the build and released before it
     # returns (the r5 lesson: never leak cached blocks into a long
     # driver session).
-    from mongo2mysql_spark.queries import slot_memo
-
     def build_winnow() -> tuple:
         pos = doc_fingerprints_pos(
             d, "doc_id", "text", WINNOW_K, WINNOW_W
@@ -907,8 +898,8 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
         return fps_, pairs_, spans_, es_
 
-    fps, pairs, spans, es_art = slot_memo(
-        _WINNOW_MEMO, spark, sf_dir, build_winnow
+    fps, pairs, spans, es_art = artifact(
+        "text.winnow", spark, sf_dir, build_winnow
     )
     per_doc_spans = spans.groupBy(F.col("doc_a").alias("doc_id")).agg(
         F.count(F.lit(1)).cast("int").alias("n_spans"),

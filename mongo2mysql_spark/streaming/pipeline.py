@@ -18,10 +18,11 @@ from __future__ import annotations
 
 import itertools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mongo2mysql_spark.artifacts import await_query, scratch_dir
 
 _MEM_COUNTER = itertools.count()
 
@@ -235,10 +236,13 @@ def stream_collection_export(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(stream_path)
     )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"m2m_stream_{name}_"))
-        .start()
-    )
-    q.awaitTermination()
+    # a fresh checkpoint per call (no run resumes from it), removed
+    # once the query ends
+    with scratch_dir(f"m2m_stream_{name}_") as checkpoint:
+        q = (
+            stream.writeStream.foreachBatch(handle)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", checkpoint)
+            .start()
+        )
+        await_query(q, f"stream export of {name}", timeout=None)

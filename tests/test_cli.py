@@ -55,17 +55,21 @@ def test_cli_end_to_end_subprocess():
 
 
 @pytest.mark.slow
-def test_cli_stream_mode_matches_batch(spark):
+def test_cli_stream_mode_matches_batch(spark, tmp_path, monkeypatch):
     """--stream replays collections as bounded streams through the batch
     porter via foreachBatch; a single-file collection is one micro-batch,
-    so output must equal the batch run exactly."""
+    so output must equal the batch run exactly.  Each stream's
+    checkpoint dir is removed once its query ends."""
     from mongo2mysql_spark.cli import main
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     with tempfile.TemporaryDirectory() as s_out, tempfile.TemporaryDirectory() as b_out:
         rc = main(["--source-dir", "/root/testdata/sf0.001",
                    "--collections", "region,nation", "--stream",
                    "--output-dir", s_out])
         assert rc == 0
+        assert not [p.name for p in tmp_path.iterdir()
+                    if p.name.startswith("m2m_stream_")]
         rc = main(["--source-dir", "/root/testdata/sf0.001",
                    "--collections", "region,nation",
                    "--output-dir", b_out])

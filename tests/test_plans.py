@@ -13,7 +13,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from mongo2mysql_spark.queries import load_all, parallel_branches, slot_memo
+from mongo2mysql_spark.queries import load_all, parallel_branches
 from tests.conftest import SF_DIR
 
 REGISTRY = load_all()
@@ -342,8 +342,8 @@ def test_winnow_staging_survives_optimizer(spark):
     vanishing from the optimized plan), the md5 array is rebuilt once
     per window — an O(n^2)-per-document regression measured at 17x wall
     time.  (Asserted on the operator plan directly: the slot now serves
-    slot_memo'd checkpoints, so its own optimized plan is checkpoint
-    scans.)"""
+    build-once artifact checkpoints, so its own optimized plan is
+    checkpoint scans.)"""
     from mongo2mysql_spark.operators.passages import doc_fingerprints_pos
     from mongo2mysql_spark.queries.text import WINNOW_K, WINNOW_W
     from mongo2mysql_spark.sources import load_table
@@ -457,24 +457,24 @@ def test_q19_disjunction_prefilters_both_sides(spark):
     assert "Cartesian" not in physical_plan(df)
 
 
-def test_slot_persist_releases_previous_generation(spark):
-    """cachereg.slot_persist (r12): rebuilding a slot releases the
-    previous build's cache under the same key — at most one live
-    generation per call site, the invariant the persist-release guard
-    below exists to protect."""
-    from mongo2mysql_spark.cachereg import _REGISTRY, slot_persist
+def test_held_releases_previous_generation(spark):
+    """artifacts.held: rebuilding a slot releases the previous build's
+    cache under the same name — at most one live generation per call
+    site, the invariant the persist-release guard below exists to
+    protect."""
+    from mongo2mysql_spark.artifacts import _REGISTRY, _release, held
 
-    key = ("test.slot_persist",)
-    a = slot_persist(key, spark.range(10))
+    name = "test.held"
+    a = held(name, spark.range(10))
     a.count()
     assert a.storageLevel.useMemory
-    b = slot_persist(key, spark.range(20))
+    b = held(name, spark.range(20))
     assert not a.storageLevel.useMemory  # previous generation released
-    assert _REGISTRY[key] is b
+    assert _REGISTRY[name][1] is b
     b.count()
     assert b.storageLevel.useMemory
-    slot_persist(key, spark.range(5))  # cleanup for later tests
-    _REGISTRY.pop(key).unpersist()
+    _release(name)  # cleanup for later tests
+    assert not b.storageLevel.useMemory and name not in _REGISTRY
 
 
 def test_parallel_branches_preserves_insertion_order_and_values():
@@ -534,8 +534,10 @@ class _FakeSpark:
     sparkContext = _FakeCtx()
 
 
-def test_slot_memo_builds_once_and_keeps_one_entry(tmp_path):
-    memo: dict = {}
+def test_artifact_builds_once_and_keeps_one_entry(tmp_path):
+    from mongo2mysql_spark.artifacts import _REGISTRY, _release, artifact
+
+    name = "test.artifact"
     calls = []
 
     def build():
@@ -543,22 +545,137 @@ def test_slot_memo_builds_once_and_keeps_one_entry(tmp_path):
         return object()
 
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    first = slot_memo(memo, _FakeSpark(), a, build)
-    assert slot_memo(memo, _FakeSpark(), a, build) is first
+    first = artifact(name, _FakeSpark(), a, build)
+    assert artifact(name, _FakeSpark(), a, build) is first
     assert len(calls) == 1
     # another sf_dir replaces the entry: one entry's blocks at a time
-    second = slot_memo(memo, _FakeSpark(), b, build)
+    second = artifact(name, _FakeSpark(), b, build)
     assert second is not first and len(calls) == 2
-    assert list(memo.values()) == [second]
+    assert _REGISTRY[name][1] is second
 
     def boom():
         raise RuntimeError("build failed")
 
     # a failed build raises and leaves the previous entry in place
     with pytest.raises(RuntimeError, match="build failed"):
-        slot_memo(memo, _FakeSpark(), a, boom)
-    assert list(memo.values()) == [second]
-    assert slot_memo(memo, _FakeSpark(), b, build) is second
+        artifact(name, _FakeSpark(), a, boom)
+    assert _REGISTRY[name][1] is second
+    assert artifact(name, _FakeSpark(), b, build) is second
+    _release(name)
+
+
+def test_artifact_names_do_not_evict_each_other(tmp_path):
+    """Each name holds its own entry: building name A (even for another
+    sf_dir) leaves name B's entry served without a rebuild."""
+    from mongo2mysql_spark.artifacts import _release, artifact
+
+    a, b = "test.artifact_a", "test.artifact_b"
+    sf1, sf2 = str(tmp_path / "sf1"), str(tmp_path / "sf2")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    vb = artifact(b, _FakeSpark(), sf1, build)
+    artifact(a, _FakeSpark(), sf1, build)
+    artifact(a, _FakeSpark(), sf2, build)
+    assert len(calls) == 3
+    assert artifact(b, _FakeSpark(), sf1, build) is vb
+    assert len(calls) == 3
+    _release(a)
+    _release(b)
+
+
+def test_held_dir_replaces_previous_and_keeps_it_on_failure(tmp_path, monkeypatch):
+    import os
+    import tempfile
+
+    from mongo2mysql_spark.artifacts import _REGISTRY, _release, held_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    name = "test.held_dir"
+    with held_dir(name, "hd_") as first:
+        open(os.path.join(first, "f"), "w").close()
+    assert os.path.isdir(first) and _REGISTRY[name][1] == first
+    # a failing block removes its own dir and keeps the previous one
+    with pytest.raises(RuntimeError, match="write failed"):
+        with held_dir(name, "hd_") as failed:
+            raise RuntimeError("write failed")
+    assert not os.path.exists(failed)
+    assert os.path.isdir(first) and _REGISTRY[name][1] == first
+    # a successful block replaces (and removes) the previous dir
+    with held_dir(name, "hd_") as second:
+        pass
+    assert not os.path.exists(first) and os.path.isdir(second)
+    _release(name)
+    assert not os.path.exists(second)
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_scratch_dir_is_removed_however_the_block_ends(tmp_path, monkeypatch):
+    import os
+    import tempfile
+
+    from mongo2mysql_spark.artifacts import scratch_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with scratch_dir("sd_") as ok:
+        open(os.path.join(ok, "f"), "w").close()
+    assert not os.path.exists(ok)
+    with pytest.raises(RuntimeError, match="build failed"):
+        with scratch_dir("sd_") as failed:
+            raise RuntimeError("build failed")
+    assert not os.path.exists(failed)
+    assert list(tmp_path.iterdir()) == []
+
+
+class _FakeQuery:
+    def __init__(self, finishes: bool):
+        self.finishes = finishes
+        self.waits = []
+        self.stopped = False
+
+    def awaitTermination(self, timeout=None):
+        self.waits.append(timeout)
+        return None if timeout is None else self.finishes
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_await_query_stops_and_raises_on_timeout():
+    from mongo2mysql_spark.artifacts import await_query
+
+    q = _FakeQuery(finishes=False)
+    with pytest.raises(TimeoutError, match="rollup store refresh"):
+        await_query(q, "rollup store refresh")
+    assert q.waits == [300] and q.stopped
+
+
+def test_await_query_finished_and_unbounded_waits_do_not_stop():
+    from mongo2mysql_spark.artifacts import await_query
+
+    q = _FakeQuery(finishes=True)
+    await_query(q, "refresh", timeout=5)
+    assert q.waits == [5] and not q.stopped
+    q = _FakeQuery(finishes=False)
+    await_query(q, "export", timeout=None)
+    assert q.waits == [None] and not q.stopped
+
+
+def test_versioned_time_travel_holds_one_table_dir(spark, tmp_path, monkeypatch):
+    """Each call commits a fresh versioned table; the previous call's
+    directory is released instead of leaking one dir per call."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    fn = REGISTRY["versioned_time_travel"].fn
+    first = sorted(fn(spark, SF_DIR).collect())
+    second = sorted(fn(spark, SF_DIR).collect())
+    assert first == second and len(first) > 0
+    left = [p for p in tmp_path.iterdir() if p.name.startswith("versioned_ttl_")]
+    assert len(left) <= 1
 
 
 def test_every_persist_site_has_a_release_path():
@@ -638,6 +755,59 @@ def test_environment_reads_are_deployment_settings_only():
             if key not in allowed:
                 offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert not offenders, f"environment read outside {sorted(allowed)}: {offenders}"
+
+
+def _package_calls(names: set[str]):
+    """(module path, call node) for every call in the package whose
+    callee (plain name or attribute) is in ``names``."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "mongo2mysql_spark"
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            callee = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if callee in names:
+                yield path.relative_to(pkg), node
+
+
+def test_scratch_dirs_and_stream_waits_only_in_artifacts():
+    """Scratch directories and streaming-query waits have one lifecycle
+    (artifacts.scratch_dir / held_dir / await_query): a bare mkdtemp
+    leaks its dir when the build fails, and a bare
+    awaitTermination(timeout) ignores the False a timeout returns."""
+    offenders = [
+        f"{path}:{node.lineno}"
+        for path, node in _package_calls(
+            {"mkdtemp", "TemporaryDirectory", "awaitTermination"}
+        )
+        if str(path) != "artifacts.py"
+    ]
+    assert not offenders, offenders
+
+
+def test_artifact_names_are_unique_literals():
+    """Every artifact / held / held_dir call names its entry with a
+    string literal used at no other site: two sites sharing a name
+    would silently serve or release each other's entry."""
+    import ast
+
+    seen: dict[str, str] = {}
+    problems = []
+    for path, node in _package_calls({"artifact", "held", "held_dir"}):
+        where = f"{path}:{node.lineno}"
+        arg = node.args[0] if node.args else None
+        if not (isinstance(arg, ast.Constant) and isinstance(arg.value, str)):
+            problems.append(f"{where}: name is not a string literal")
+        elif arg.value in seen:
+            problems.append(f"{where}: {arg.value!r} also used at {seen[arg.value]}")
+        else:
+            seen[arg.value] = where
+    assert not problems, problems
+    assert len(seen) >= 30  # the walk found the call sites
 
 
 def test_centroid_assignment_is_aggregate_not_window(spark):
