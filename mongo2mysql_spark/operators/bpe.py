@@ -104,6 +104,8 @@ def learn_merges(
             break
         left, right = top["pair"].split(" ", 1)
         merges.append((left, right, int(top["c"])))
+        if len(merges) == n_merges:
+            break  # no later merge reads the fused state
         state = state.select(
             "n", _fuse_pair(F.col("sym"), left, right).alias("sym")
         ).localCheckpoint()

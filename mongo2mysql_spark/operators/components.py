@@ -20,17 +20,21 @@ the diameter unbounded.
 Scale shape: every round is {symmetrize -> groupBy(min) -> join} —
 shuffles keyed on node id, no collect of neighbor lists (high-degree
 nodes never materialize their neighborhood in one task's memory, unlike
-collect_list formulations).  Per-round results are localCheckpoint'ed:
-the iteration would otherwise nest each round's plan inside the next
-(exponential lineage); on a real cluster use a reliable checkpoint dir
-instead.  Convergence detection costs one count + one subtract per
-round — the standard price of a fixed-point loop.
+collect_list formulations).  Per-round results are localCheckpoint'ed
+eagerly: the iteration would otherwise nest each round's plan inside
+the next (exponential lineage); on a real cluster use a reliable
+checkpoint dir instead.  Convergence detection costs no job of its
+own: an Observation on the round's checkpoint collects the edge-set
+fingerprint in the same pass, so each round runs its star shuffles and
+one checkpoint job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mongo2mysql_spark.telemetry import observe
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -76,36 +80,32 @@ def connected_components(
     Nodes with no edges are absent (callers left-join and coalesce to
     the node's own id, which is what the registered query does).
     """
-    # Lazy checkpoints: lineage truncation happens inside the stats job
-    # that follows, so each round costs exactly ONE materializing job.
-    def _stats(df: DataFrame) -> tuple:
-        # Edge-set fingerprint for fixed-point detection: cardinality,
-        # the label sum (monotonically non-increasing round to round —
+    def _checkpoint(df: DataFrame) -> tuple[DataFrame, tuple]:
+        # The edge set, checkpointed, and its fingerprint for fixed-point
+        # detection, observed on the checkpoint job: cardinality, the
+        # label sum (monotonically non-increasing round to round —
         # Kiveris et al. prove per-node minima never increase), and an
         # order-insensitive 64-bit content hash.  Equality of the triple
         # across one round means the edge set stopped changing; the
         # union-find equivalence tests exercise this on chains/cliques.
-        return tuple(
-            df.agg(
-                F.count(F.lit(1)),
-                F.sum(F.col("b").cast("decimal(38,0)")),
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
-            ).first()
+        observed = observe(
+            df, "cc_round",
+            n=F.count(F.lit(1)),
+            label_sum=F.sum(F.col("b").cast("decimal(38,0)")),
+            hash_sum=F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
         )
+        done = observed.frame.localCheckpoint()
+        return done, tuple(observed.metrics.values())
 
-    e = (
+    e, prev = _checkpoint(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    prev = _stats(e)
     if prev[0] == 0:
         return e.select(F.col("a").alias("id"), F.col("b").alias("component"))
     for _ in range(max_rounds):
-        nxt = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        cur = _stats(nxt)
-        e = nxt
+        e, cur = _checkpoint(_small_star(_large_star(e)))
         if cur == prev:
             break
         prev = cur
@@ -181,7 +181,7 @@ def incremental_components(
     # the delta closure: O(|batch|) nodes/edges regardless of history
     mapping = connected_components(
         contracted, "id_1", "id_2", max_rounds=max_rounds
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     relabeled = (
         labels.join(
             mapping.select(

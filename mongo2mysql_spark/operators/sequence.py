@@ -10,7 +10,8 @@ Scale: a ``row_number`` window partitioned by ``_table`` puts each
 table in one reducer, and destination tables are Zipfian (one routing
 key may carry a whole collection).  :class:`Numbering` instead numbers
 a range-partitioned, persisted frame from per-partition counts (one
-aggregation of #partitions × #groups rows) and a narrow projection.
+aggregation of #partitions × #groups rows) and a narrow projection; a
+frame already in one partition skips the range exchange.
 ``add_num`` keeps the window form as the reference the tests compare
 against.
 """
@@ -90,6 +91,12 @@ class Numbering:
     single-reducer plan either, so a table (or a routing key with ONE
     value) of 10^12 rows still numbers in parallel.
 
+    A frame already in one partition (a sync batch, a collection file
+    read as one split) is trivially range-partitioned: it is coalesced
+    to one partition and sorted in place, with no range exchange and
+    no sampling job, and the aggregation needs no exchange either.
+    Telling the two cases apart runs no job (``_at_most_one_partition``).
+
     Counts and rows come from the same pinned cached partitions, so
     they cannot disagree.  Counts taken from a second execution of the
     range exchange can disagree: AQE may coalesce its partitions
@@ -122,9 +129,9 @@ class Numbering:
         # the schema of frame(): what schema inference describes
         self.schema = T.StructType(df.schema.fields + [T.StructField(out_col, T.IntegerType())])
         keys = [F.col(c) for c in (*self.partition_cols, *order_cols)]
+        spread = df.coalesce(1) if _at_most_one_partition(df) else df.repartitionByRange(*keys)
         ordered = (
-            df.repartitionByRange(*keys)
-            .sortWithinPartitions(*keys)
+            spread.sortWithinPartitions(*keys)
             .withColumn("__pid", F.spark_partition_id())
             .withColumn("__mid", F.monotonically_increasing_id())
         )
@@ -178,6 +185,19 @@ class Numbering:
 
     def unpersist(self) -> None:
         self.cached.unpersist()
+
+
+def _at_most_one_partition(df: DataFrame) -> bool:
+    """Whether ``df`` is in at most one partition, decided without a
+    Spark job: its physical plan, cached plans included, holds no
+    exchange, subquery or adaptive plan, so building its RDD runs
+    nothing.  (Under AQE, counting the partitions of a plan with an
+    exchange runs that exchange's stages.)"""
+    plan = df._jdf.queryExecution().executedPlan()
+    text = plan.toString().lower()
+    if any(w in text for w in ("exchange", "subquery", "adaptivesparkplan", "querystage")):
+        return False
+    return plan.execute().getNumPartitions() <= 1
 
 
 def _long_array(values: list[int]) -> Column:

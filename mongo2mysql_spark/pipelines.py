@@ -7,9 +7,12 @@ corpus-building operators).
 Every stage is one of the engine's tested operators; this module only
 composes them and reports what each stage did.  The whole pipeline is
 lazily planned per stage, so Catalyst fuses the score+filter+dedup+
-split chain into a single scan+shuffle before anything materializes;
-the stage counts in the report are the pipeline's telemetry actions
-(one count per stage — the logging a production run wants anyway).
+split chain into a single scan+shuffle before anything materializes.
+The report's stage counts cost no pass of their own: each stage frame
+carries an Observation (``telemetry.observe``) that the actions which
+run anyway — the dedup and pair-finding jobs, the cache fills, the
+shard and split writes — collect, and the report reads them after the
+last write.
 
 Scale: the only corpus-wide shuffles are the dedup rank, the optional
 LSH banding, and the shard write — each individually audited in its
@@ -42,6 +45,7 @@ from mongo2mysql_spark.operators.decontam import remove_contaminated
 from mongo2mysql_spark.operators.packing import pack_sequences
 from mongo2mysql_spark.operators.sampling import hash_split
 from mongo2mysql_spark.sources.lake import write_training_shards
+from mongo2mysql_spark.telemetry import observe
 
 
 @dataclass
@@ -101,27 +105,43 @@ def build_training_corpus(
     replayed BPE merges).
     """
     cfg = config or CorpusConfig()
-    report: dict = {"input_docs": docs.count()}
+    ppl_on = cfg.max_ppl is not None and lm_reference is not None
+    clf_on = cfg.clf_keep_frac is not None and clf_reference is not None
+    dsir_on = cfg.dsir_keep_frac is not None and dsir_target is not None
+    decontam_on = benchmark is not None
 
-    # Stage results are persisted before their telemetry count so each
-    # count is a cache scan, not a re-execution of the whole upstream
-    # scan+score+dedup chain (at 100 TB the un-persisted version pays
-    # one full corpus pass per stage count).  Everything persisted here
-    # is unpersisted before return.
+    # The report holds each stage count as a thunk over its stage
+    # frame's Observation, resolved once the last write has run.  A
+    # frame the next stage reads twice is persisted, with its
+    # observation right below the cache, so the fill counts each row
+    # once and the second read is a cache scan; a frame read once is
+    # only observed.  Everything persisted here is unpersisted before
+    # return.
+    report: dict = {}
     _cached: list[DataFrame] = []
 
-    def _stage(df: DataFrame) -> DataFrame:
+    def _persist(df: DataFrame) -> DataFrame:
         df.persist()
         _cached.append(df)
         return df
+
+    def _stage(key: str, df: DataFrame, reread: bool) -> DataFrame:
+        observed = observe(df, key)
+        report[key] = lambda: observed.metrics["rows"]
+        return _persist(observed.frame) if reread else observed.frame
+
+    docs = _stage("input_docs", docs, reread=False)
 
     if host_blocklist is not None and cfg.url_col is not None:
         # URL-level curation first (RefinedWeb §3.1): cheapest gate,
         # runs before any text is tokenized
         from mongo2mysql_spark.operators.urls import host_blocklist_filter
 
-        docs = _stage(host_blocklist_filter(docs, host_blocklist, cfg.url_col))
-        report["after_host_blocklist"] = docs.count()
+        docs = _stage(
+            "after_host_blocklist",
+            host_blocklist_filter(docs, host_blocklist, cfg.url_col),
+            reread=False,
+        )
 
     if cfg.html_strip:
         # raw-web ingestion: reduce HTML to visible text before any
@@ -136,9 +156,10 @@ def build_training_corpus(
         from mongo2mysql_spark.operators.c4 import c4_keep
 
         docs = _stage(
-            c4_keep(docs, text_col, word_blocklist=cfg.c4_word_blocklist)
+            "after_c4_clean",
+            c4_keep(docs, text_col, word_blocklist=cfg.c4_word_blocklist),
+            reread=False,
         )
-        report["after_c4_clean"] = docs.count()
 
     toks = tokens(F.col(text_col))
     scored = docs.select(
@@ -150,15 +171,16 @@ def build_training_corpus(
         fingerprint(toks).alias("__fp"),
     )
     kept = _stage(
+        "after_quality_filter",
         scored.filter(
             (F.col("quality") >= cfg.min_quality)
             & (F.col("n_tokens") >= cfg.min_tokens)
             & (F.col("dup_frac") <= cfg.max_dup_fraction)
-        )
+        ),
+        reread=ppl_on or clf_on or dsir_on,
     )
-    report["after_quality_filter"] = kept.count()
 
-    if cfg.max_ppl is not None and lm_reference is not None:
+    if ppl_on:
         # model-based fluency gate (CCNet shape, operators/lm.py): train
         # the reference bigram LM, drop docs above the perplexity cap;
         # unscorable (< 2-token) docs pass — the length filter owns them
@@ -171,13 +193,14 @@ def build_training_corpus(
             id_col, "ppl"
         )
         kept = _stage(
+            "after_ppl_filter",
             kept.join(ppl, id_col, "left").filter(
                 F.col("ppl").isNull() | (F.col("ppl") <= cfg.max_ppl)
-            ).drop("ppl")
+            ).drop("ppl"),
+            reread=clf_on or dsir_on,
         )
-        report["after_ppl_filter"] = kept.count()
 
-    if cfg.clf_keep_frac is not None and clf_reference is not None:
+    if clf_on:
         # discriminative quality gate (operators/classifier.py — the
         # GPT-3 Appendix-A recipe): train reference-vs-corpus-sample
         # logistic regression on hashed-n-gram frequencies, keep the
@@ -192,7 +215,7 @@ def build_training_corpus(
         from mongo2mysql_spark.operators.dsir import bucket_counts, hashed_grams
         from mongo2mysql_spark.operators.sampling import hash_sample_flag
 
-        corpus_feats = _stage(
+        corpus_feats = _persist(
             normalized_features(
                 bucket_counts(hashed_grams(kept, id_col, text_col), id_col),
                 id_col,
@@ -222,7 +245,7 @@ def build_training_corpus(
         wdf, bias, _losses = train_quality_classifier(
             train_feats, train_labels, id_col, "y", n_iters=cfg.clf_iters
         )
-        clf_scores = _stage(
+        clf_scores = _persist(
             score_documents(corpus_feats, wdf, bias, id_col).select(
                 id_col, F.col("score").alias("__clf")
             )
@@ -231,13 +254,14 @@ def build_training_corpus(
             F.expr(f"percentile(__clf, {1.0 - cfg.clf_keep_frac})")
         ).first()[0]
         kept = _stage(
+            "after_classifier_gate",
             kept.join(
                 clf_scores.filter(F.col("__clf") >= clf_cut).select(id_col), id_col
-            )
+            ),
+            reread=dsir_on,
         )
-        report["after_classifier_gate"] = kept.count()
 
-    if cfg.dsir_keep_frac is not None and dsir_target is not None:
+    if dsir_on:
         # DSIR selection (operators/dsir.py): keep the docs most like the
         # target domain.  The cut is a weight threshold from an exact
         # distributed percentile — no global sort, no driver-side top-k;
@@ -249,9 +273,9 @@ def build_training_corpus(
             hashed_grams,
         )
 
-        counts = _stage(bucket_counts(hashed_grams(kept, id_col, text_col), id_col))
+        counts = _persist(bucket_counts(hashed_grams(kept, id_col, text_col), id_col))
         tcounts = bucket_counts(hashed_grams(dsir_target, id_col, text_col), id_col)
-        weights = _stage(
+        weights = _persist(
             dsir_weights(counts, bucket_log_ratio(tcounts, counts), id_col)
             .select(id_col, F.col("weight").cast("double").alias("__w"))
         )
@@ -259,12 +283,16 @@ def build_training_corpus(
             F.expr(f"percentile(__w, {1.0 - cfg.dsir_keep_frac})")
         ).first()[0]
         kept = _stage(
-            kept.join(weights.filter(F.col("__w") >= cut).drop("__w"), id_col)
+            "after_dsir_select",
+            kept.join(weights.filter(F.col("__w") >= cut).drop("__w"), id_col),
+            reread=False,
         )
-        report["after_dsir_select"] = kept.count()
 
-    deduped = _stage(dedup_exact(kept, ["__fp"], id_col).drop("__fp"))
-    report["after_exact_dedup"] = deduped.count()
+    deduped = _stage(
+        "after_exact_dedup",
+        dedup_exact(kept, ["__fp"], id_col).drop("__fp"),
+        reread=cfg.near_dedup or cfg.passage_dedup or decontam_on,
+    )
 
     if cfg.near_dedup:
         # MinHash-LSH candidate pairs -> connected components -> keep the
@@ -287,8 +315,11 @@ def build_training_corpus(
         drop = comp.filter(F.col("id") != F.col("component")).select(
             F.col("id").alias(id_col)
         )
-        deduped = _stage(deduped.join(drop, id_col, "left_anti"))
-        report["after_near_dedup"] = deduped.count()
+        deduped = _stage(
+            "after_near_dedup",
+            deduped.join(drop, id_col, "left_anti"),
+            reread=cfg.passage_dedup or decontam_on,
+        )
 
     if cfg.passage_dedup and cfg.passage_mode == "strip":
         # substring-level pass (operators/passages.py): locate each
@@ -306,13 +337,14 @@ def build_training_corpus(
         )
         stripped = strip_passage_spans(deduped, spans, id_col, text_col)
         deduped = _stage(
+            "after_passage_strip",
             stripped.withColumn(
                 "n_tokens",
                 F.col("n_tokens_before") - F.col("n_stripped_tokens"),
             ).filter(F.col("n_tokens") >= cfg.min_tokens)
-            .drop("n_tokens_before", "n_stripped_tokens")
+            .drop("n_tokens_before", "n_stripped_tokens"),
+            reread=decontam_on,
         )
-        report["after_passage_strip"] = deduped.count()
     elif cfg.passage_dedup:
         # passage-overlap pass (operators/passages.py): documents whose
         # winnowing fingerprints are largely contained in another's are
@@ -329,26 +361,33 @@ def build_training_corpus(
         pdrop = pcomp.filter(F.col("id") != F.col("component")).select(
             F.col("id").alias(id_col)
         )
-        deduped = _stage(deduped.join(pdrop, id_col, "left_anti"))
-        report["after_passage_dedup"] = deduped.count()
-
-    if benchmark is not None:
         deduped = _stage(
+            "after_passage_dedup",
+            deduped.join(pdrop, id_col, "left_anti"),
+            reread=decontam_on,
+        )
+
+    if decontam_on:
+        deduped = _stage(
+            "after_decontam",
             remove_contaminated(
                 deduped, benchmark, id_col=id_col, text_col=text_col,
                 n=cfg.decontam_ngram,
-            )
+            ),
+            reread=False,
         )
-        report["after_decontam"] = deduped.count()
 
     train_frac, val_frac = cfg.splits
-    with_split = deduped.withColumn(
-        "split", hash_split(F.col(id_col), train_frac, val_frac)
-    ).persist()
+    split = F.col("split")
+    splits = observe(
+        deduped.withColumn("split", hash_split(F.col(id_col), train_frac, val_frac)),
+        "splits",
+        **{f"{name}_docs": F.count(F.when(split == name, 1)) for name in ("train", "val", "test")},
+    )
+    for name in ("train", "val", "test"):
+        report[f"{name}_docs"] = lambda key=f"{name}_docs": splits.metrics[key]
+    with_split = _persist(splits.frame)
     train = with_split.filter("split = 'train'").drop("split")
-    report["train_docs"] = train.count()
-    report["val_docs"] = with_split.filter("split = 'val'").count()
-    report["test_docs"] = with_split.filter("split = 'test'").count()
 
     if cfg.n_merges > 0:
         # Deterministic sample: rank by a salted hash of the doc id, not
@@ -371,9 +410,17 @@ def build_training_corpus(
     else:
         train = train.withColumn("n_train_tokens", F.col("n_tokens"))
 
-    report["train_tokens"] = int(
-        train.agg(F.coalesce(F.sum("n_train_tokens"), F.lit(0))).first()[0]
+    # one observation below the shard write's exchange: packing keeps
+    # every train row, so its token sum is the train split's
+    packed = observe(
+        pack_sequences(train, "n_train_tokens", id_col, seq_len=cfg.seq_len),
+        "packed",
+        train_tokens=F.coalesce(F.sum("n_train_tokens"), F.lit(0)),
+        # an empty train split (everything filtered/deduped away)
+        # reports n_sequences = 0
+        n_sequences=F.coalesce(F.max("last_seq") + 1, F.lit(0)),
     )
+    report["train_tokens"] = lambda: int(packed.metrics["train_tokens"])
     if cfg.bucket_report:
         # padding-waste ledger (operators/packing.length_buckets): what
         # the same train split would cost under length-bucketed dynamic
@@ -400,25 +447,17 @@ def build_training_corpus(
         report["padding_waste_tokens"] = sum(
             v["pad_tokens"] for v in report["length_buckets"].values()
         )
-    # persisted: both the n_sequences report action and the shard write
-    # consume packed — without the cache the second consumer re-runs the
-    # whole two-phase prefix sum over the train split
-    packed = _stage(pack_sequences(train, "n_train_tokens", id_col, seq_len=cfg.seq_len))
-    # coalesce: an empty train split (everything filtered/deduped away)
-    # reports n_sequences = 0 instead of crashing on None + 1
-    report["n_sequences"] = packed.agg(
-        F.coalesce(F.max("last_seq") + 1, F.lit(0)).alias("n")
-    ).first()["n"]
+    report["n_sequences"] = lambda: packed.metrics["n_sequences"]
 
     write_training_shards(
-        packed, os.path.join(out_dir, "train"), id_col,
+        packed.frame, os.path.join(out_dir, "train"), id_col,
         n_shards=cfg.n_shards, salt=cfg.shuffle_salt, fmt=cfg.shard_format,
     )
     for name in ("val", "test"):
         with_split.filter(F.col("split") == name).drop("split").write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, name))
-    with_split.unpersist()
+    report = {k: v() if callable(v) else v for k, v in report.items()}
     for df in _cached:
         df.unpersist()
     report["n_shards"] = cfg.n_shards

@@ -907,6 +907,30 @@ def test_bpe_learn_matches_python_reference(spark):
         assert got == want, (got, want)
 
 
+def test_bpe_learn_checkpoints_no_state_after_last_merge(spark):
+    """The state after the last merge is not checkpointed: no query
+    reads it.  So the first merge adds only its top-pair query's jobs to
+    the initial checkpoint, and the second adds those plus one job, the
+    checkpoint of the state it queries.  (Checkpointing after every
+    merge made both add the same.)"""
+    from mongo2mysql_spark.operators.bpe import learn_merges, word_freq_table
+
+    wc = {"low": 5, "lower": 2, "newest": 6, "widest": 3}
+    text = " ".join(w for w, n in sorted(wc.items()) for _ in range(n))
+    words = word_freq_table(spark.createDataFrame([(1, text)], "doc_id long, text string"))
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (0, 1, 2):
+        sc.setJobGroup(f"bpe-{n}", "learn merges")
+        try:
+            got = learn_merges(words, n_merges=n)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got == _bpe_ref(wc, n)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(f"bpe-{n}"))
+    assert jobs[2] - jobs[1] == jobs[1] - jobs[0] + 1, jobs
+
+
 def test_bpe_apply_consistent_with_training_fuse(spark):
     """Encoding the training text with the learned merges yields symbol
     streams whose concatenation restores the original words exactly
@@ -1435,9 +1459,10 @@ def test_bpe_sample_partition_independent(spark, tmp_path):
 
 
 def test_corpus_builder_stage_counts_single_scan(spark, tmp_path):
-    """Stage telemetry counts run against persisted stage results, not
-    re-executions of the whole upstream chain: the raw input is scanned
-    a bounded number of times (count + cache fill), not once per stage."""
+    """Stage counts ride the actions that run anyway (Observations), so
+    the raw input is scanned exactly once, by the fill of the first
+    cache: no count pass of its own, and no re-execution of the
+    upstream chain per stage."""
     from pyspark.sql import functions as F
 
     from mongo2mysql_spark.pipelines import CorpusConfig, build_training_corpus
@@ -1458,10 +1483,9 @@ def test_corpus_builder_stage_counts_single_scan(spark, tmp_path):
         tapped, str(tmp_path / "out"),
         config=CorpusConfig(seq_len=256, n_shards=2),
     )
-    # input_docs count (1x) + persisted-stage cache fill (1x); every later
-    # stage count reads a cache.  Without per-stage persistence this is
-    # 5-6x.  Allow 3x headroom for speculative/AQE re-execution.
-    assert scans.value <= 3 * n_docs, (
+    # a count per stage over persisted stages scanned it twice (the
+    # input_docs count + the cache fill); without the caches, 5-6x
+    assert scans.value == n_docs, (
         f"raw input scanned {scans.value / n_docs:.1f}x — stage counts are "
         "re-executing the upstream chain"
     )

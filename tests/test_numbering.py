@@ -49,6 +49,18 @@ def _rows(spark, n, n_groups=3):
     )
 
 
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"count-{id(fn)}"
+    sc.setJobGroup(group, "jobs of one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _numbered(df, order, group=None):
     num = Numbering(df, order, partition_cols=[group] if group else None)
     try:
@@ -69,7 +81,14 @@ def _reference(df, order, group=None):
 @pytest.mark.parametrize("partitions", ["1", "7"])
 @pytest.mark.parametrize("aqe", ["true", "false"])
 def test_numbering_matches_window_under_partitioning(spark, partitions, aqe):
+    """Both paths equal the window: the range-partitioned one for a
+    multi-partition input, and the in-place one for an input already in
+    one partition, whose aggregation needs no exchange.  Building a
+    Numbering runs no job on either path, also over an input whose plan
+    holds a shuffle (counting its partitions would run that shuffle's
+    stages under AQE)."""
     df = _rows(spark, 600)
+    one = df.coalesce(1)
     with _partitioning(spark, partitions, aqe):
         for group in ("_table", None):
             got, runs = _numbered(df, ["_id"], group)
@@ -77,6 +96,18 @@ def test_numbering_matches_window_under_partitioning(spark, partitions, aqe):
             if group and partitions == "7" and aqe == "false":
                 # the groups really do span several partitions here
                 assert sum(1 for r in runs if r["_table"] == "t0") > 1
+            got, runs = _numbered(one, ["_id"], group)
+            assert got == _reference(df, ["_id"], group)
+            assert {r["__pid"] for r in runs} == {0}
+        for src in (one, df.repartition(5), df.groupBy("_table", "_id").agg(F.max("v"))):
+            num, jobs = _jobs(spark, lambda: Numbering(src, ["_id"], partition_cols=["_table"]))
+            try:
+                assert jobs == 0
+                agg = num.cached.groupBy("_table", "__pid").count()
+                plan = agg._jdf.queryExecution().executedPlan().toString()
+                assert ("Exchange" in plan) == (src is not one), plan
+            finally:
+                num.unpersist()
 
 
 def test_numbering_empty_and_single_group(spark):
@@ -133,10 +164,15 @@ def test_numbering_statistics_match_per_table_inference(spark):
             child.unpersist()
 
 
+JOB_BUDGET = 7
+
+
 def test_sync_call_job_budget(spark, tmp_path):
     """One 50-document catch-up call of a one-spill collection runs at
-    most 18 Spark jobs: the batch is read once, and each table family
-    is materialized and aggregated once."""
+    most JOB_BUDGET Spark jobs: the batch's schema inference, then per
+    table family, already in one partition and so numbered with no
+    range exchange, its cache fill and its aggregation, then one write
+    per table."""
     from mongo2mysql_spark.sync import incremental_export
     from tests.test_sinks_sources import _FakeCollection
 
@@ -147,15 +183,9 @@ def test_sync_call_job_budget(spark, tmp_path):
     ]
     factory = functools.partial(sqlite3.connect, str(tmp_path / "sink.db"))
     porter = SparkPorter(spark, PorterConfig())
-    sc = spark.sparkContext
-    sc.setJobGroup("sync-budget", "one sync call")
-    try:
-        result = incremental_export(
-            spark, _FakeCollection(docs), "orders", porter, factory, batch_size=50
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("sync-budget")
+    result, jobs = _jobs(spark, lambda: incremental_export(
+        spark, _FakeCollection(docs), "orders", porter, factory, batch_size=50
+    ))
     assert result["docs"] == 50 and result["tables"] == {"orders", "orders__items"}
     con = sqlite3.connect(str(tmp_path / "sink.db"))
     try:
@@ -164,7 +194,7 @@ def test_sync_call_job_budget(spark, tmp_path):
         )
     finally:
         con.close()
-    assert len(jobs) <= 18, len(jobs)
+    assert jobs <= JOB_BUDGET, jobs
 
 
 ROUTES = (  # (key template, destination table, share of events in 1000)
@@ -176,12 +206,12 @@ ROUTES = (  # (key template, destination table, share of events in 1000)
 )
 
 
-def _mongo_frames(spark, tmp_path, n_docs):
+def _mongo_frames(spark, tmp_path, n_docs, n_files):
     """Events whose Zipfian ``_key`` routes to the 5 ROUTES tables and
-    documents with ``tags`` arrays, each written as ONE parquet file
-    (one scan partition, as a single exported collection file is)
-    with high-entropy text, so the row shuffle outweighs the count
-    shuffle."""
+    documents with ``tags`` arrays, each written as ``n_files`` parquet
+    files (one file reads as one scan partition, as a single exported
+    collection file does) with high-entropy text, so the row shuffle
+    outweighs the count shuffle."""
     bucket = F.pmod(F.hash("id"), F.lit(1000))
     key, hi = None, 0
     for template, _, share in ROUTES:
@@ -206,7 +236,7 @@ def _mongo_frames(spark, tmp_path, n_docs):
     frames = {}
     for name, df in (("events", events), ("documents", documents)):
         path = str(tmp_path / name)
-        df.coalesce(1).write.parquet(path)
+        df.repartition(n_files).write.parquet(path)
         frames[name] = spark.read.parquet(path)
     routed = events.groupBy(F.regexp_extract("_key", r"^(\w+):", 1).alias("p")).count()
     prefix_table = {t.split(":")[0]: table for t, table, _ in ROUTES}
@@ -217,14 +247,16 @@ def _mongo_frames(spark, tmp_path, n_docs):
 
 
 @pytest.mark.slow
-def test_bulk_export_keeps_every_row(spark, tmp_path):
+@pytest.mark.parametrize("n_files", [1, 3])
+def test_bulk_export_keeps_every_row(spark, tmp_path, n_files):
     """At 12,500 documents and 37,500 events every destination table
     keeps all its rows and ``_num`` runs exactly 1..n.  This is the
     smallest size tried at which a numbering that takes its counts
     from a second execution of the range exchange lost rows of both
     collections under AQE (half the documents, and whole routed
-    tables); at 7,500 documents it lost none."""
-    frames, expected = _mongo_frames(spark, tmp_path, 12_500)
+    tables); at 7,500 documents it lost none.  One file per collection
+    takes the in-place path; three files take the range exchange."""
+    frames, expected = _mongo_frames(spark, tmp_path, 12_500, n_files)
     exports = SparkPorter(spark, PorterConfig()).run_to_frames(frames)
     got = {}
     try:

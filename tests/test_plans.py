@@ -845,3 +845,32 @@ def test_centroid_assignment_is_aggregate_not_window(spark):
     # query-side nprobe>1 keeps the ranked-window contract (bounded side)
     probes = assign_centroids(emb.limit(20), cents, "vec_id", "embedding", nprobe=3)
     assert "_probe" in probes.columns
+
+
+# Lazy checkpoints left in the package, per module.  A lazy checkpoint
+# lets a thread Spark owns (a broadcast exchange, an AQE stage) do the
+# checkpoint, the setting of a driver-JVM deadlock seen in
+# events_sessionize.  The list may only shrink: a module that drops a
+# site lowers its count here, and no module gains one.
+LAZY_CHECKPOINTS = {
+    "operators/behavior.py": 2,
+    "operators/forecast.py": 1,
+    "operators/labelprop.py": 1,
+    "operators/lm.py": 1,
+    "operators/selection.py": 4,
+}
+
+
+def test_lazy_checkpoints_only_shrink():
+    import ast
+    from collections import Counter
+
+    found = Counter(
+        str(path)
+        for path, node in _package_calls({"localCheckpoint"})
+        if any(
+            k.arg == "eager" and isinstance(k.value, ast.Constant) and k.value.value is False
+            for k in node.keywords
+        )
+    )
+    assert dict(found) == LAZY_CHECKPOINTS
