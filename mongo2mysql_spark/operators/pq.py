@@ -45,28 +45,9 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from mongo2mysql_spark.operators.skew import salted_topk_per_group
+from mongo2mysql_spark.session import local_frame
 
 _DEC = "decimal(30,12)"
-
-
-def _local_frame(
-    spark: SparkSession, rows: list[tuple], schema: T.StructType
-) -> DataFrame:
-    """Driver-built rows (query distance tables, cell centroids) as a
-    ``LocalRelation``: the rows cross to the JVM as one Arrow table, so
-    no execution of the frame runs a Python-worker task —
-    ``createDataFrame(list)`` plans a PythonRDD that every execution
-    re-runs.  Values keep their exact bits: doubles are doubles on
-    both sides, and floats that came out of Spark are float32 already.
-    Empty ``rows`` give an empty frame of ``schema``."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    names = schema.names
-    table = pa.Table.from_pylist(
-        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
-    return spark.createDataFrame(table, schema)
 
 
 def _l2sq_seq(a: Column, b: Column) -> Column:
@@ -838,7 +819,7 @@ def _query_dist_frame(
                 row.append(acc)
             dt.append(row)
         tabs.append((int(r[id_col]), dt))
-    return _local_frame(
+    return local_frame(
         queries.sparkSession,
         tabs,
         T.StructType(
@@ -1069,7 +1050,7 @@ def _residual_frame(
     assigned = assign_centroids(
         vectors.select(id_col, vec_col), centroids, id_col, vec_col
     )
-    cents_df = _local_frame(
+    cents_df = local_frame(
         vectors.sparkSession,
         sorted(cells.items()),
         T.StructType(
@@ -1210,7 +1191,7 @@ def pq_ivfadc_topk(
     that cell (q−c vs the residual codebook) — driver Python over the
     bounded queries×nprobe set, same contract as
     ``_query_dist_frame``.  The tables and the query vectors enter the
-    plan as Arrow-built local frames (:func:`_local_frame`), so no
+    plan as Arrow-built local frames (``session.local_frame``), so no
     Python-worker task runs and ``queries`` is read once.  The scan
     side is identical to :func:`pq_ivf_topk`: broadcast (query, cell,
     table) rows against the checkpointed code table, ADC in decimal,
@@ -1262,7 +1243,7 @@ def pq_ivfadc_topk(
                 row.append(acc)
             dt.append(row)
         qside_rows.append((qid, cid, dt))
-    qside = _local_frame(
+    qside = local_frame(
         spark,
         qside_rows,
         T.StructType(
@@ -1278,7 +1259,7 @@ def pq_ivfadc_topk(
     # the raw query vectors, in the queries' own element type, so the
     # re-rank cosine folds exactly the values a scan of ``queries``
     # would have joined
-    qv = _local_frame(
+    qv = local_frame(
         spark,
         list(qraw.items()),
         T.StructType(

@@ -19,7 +19,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def build_session(
@@ -50,3 +51,23 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """Driver-built rows (query distance tables, cell centroids, a sync
+    batch's JSON lines) as a ``LocalRelation``: the rows cross to the
+    JVM as one Arrow table, so no execution of the frame runs a
+    Python-worker task — ``createDataFrame(list)`` plans a PythonRDD
+    that every execution re-runs.  Values keep their exact bits:
+    doubles are doubles on both sides, and floats that came out of
+    Spark are float32 already.  Empty ``rows`` give an empty frame of
+    ``schema``.  A scan of the frame spreads it over up to
+    ``defaultParallelism`` partitions."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

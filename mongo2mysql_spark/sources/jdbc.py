@@ -4,17 +4,25 @@ The reference inserts one row at a time with REPLACE semantics
 (delete+insert on PK conflict, Porter.php:207/266) — idempotent per
 ``_id`` across reruns.  Spark's JDBC writer has no native upsert, so:
 
-- ``write_upsert``: ``df.foreachPartition`` issuing batched
-  ``REPLACE INTO`` (or ``INSERT ... ON DUPLICATE KEY UPDATE``) over a
-  DBAPI connection factory.  REPLACE-on-PK makes Spark task *retries*
-  idempotent too — the same guarantee the reference gets, which is what
-  makes a side-effecting sink safe under speculative execution.
+- ``write_upsert``: batched ``REPLACE INTO`` (or ``INSERT ... ON
+  DUPLICATE KEY UPDATE``) over a DBAPI connection factory, one
+  connection per partition via ``df.foreachPartition``.  REPLACE-on-PK
+  makes Spark task *retries* idempotent too — the same guarantee the
+  reference gets, which is what makes a side-effecting sink safe under
+  speculative execution.  With ``max_connections=1`` (the reference's
+  one writer, and the ``cli --sqlite`` and sync sink) the driver
+  writes through its one connection instead, streaming the frame's
+  partitions to itself one at a time: the factory is called on the
+  driver and need not be picklable, and no Python-worker task runs.
+  Each partition reaches the driver whole, as one task result, so the
+  largest partition must fit under ``spark.driver.maxResultSize`` and
+  in the driver's heap.
 - ``write_append`` / ``write_overwrite``: the stock Spark JDBC writer
   (``truncate`` option for --dataonly's truncate-then-load,
   Porter.php:174-178) — used for fresh loads where append suffices.
 
-Scale levers: ``repartition(n)`` before writing bounds the connection
-count to n; ``batch_size`` amortizes round-trips (vs. the reference's
+Scale levers: ``max_connections=n`` bounds the connection count to n;
+``batch_size`` amortizes round-trips (vs. the reference's
 one INSERT per row — its README's own bottleneck, README.md:63-64).
 
 No MySQL server or JDBC driver exists in the test container, so tests
@@ -24,7 +32,8 @@ and statement generation is unit-tested as strings.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+import itertools
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 
@@ -78,6 +87,24 @@ def stringify_temporals(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
+def _write_batches(conn, sql: str, rows: Iterable, batch_size: int) -> None:
+    """The sink's wire protocol over one open connection: ``sql``
+    executed over ``batch_size``-row ``executemany`` batches, the
+    remainder flushed last, one commit per batch (crash granularity =
+    one batch)."""
+    cur = conn.cursor()
+    batch = []
+    for row in rows:
+        batch.append(tuple(row))
+        if len(batch) >= batch_size:
+            cur.executemany(sql, batch)
+            conn.commit()
+            batch = []
+    if batch:
+        cur.executemany(sql, batch)
+        conn.commit()
+
+
 def write_upsert(
     df: DataFrame,
     table: str,
@@ -87,35 +114,47 @@ def write_upsert(
     paramstyle: str = "qmark",
     max_connections: int | None = None,
 ) -> None:
-    """Distributed batched upsert via foreachPartition.
+    """Batched upsert over DBAPI connections from ``connection_factory``,
+    ``batch_size``-row ``executemany`` batches and one commit per batch.
 
-    ``connection_factory`` must be picklable (module-level function or
-    functools.partial over picklables); each partition opens one
-    connection and writes ``batch_size``-row executemany batches.
+    ``max_connections=1``: the driver opens the one connection and
+    streams the frame's partitions to itself with ``toLocalIterator``,
+    and no Python-worker task runs.  The factory is called on the
+    driver and need not be picklable.  A partition is computed only
+    when the write asks for it, so a write that stops early leaves no
+    job running.  Each partition arrives whole, as one task result:
+    the largest partition (pickled) must fit under
+    ``spark.driver.maxResultSize`` (1g unless configured) and in the
+    driver's heap.  A collection read as one split is one partition
+    per table, and a child table exploded from arrays can outgrow its
+    split.
+
+    Otherwise ``foreachPartition``: each partition (at most
+    ``max_connections`` after a ``coalesce``) opens one connection on
+    an executor, so ``connection_factory`` must be picklable (a
+    module-level function or functools.partial over picklables).
     """
     columns = list(df.columns)
     sql = upsert_sql(table, columns, mode=mode, paramstyle=paramstyle)
-    if max_connections is not None:
-        df = df.coalesce(max_connections)
+    if max_connections != 1:
+        if max_connections is not None:
+            df = df.coalesce(max_connections)
 
-    def _write_partition(rows: Iterator) -> None:
-        conn = connection_factory()
-        try:
-            cur = conn.cursor()
-            batch = []
-            for row in rows:
-                batch.append(tuple(row))
-                if len(batch) >= batch_size:
-                    cur.executemany(sql, batch)
-                    conn.commit()
-                    batch = []
-            if batch:
-                cur.executemany(sql, batch)
-                conn.commit()
-        finally:
-            conn.close()
+        def _write_partition(rows: Iterator) -> None:
+            conn = connection_factory()
+            try:
+                _write_batches(conn, sql, rows, batch_size)
+            finally:
+                conn.close()
 
-    df.foreachPartition(_write_partition)
+        df.foreachPartition(_write_partition)
+        return
+
+    conn = connection_factory()
+    try:
+        _write_batches(conn, sql, df.toLocalIterator(), batch_size)
+    finally:
+        conn.close()
 
 
 def write_append(df: DataFrame, url: str, table: str, properties: dict[str, str],
@@ -304,25 +343,15 @@ def write_upsert_partitioned(
         return (frag, tuple(row[c] for c in columns))
 
     def _write_partition(pairs: Iterator) -> None:
-        conn = None
+        first = next(pairs, None)
+        if first is None:  # empty tasks open no connection
+            return
+        conn = connection_factory()
         try:
-            batch = []
-            cur = None
-            for _frag, vals in pairs:
-                if conn is None:  # connect lazily: empty tasks open nothing
-                    conn = connection_factory()
-                    cur = conn.cursor()
-                batch.append(vals)
-                if len(batch) >= batch_size:
-                    cur.executemany(sql, batch)
-                    conn.commit()
-                    batch = []
-            if batch:
-                cur.executemany(sql, batch)
-                conn.commit()
+            rows = (vals for _frag, vals in itertools.chain([first], pairs))
+            _write_batches(conn, sql, rows, batch_size)
         finally:
-            if conn is not None:
-                conn.close()
+            conn.close()
 
     try:
         (

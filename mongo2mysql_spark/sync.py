@@ -36,9 +36,11 @@ import json
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from mongo2mysql_spark.plans.ddl import quote_ident
 from mongo2mysql_spark.porter import SparkPorter
+from mongo2mysql_spark.session import local_frame
 from mongo2mysql_spark.sources.jdbc import execute_ddl, write_upsert
 from mongo2mysql_spark.sources.mongodb import iter_collection_batches
 
@@ -67,14 +69,23 @@ def sink_high_water(
         conn.close()
 
 
+_JSON_LINES = T.StructType([T.StructField("value", T.StringType(), False)])
+
+
 def _default_batch_df(spark: SparkSession, batch: list[dict]) -> DataFrame:
     """Documents → DataFrame through the JSON reader (the same dynamic
     schema-per-batch path the porter's schemaless handling expects).
-    One partition: a batch is small, and each Python-worker task costs
-    more than the rows it carries."""
-    return spark.read.json(
-        spark.sparkContext.parallelize([json.dumps(d) for d in batch], 1)
+    The JSON lines are a local relation read as a ``Dataset[String]``,
+    so schema inference and every later read of the batch run in the
+    JVM, with no Python-worker task.  One partition: a batch is small,
+    and a one-partition batch is numbered without a range exchange."""
+    lines = local_frame(spark, [(json.dumps(d),) for d in batch], _JSON_LINES)
+    # PySpark's read.json takes only paths or RDDs, not a Dataset[String],
+    # so the JVM reader is called directly
+    jlines = getattr(lines.coalesce(1)._jdf, "as")(
+        spark._jvm.org.apache.spark.sql.Encoders.STRING()
     )
+    return DataFrame(spark._jsparkSession.read().json(jlines), spark)
 
 
 def incremental_export(
@@ -104,8 +115,9 @@ def incremental_export(
 
     Each batch frame is persisted once and released after the batch's
     writes, so the porter's table families read the documents from
-    the cache instead of re-running the batch's source (for the
-    default reader, a Python RDD) once per family.
+    the cache instead of re-running the batch's source once per
+    family.  Every table is written through one driver-side
+    connection (``write_upsert(..., max_connections=1)``).
     """
     hw = sink_high_water(connection_factory, collection_name, id_col)
     make_df = batch_df or (lambda b: _default_batch_df(spark, b))

@@ -5,8 +5,9 @@ It must equal the window reference ``add_num`` whatever the partitioning
 (shuffle-partition count, AQE on or off, groups spread over several
 partitions), its merged per-partition statistics must equal per-table
 schema inference, a 50-document sync call must stay within its Spark
-job budget, and a bulk export must keep every row at sizes where AQE
-used to re-partition the counts apart from the rows.
+job budget and run no Python-worker task, and a bulk export must keep
+every row at sizes where AQE used to re-partition the counts apart
+from the rows.
 """
 
 from __future__ import annotations
@@ -167,34 +168,101 @@ def test_numbering_statistics_match_per_table_inference(spark):
 JOB_BUDGET = 7
 
 
+# 50 orders with one spill: 75 ``items`` rows over 38 of the orders
+SYNC_DOCS = [
+    {"_id": i, "status": "open" if i % 3 else "done",
+     "items": [{"sku": f"s{i}-{j}", "qty": j} for j in range(i % 4)]}
+    for i in range(1, 51)
+]
+
+
+def _sync_into_sqlite(spark, tmp_path):
+    """One 50-document ``incremental_export`` call into a fresh sqlite
+    file: its result and the rows that arrived, per table."""
+    from mongo2mysql_spark.sync import incremental_export
+    from tests.test_sinks_sources import _FakeCollection
+
+    db = str(tmp_path / "sink.db")
+    result = incremental_export(
+        spark, _FakeCollection(SYNC_DOCS), "orders", SparkPorter(spark, PorterConfig()),
+        functools.partial(sqlite3.connect, db), batch_size=50,
+    )
+    con = sqlite3.connect(db)
+    try:
+        parents = con.execute("SELECT _id, status FROM orders ORDER BY _id").fetchall()
+        items = con.execute(
+            "SELECT _parentid, _index, sku, qty FROM orders__items ORDER BY _parentid, _index"
+        ).fetchall()
+    finally:
+        con.close()
+    return result, parents, items
+
+
+def _assert_synced(result, parents, items):
+    assert result["docs"] == 50 and result["tables"] == {"orders", "orders__items"}
+    assert parents == [(d["_id"], d["status"]) for d in SYNC_DOCS]
+    assert items == [
+        (d["_id"], j, it["sku"], it["qty"]) for d in SYNC_DOCS for j, it in enumerate(d["items"])
+    ]
+
+
 def test_sync_call_job_budget(spark, tmp_path):
     """One 50-document catch-up call of a one-spill collection runs at
     most JOB_BUDGET Spark jobs: the batch's schema inference, then per
     table family, already in one partition and so numbered with no
     range exchange, its cache fill and its aggregation, then one write
     per table."""
-    from mongo2mysql_spark.sync import incremental_export
-    from tests.test_sinks_sources import _FakeCollection
-
-    docs = [
-        {"_id": i, "status": "open" if i % 3 else "done",
-         "items": [{"sku": f"s{i}-{j}", "qty": j} for j in range(i % 4)]}
-        for i in range(1, 51)
-    ]
-    factory = functools.partial(sqlite3.connect, str(tmp_path / "sink.db"))
-    porter = SparkPorter(spark, PorterConfig())
-    result, jobs = _jobs(spark, lambda: incremental_export(
-        spark, _FakeCollection(docs), "orders", porter, factory, batch_size=50
-    ))
-    assert result["docs"] == 50 and result["tables"] == {"orders", "orders__items"}
-    con = sqlite3.connect(str(tmp_path / "sink.db"))
-    try:
-        assert con.execute("SELECT COUNT(*) FROM orders__items").fetchone()[0] == sum(
-            len(d["items"]) for d in docs
-        )
-    finally:
-        con.close()
+    (result, parents, items), jobs = _jobs(spark, lambda: _sync_into_sqlite(spark, tmp_path))
+    _assert_synced(result, parents, items)
     assert jobs <= JOB_BUDGET, jobs
+
+
+def test_sync_call_runs_no_python_worker_task(spark, tmp_path, monkeypatch):
+    """A sync call reads its batch and writes its tables without a
+    Python-worker task: with ``parallelize`` (a Python RDD source) and
+    ``foreachPartition`` (an executor-side write) both raising, every
+    parent and item row still arrives."""
+    from pyspark import SparkContext
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("Python-worker path on the sync path")
+
+    monkeypatch.setattr(SparkContext, "parallelize", forbidden)
+    monkeypatch.setattr(type(spark.range(1)), "foreachPartition", forbidden)
+    _assert_synced(*_sync_into_sqlite(spark, tmp_path))
+
+
+# documents whose JSON schema exercises inference: nested structs,
+# arrays of structs, keys missing in some documents, int in one and
+# float in another, an all-null field, unicode, ints above 2**53 and
+# key names that need quoting
+READER_DOCS = [
+    {"_id": 1, "doc-id": "a", "n": 1, "big": 2**53 + 1, "none": None,
+     "meta": {"lang": "en", "tags": ["x", "y"]},
+     "items": [{"sku": "k1", "qty": 1}, {"sku": "k2"}], "na`me": "tick"},
+    {"_id": 2, "doc-id": "b", "n": 2.5, "big": 2**62, "none": None,
+     "meta": {"lang": "日本語", "score": 0.5}, "items": [], "text": "héllo 🌍"},
+    {"_id": 3, "n": -7, "none": None, "meta": {}, "items": [{"qty": 3, "extra": {"d": True}}]},
+]
+
+
+def test_default_batch_reader_matches_python_rdd_reader(spark):
+    """``sync._default_batch_df`` gives the schema (field order and
+    types) and rows of the JSON reader over a ``parallelize``d Python
+    RDD, in one partition and with no PythonRDD in its lineage."""
+    import json
+
+    from mongo2mysql_spark.sync import _default_batch_df
+
+    oracle = spark.read.json(
+        spark.sparkContext.parallelize([json.dumps(d) for d in READER_DOCS], 1)
+    )
+    got = _default_batch_df(spark, READER_DOCS)
+    assert got.schema == oracle.schema, (got.schema, oracle.schema)
+    assert got.collect() == oracle.collect()
+    assert got.rdd.getNumPartitions() == 1
+    lineage = got._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
 
 
 ROUTES = (  # (key template, destination table, share of events in 1000)

@@ -883,7 +883,7 @@ def test_local_frame_round_trips_without_python_workers(spark):
     Python-worker task (no PythonRDD in its RDD lineage)."""
     from pyspark.sql import types as T
 
-    from mongo2mysql_spark.operators.pq import _local_frame
+    from mongo2mysql_spark.session import local_frame
 
     schema = T.StructType(
         [
@@ -902,7 +902,7 @@ def test_local_frame_round_trips_without_python_workers(spark):
         )
         for i in range(3)
     ]
-    df = _local_frame(spark, rows, schema)
+    df = local_frame(spark, rows, schema)
     assert df.schema == schema
     got = sorted((r.query_id, r.dt, r.qv) for r in df.collect())
     assert got == rows
@@ -910,7 +910,7 @@ def test_local_frame_round_trips_without_python_workers(spark):
     lineage = df._jdf.queryExecution().toRdd().toDebugString()
     assert "PythonRDD" not in lineage, lineage
 
-    empty = _local_frame(spark, [], schema)
+    empty = local_frame(spark, [], schema)
     assert empty.schema == schema
     assert empty.count() == 0
 

@@ -315,16 +315,25 @@ def test_upsert_statement_text_and_batch_boundaries():
 
     from mongo2mysql_spark.sources.jdbc import write_upsert as wu
 
+    rows = [(f"{i}", i) for i in range(10)]
+
     class FakeDF:
         columns = ["_id", "v"]
 
         def foreachPartition(self, fn):
-            fn(iter([(f"{i}", i) for i in range(10)]))
+            fn(iter(rows))
 
-    wu(FakeDF(), "t", Conn, batch_size=4)
-    assert [n for _, n in calls] == [4, 4, 2]
-    assert {s for s, _ in calls} == {"REPLACE INTO `t` (`_id`, `v`) VALUES (?, ?)"}
-    assert commits == [1, 2, 3]  # one commit after each flush
+        def toLocalIterator(self):
+            return iter(rows)
+
+    # executor-side partitions, then the driver-side one-connection path
+    for max_connections in (None, 1):
+        calls.clear()
+        commits.clear()
+        wu(FakeDF(), "t", Conn, batch_size=4, max_connections=max_connections)
+        assert [n for _, n in calls] == [4, 4, 2]
+        assert {s for s, _ in calls} == {"REPLACE INTO `t` (`_id`, `v`) VALUES (?, ?)"}
+        assert commits == [1, 2, 3]  # one commit after each flush
 
 
 def test_mongodb_reader_option_matrix():
@@ -408,6 +417,96 @@ def test_upsert_max_connections_bounds_fanin(spark, tmp_path):
         0,
         99,
     )
+    con.close()
+
+
+def _sqlite_table(path, ddl):
+    con = sqlite3.connect(path)
+    con.execute(ddl)
+    con.commit()
+    con.close()
+
+
+def test_upsert_one_connection_writes_every_partition(spark, tmp_path):
+    """max_connections=1 writes all partitions of a 3-partition frame
+    through one connection, and an empty frame writes nothing."""
+    import functools
+
+    db = str(tmp_path / "t.db")
+    marker = tmp_path / "conns"
+    marker.mkdir()
+    _sqlite_table(db, "CREATE TABLE t (id INTEGER PRIMARY KEY, v TEXT)")
+    factory = functools.partial(_counting_factory, db, str(marker))
+    df = spark.range(0, 100, 1, 3).selectExpr("id", "CAST(id AS STRING) AS v")
+    write_upsert(df, "t", factory, batch_size=7, max_connections=1)
+    assert len(os.listdir(marker)) == 1
+    con = sqlite3.connect(db)
+    assert con.execute("SELECT count(*), sum(id), min(v), max(v) FROM t").fetchone() == (
+        100, 4950, "0", "99",
+    )
+    con.close()
+
+    empty = df.where("id < 0")
+    write_upsert(empty, "t", factory, batch_size=7, max_connections=1)
+    con = sqlite3.connect(db)
+    assert con.execute("SELECT count(*) FROM t").fetchone()[0] == 100
+    con.close()
+
+
+class _StatementFailed(Exception):
+    pass
+
+
+def test_upsert_one_connection_failure_mid_stream(spark, tmp_path):
+    """A statement that fails mid-stream on the one-connection path
+    raises its own exception (not a Py4J wrapper), keeps the committed
+    batches, closes the connection and leaves no job running: the next
+    partition is never computed, let alone prefetched."""
+    db = str(tmp_path / "t.db")
+    _sqlite_table(db, "CREATE TABLE t (id INTEGER PRIMARY KEY, s TEXT)")
+    opened = []
+
+    class Cur:
+        def __init__(self, cur):
+            self._cur, self._n = cur, 0
+
+        def executemany(self, sql, batch):
+            self._n += 1
+            if self._n == 3:
+                raise _StatementFailed("third batch")
+            return self._cur.executemany(sql, batch)
+
+    class Conn:
+        def __init__(self):
+            self._con, self.closed = sqlite3.connect(db), False
+            opened.append(self)
+
+        def cursor(self):
+            return Cur(self._con.cursor())
+
+        def commit(self):
+            self._con.commit()
+
+        def close(self):
+            self.closed = True
+            self._con.close()
+
+    # partition 0 is fast; every row of partitions 1 and 2 sleeps, so a
+    # prefetch of partition 1 would still be running when the write fails
+    df = spark.range(0, 30, 1, 3).selectExpr(
+        "id",
+        "CASE WHEN id >= 10 THEN reflect('java.lang.Thread', 'sleep', CAST(200 AS BIGINT))"
+        " END AS s",
+    )
+    with pytest.raises(_StatementFailed) as err:
+        write_upsert(df, "t", Conn, batch_size=4, max_connections=1)  # a closure: no pickling
+    assert err.type is _StatementFailed
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getActiveJobsIds() == []
+    assert len(opened) == 1 and opened[0].closed
+    con = sqlite3.connect(db)
+    assert con.execute("SELECT count(*), max(id) FROM t").fetchone() == (8, 7)
     con.close()
 
 
