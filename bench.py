@@ -431,8 +431,20 @@ def pq_recall(spark, sf_dir: str, k: int = 10) -> dict[str, float]:
     return out
 
 
+def default_driver_memory() -> str:
+    """The driver heap when ``$SPARK_DRIVER_MEMORY`` is unset: 32g, or
+    half the box's memory (rounded up to a GiB) on a box with less than
+    64 GB.  The driver JVM's resident size runs past its heap (off-heap
+    buffers, metaspace, code cache), and on a 15 GB box a 32g heap let
+    G1 grow the JVM until the kernel's OOM killer ended it mid-run."""
+    with open("/proc/meminfo") as fh:
+        kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    half_gib = -(-kib // (2 * 1024 * 1024))  # rounded up
+    return f"{min(32, half_gib)}g"
+
+
 def main() -> None:
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", default_driver_memory())
     # no console progress bars: the driver records a bounded TAIL of
     # stdout, and stage-progress \r-junk ahead of the final JSON line
     # eats the budget that line must fit in

@@ -441,7 +441,7 @@ def main(argv: list[str] | None = None) -> int:
             factory = functools.partial(_sqlite3.connect, args.sqlite)
 
             def sink(table, df, _f=factory):  # noqa: F811 - sqlite wins
-                write_upsert(
+                return write_upsert(
                     stringify_temporals(df), table, _f, mode="replace",
                     batch_size=500, max_connections=1,
                 )

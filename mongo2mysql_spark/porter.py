@@ -168,7 +168,9 @@ class SparkPorter:
         (e.g. a partial of sources.jdbc.write_upsert or a parquet
         writer); ``ddl_executor(statements)`` applies the schema pass;
         ``reporter`` (telemetry.ProgressReporter) emits per-table row
-        throughput collected DURING the sink action (A17).  Each
+        throughput collected DURING the sink action (A17): the count a
+        sink returns (``write_upsert``'s one-connection path counts the
+        rows it writes), else the Observation on the sink's action.  Each
         collection is exported, written and released before the next
         one starts, so only one collection's family caches are held at
         a time."""
@@ -182,9 +184,9 @@ class SparkPorter:
                     for t, tdf in export.tables.items():
                         if reporter is not None:
                             tdf = reporter.wrap(t, tdf)
-                        sink(t, tdf)
+                        rows = sink(t, tdf)
                         if reporter is not None:
-                            reporter.finish(t)
+                            reporter.finish(t, rows)
             finally:
                 export.unpersist()
         return exports

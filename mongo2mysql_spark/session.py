@@ -13,6 +13,26 @@ what we would ship to a 1000-executor cluster, minus the master URL:
   strings for dates (Porter.php:290-292), and the DuckDB oracle
   compares timestamps as UTC-naive.
 - Arrow enabled for the few Pandas-UDF extension operators.
+- A fixed JIT policy for the driver JVM (:data:`DRIVER_JIT_OPTIONS`):
+  HotSpot's tier-4 (C2) compile thresholds raised 10×, tiers 0–3 at
+  their JDK 17 defaults.  Every run of this engine is a short-lived
+  JVM (the CLI, a sync call, a benchmark, the test suite), and its
+  driver code is lukewarm: Catalyst planning, Scala collections and
+  py4j dispatch, each method run a few thousand times and then rarely
+  again.  Under the default thresholds the C2 compiler threads were the
+  largest CPU consumer of the process, and Spark's task metrics do not
+  count them (4 vCPUs, perfbench ``migrate``: 13–15 of 27–29 CPU-s of
+  the bulk export and 1.2–2.0 of 2.3–3.3 CPU-s of a warm sync call;
+  ``corpus_build``: 25–43 of 90–98 CPU-s of its bulk phases).  With
+  the raised thresholds such methods stay at C1 (a warm sync call then
+  spends 0.2–0.5 CPU-s in C2), while a per-row loop still crosses 400k
+  back-edges quickly and gets C2.  3× left most of the C2 time; 30×
+  doubled the executor threads' CPU in ``corpus_build``'s search
+  steps, whose hot loops then waited too long for C2.  Java 17 makes
+  all floating point strict (JEP 306), so C1 and C2 code give
+  bit-identical results.  The policy is driver-only: in local mode the
+  driver is the executor, but on a cluster the executor JVMs keep the
+  JDK defaults, because they run the long hot loops C2 pays for.
 """
 
 from __future__ import annotations
@@ -21,6 +41,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+# HotSpot tier-4 (C2) thresholds, 10× the JDK 17 defaults (5000 / 600
+# / 15000 / 40000); see the module docstring.  ``defaultJavaOptions``
+# is prepended to ``spark.driver.extraJavaOptions``, so a caller's
+# options still apply, and a later flag of theirs wins.
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def build_session(
@@ -45,6 +74,7 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

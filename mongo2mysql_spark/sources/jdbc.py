@@ -87,22 +87,26 @@ def stringify_temporals(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def _write_batches(conn, sql: str, rows: Iterable, batch_size: int) -> None:
+def _write_batches(conn, sql: str, rows: Iterable, batch_size: int) -> int:
     """The sink's wire protocol over one open connection: ``sql``
     executed over ``batch_size``-row ``executemany`` batches, the
     remainder flushed last, one commit per batch (crash granularity =
-    one batch)."""
+    one batch).  Returns the number of rows written."""
     cur = conn.cursor()
     batch = []
+    written = 0
     for row in rows:
         batch.append(tuple(row))
         if len(batch) >= batch_size:
             cur.executemany(sql, batch)
             conn.commit()
+            written += len(batch)
             batch = []
     if batch:
         cur.executemany(sql, batch)
         conn.commit()
+        written += len(batch)
+    return written
 
 
 def write_upsert(
@@ -113,13 +117,14 @@ def write_upsert(
     batch_size: int = 1000,
     paramstyle: str = "qmark",
     max_connections: int | None = None,
-) -> None:
+) -> int | None:
     """Batched upsert over DBAPI connections from ``connection_factory``,
     ``batch_size``-row ``executemany`` batches and one commit per batch.
 
     ``max_connections=1``: the driver opens the one connection and
     streams the frame's partitions to itself with ``toLocalIterator``,
-    and no Python-worker task runs.  The factory is called on the
+    and no Python-worker task runs.  Returns the number of rows
+    written, counted as they pass.  The factory is called on the
     driver and need not be picklable.  A partition is computed only
     when the write asks for it, so a write that stops early leaves no
     job running.  Each partition arrives whole, as one task result:
@@ -133,6 +138,7 @@ def write_upsert(
     ``max_connections`` after a ``coalesce``) opens one connection on
     an executor, so ``connection_factory`` must be picklable (a
     module-level function or functools.partial over picklables).
+    Returns None: no count comes back from the executors.
     """
     columns = list(df.columns)
     sql = upsert_sql(table, columns, mode=mode, paramstyle=paramstyle)
@@ -148,11 +154,11 @@ def write_upsert(
                 conn.close()
 
         df.foreachPartition(_write_partition)
-        return
+        return None
 
     conn = connection_factory()
     try:
-        _write_batches(conn, sql, df.toLocalIterator(), batch_size)
+        return _write_batches(conn, sql, df.toLocalIterator(), batch_size)
     finally:
         conn.close()
 

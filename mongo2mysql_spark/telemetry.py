@@ -95,9 +95,15 @@ class ProgressReporter:
     Usage::
 
         reporter = ProgressReporter()
-        df = reporter.wrap("docs", df)     # before the sink action
-        sink("docs", df)                   # any action (write/foreach)
-        progress = reporter.finish("docs") # after: rows + throughput
+        df = reporter.wrap("docs", df)            # before the sink action
+        rows = sink("docs", df)                   # any action (write/foreach)
+        progress = reporter.finish("docs", rows)  # after: rows + throughput
+
+    ``rows`` is the count the sink saw, if it counted them; ``None``
+    reads the Observation, which fires only on a SQL action that
+    computes the frame (a ``write`` or ``collect``, not
+    ``foreachPartition`` or ``toLocalIterator``; there the read falls
+    back to one aggregation over the frame).
 
     ``emit`` receives each finished :class:`TableProgress` line (default:
     stdout, like the reference's console progress).
@@ -114,10 +120,11 @@ class ProgressReporter:
         self._pending[table] = (observed, self._clock())
         return observed.frame
 
-    def finish(self, table: str) -> TableProgress:
+    def finish(self, table: str, rows: int | None = None) -> TableProgress:
         observed, t0 = self._pending.pop(table)
         seconds = max(self._clock() - t0, 1e-9)
-        rows = int(observed.metrics["rows"])
+        if rows is None:
+            rows = int(observed.metrics["rows"])
         progress = TableProgress(table, rows, seconds, rows / seconds)
         self.finished[table] = progress
         if self._emit:

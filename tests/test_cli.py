@@ -269,6 +269,51 @@ def test_cli_sqlite_partial_failure_converges(spark, tmp_path):
     assert renumbered, "partial-run rows were never overwritten"
 
 
+def test_cli_sqlite_progress_runs_no_job_per_table(spark, tmp_path, capsys):
+    """``--sqlite --progress``: each table's progress line carries the
+    row count the one-connection write counted as the rows passed, so
+    the progress lines run no job: not one aggregation per table after
+    its write.  The lines match the rows in sqlite."""
+    import re
+    import sqlite3
+
+    from pyspark.sql import Row
+
+    from mongo2mysql_spark import cli
+
+    src = tmp_path / "src"
+    spark.createDataFrame([
+        Row(_id=f"{i:024d}", title=f"t{i}", tags=[f"a{i}", f"b{i}"][: i % 3])
+        for i in range(40)
+    ]).coalesce(1).write.parquet(str(src / "journal.parquet"))
+    sc = spark.sparkContext
+
+    def run(db, *flags):
+        group = f"cli-{db.name}"
+        sc.setJobGroup(group, "one cli run")
+        try:
+            assert cli.main(["--source-dir", str(src), "--collections", "journal",
+                             "--sqlite", str(db), *flags]) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    with_progress = run(tmp_path / "progress.db", "--progress")
+    lines = dict(re.findall(r" \* (\S+): (\d+) rows in", capsys.readouterr().out))
+    without = run(tmp_path / "plain.db")
+
+    con = sqlite3.connect(tmp_path / "progress.db")
+    try:
+        in_db = {
+            t: str(con.execute(f'SELECT COUNT(*) FROM "{t}"').fetchone()[0])
+            for (t,) in con.execute("SELECT name FROM sqlite_master WHERE type='table'")
+        }
+    finally:
+        con.close()
+    assert len(in_db) >= 2 and lines == in_db  # parent + child table
+    assert with_progress == without, (with_progress, without)
+
+
 def test_cli_analyze_writes_joinable_stats(spark, tmp_path, capsys):
     """--analyze persists per-table key-histogram artifacts over a
     SHARED domain; estimates served from the stored parquet equal the

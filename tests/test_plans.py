@@ -757,6 +757,42 @@ def test_environment_reads_are_deployment_settings_only():
     assert not offenders, f"environment read outside {sorted(allowed)}: {offenders}"
 
 
+DRIVER_JIT_FLAGS = [
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=60000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+]
+
+
+def test_driver_jvm_runs_the_jit_policy(spark, monkeypatch):
+    """The driver JVM starts with the raised tier-4 (C2) thresholds of
+    ``session.build_session``, and a caller's
+    ``spark.driver.extraJavaOptions`` go to the JVM beside them, not in
+    their place.  The second half stubs ``getOrCreate`` to read the
+    builder's options, so no second JVM is launched."""
+    from pyspark.sql import SparkSession
+
+    from mongo2mysql_spark.session import build_session
+
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = list(mx.getRuntimeMXBean().getInputArguments())
+    assert [f for f in DRIVER_JIT_FLAGS if f not in args] == [], args
+
+    built = []
+
+    def get_or_create(builder):
+        built.append(dict(builder._options))
+        return spark
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    caller = "-XX:-UsePerfData -Djava.io.tmpdir=/tmp/x"
+    assert build_session(extra_conf={"spark.driver.extraJavaOptions": caller}) is spark
+    (options,) = built
+    assert options["spark.driver.defaultJavaOptions"].split() == DRIVER_JIT_FLAGS
+    assert options["spark.driver.extraJavaOptions"] == caller
+
+
 def _package_calls(names: set[str]):
     """(module path, call node) for every call in the package whose
     callee (plain name or attribute) is in ``names``."""
