@@ -47,16 +47,6 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def char_ngrams_expr(col_name: str, n: int = 3) -> Column:
-    """Character n-grams via SQL expr (substring needs non-literal pos)."""
-    return F.expr(
-        f"CASE WHEN length({col_name}) >= {n} THEN "
-        f"transform(sequence(1, length({col_name}) - {n} + 1), "
-        f"i -> substring({col_name}, i, {n})) "
-        f"ELSE array() END"
-    )
-
-
 # Tiny public stopword lists for the language-ID heuristic (top function
 # words; public knowledge, any NLP textbook).
 STOPWORDS = {
@@ -169,25 +159,6 @@ def winnow_mins(hashes: Column, w: int = 4) -> Column:
     return F.when(n > 0, F.array_sort(F.array_distinct(mins))).otherwise(
         F.array().cast("array<long>")
     )
-
-
-def winnow_fingerprints(toks: Column, k: int = 5, w: int = 4) -> Column:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD 2003 — the MOSS algorithm): slide a window of ``w``
-    consecutive k-gram hashes over the rolling-hash stream and keep each
-    window's minimum.  Guarantees every match of length >= w+k-1 shares
-    a fingerprint, with ~2/(w+1) of hashes selected — position-robust
-    (unlike the sorted-token-set `fingerprint`) and sublinear in output.
-
-    Documents with fewer than ``w`` shingles contribute one fingerprint
-    (the global min); empty documents yield an empty array.  Returned
-    sorted distinct, so the array is itself a deterministic set key.
-    Pure array expression — narrow, codegen'd, no shuffle.
-
-    One-expression convenience form; for hot paths stage the hash array
-    in its own select and call :func:`winnow_mins` on the bound column
-    (see its docstring for why)."""
-    return winnow_mins(shingle_hashes(toks, k), w)
 
 
 # PII scrub patterns: anchored, lookahead-free regexes (portable across

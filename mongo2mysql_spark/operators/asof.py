@@ -1,5 +1,4 @@
-"""As-of join (backward / forward / nearest) — an operator Spark lacks
-natively.
+"""Backward as-of join — an operator Spark lacks natively.
 
 Implemented as the classic union-sort-window technique, NOT a range
 cross-join:
@@ -8,23 +7,18 @@ cross-join:
    columns null on the left rows;
 2. one window per key ordered by (ts, right-first):
    ``last(value, ignorenulls=True)`` over unbounded-preceding..current
-   carries the most recent right row forward (mirrored with ``first``
-   over current..unbounded-following for the forward direction;
-   nearest computes both and picks per row);
+   carries the most recent right row forward;
 3. keep only left rows.
 
 Cost shape: ONE shuffle on the join key + a sort within partitions —
 the same as a regular sort-merge join, linear in |L|+|R|.  A naive
 ``l.ts >= r.ts`` inequality join is a broadcast-nested-loop (O(|L|·|R|))
-and is exactly what this operator exists to avoid at 100 TB.  The
-nearest direction adds a second WindowExec over the SAME hash
-partitioning — one extra in-partition sort, still zero extra shuffles.
+and is exactly what this operator exists to avoid at 100 TB.
 
 Determinism: the right side must be unique per (key, ts) — callers
 pre-aggregate ties (the oracle, DuckDB's native ASOF JOIN, is otherwise
-free to pick any tied row).  Inclusive semantics both ways (a right row
-at exactly left.ts matches), mirroring DuckDB; ``nearest`` breaks
-equidistant ties backward (the earlier right row wins).
+free to pick any tied row).  Inclusive semantics (a right row at
+exactly left.ts matches), mirroring DuckDB.
 """
 
 from __future__ import annotations
@@ -92,111 +86,5 @@ def asof_join_backward(
     )
     out_cols = [F.col(c) for c in left.columns] + [
         F.col(f"__asof_{c}").alias(c) for c in value_cols
-    ]
-    return carried.filter(F.col("__is_r") == 0).select(*out_cols)
-
-
-def asof_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Mirror of `asof_join_backward`: each left row gets the right row
-    with the SMALLEST ``right_ts`` ≥ its ``left_ts`` (per key), or
-    nulls — "next reading after the event"."""
-    _check_contract("asof_join_forward", left, value_cols)
-    l_tagged = left.withColumn("__ts", F.col(left_ts)).withColumn("__is_r", F.lit(0))
-    r_tagged = (
-        right.select(
-            F.col(key),
-            F.col(right_ts).alias("__ts"),
-            *[F.col(c) for c in value_cols],
-        )
-        .withColumn("__is_r", F.lit(1))
-    )
-    combined = l_tagged.unionByName(r_tagged, allowMissingColumns=True)
-    # right rows sort AFTER left rows at equal ts (asc on the tag), so a
-    # right row at exactly left.ts is inside the following-frame window
-    w = (
-        W.partitionBy(key)
-        .orderBy(F.col("__ts"), F.asc("__is_r"))
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    carried = combined.select(
-        "*",
-        *[
-            F.first(F.col(c), ignorenulls=True).over(w).alias(f"__asof_{c}")
-            for c in value_cols
-        ],
-    )
-    out_cols = [F.col(c) for c in left.columns] + [
-        F.col(f"__asof_{c}").alias(c) for c in value_cols
-    ]
-    return carried.filter(F.col("__is_r") == 0).select(*out_cols)
-
-
-def asof_join_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Each left row gets the right row with the smallest
-    ``|right_ts − left_ts|`` (per key); equidistant ties go BACKWARD
-    (the earlier right row).  Both directional carries are computed over
-    the same hash partitioning — the second window re-sorts within
-    partitions but adds no shuffle."""
-    _check_contract("asof_join_nearest", left, value_cols)
-    l_tagged = left.withColumn("__ts", F.col(left_ts)).withColumn("__is_r", F.lit(0))
-    r_tagged = (
-        right.select(
-            F.col(key),
-            F.col(right_ts).alias("__ts"),
-            *[F.col(c) for c in value_cols],
-        )
-        .withColumn("__is_r", F.lit(1))
-    )
-    combined = l_tagged.unionByName(r_tagged, allowMissingColumns=True).withColumn(
-        "__r_ts", F.when(F.col("__is_r") == 1, F.col("__ts"))
-    )
-    wb = (
-        W.partitionBy(key)
-        .orderBy(F.col("__ts"), F.desc("__is_r"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    wf = (
-        W.partitionBy(key)
-        .orderBy(F.col("__ts"), F.asc("__is_r"))
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    carried = combined.select(
-        "*",
-        F.last("__r_ts", ignorenulls=True).over(wb).alias("__b_ts"),
-        F.first("__r_ts", ignorenulls=True).over(wf).alias("__f_ts"),
-        *[
-            F.last(F.col(c), ignorenulls=True).over(wb).alias(f"__b_{c}")
-            for c in value_cols
-        ],
-        *[
-            F.first(F.col(c), ignorenulls=True).over(wf).alias(f"__f_{c}")
-            for c in value_cols
-        ],
-    )
-    # backward wins when it exists and is at least as close (ties backward)
-    choose_b = F.col("__b_ts").isNotNull() & (
-        F.col("__f_ts").isNull()
-        | (
-            (F.col("__ts").cast("double") - F.col("__b_ts").cast("double"))
-            <= (F.col("__f_ts").cast("double") - F.col("__ts").cast("double"))
-        )
-    )
-    out_cols = [F.col(c) for c in left.columns] + [
-        F.when(choose_b, F.col(f"__b_{c}")).otherwise(F.col(f"__f_{c}")).alias(c)
-        for c in value_cols
     ]
     return carried.filter(F.col("__is_r") == 0).select(*out_cols)

@@ -106,10 +106,7 @@ def cms_fold_key(col: Column, prefix_len: int = CMS_FOLD_PREFIX) -> Column:
 
     Keys agreeing on the first ``prefix_len`` characters AND length
     collide by design — the prefix contract of a fixed-unroll fold; at
-    the default 16 chars that is the usual token/URL-host regime.  For
-    full URLs / long n-grams (shared ``https://www.`` prefixes), use
-    :func:`cms_fold_key_composite` — a two-window fold that widens the
-    collision boundary to 2·prefix_len characters.
+    the default 16 chars that is the usual token/URL-host regime.
     Output is in [0, p) ⊂ the :func:`cms_bucket` key domain.  NULL
     strings fold to NULL (filtered by the builders).
     """
@@ -132,50 +129,6 @@ def cms_fold_key_sql(expr: str, prefix_len: int = CMS_FOLD_PREFIX) -> str:
         for j in range(prefix_len)
     )
     return f"((CAST(length({expr}) AS BIGINT) + {terms}) % {CMS_P})"
-
-
-# fixed odd combiner for the two-window composite fold (< p, so
-# f1·R + f2 < p·(p+1) < 2^62 — plain BIGINT on both engines)
-CMS_FOLD_COMBINE = 1_640_531_527
-
-
-def cms_fold_key_composite(
-    col: Column, prefix_len: int = CMS_FOLD_PREFIX
-) -> Column:
-    """Two-window string fold for URL-scale keys: the single
-    ``prefix_len``-char fold aliases keys that agree on the first
-    window AND length — full URLs routinely do (``https://www.``
-    alone spends 12 of the 16 characters), silently FUSING their
-    estimates (a systematic merge upstream of the sketch, not the
-    CMS's one-sided error).  This composite combines the first-window
-    fold with a second fold over characters ``prefix_len+1 ..
-    2·prefix_len`` as ``(f1·R + f2) mod p`` (fixed odd R — the
-    Carter–Wegman composition, still plain 64-bit integer arithmetic,
-    identical BIGINT on both engines), so keys must agree on the
-    first 2·prefix_len characters and length to collide.
-
-    Keep :func:`cms_fold_key` as the token/host default (half the
-    expression width); key URL/n-gram tables through THIS.  Output in
-    [0, p) ⊂ the :func:`cms_bucket` key domain; NULL folds to NULL.
-    """
-    f1 = cms_fold_key(col, prefix_len)
-    f2 = cms_fold_key(
-        F.substring(col, prefix_len + 1, prefix_len), prefix_len
-    )
-    return (f1 * F.lit(CMS_FOLD_COMBINE) + f2) % F.lit(CMS_P)
-
-
-def cms_fold_key_composite_sql(
-    expr: str, prefix_len: int = CMS_FOLD_PREFIX
-) -> str:
-    """DuckDB restatement of :func:`cms_fold_key_composite` — the
-    second window is ``substr(expr, prefix_len+1, prefix_len)``
-    (1-based on both engines; '' past the end, ascii('') = 0)."""
-    f1 = cms_fold_key_sql(expr, prefix_len)
-    f2 = cms_fold_key_sql(
-        f"substr({expr}, {prefix_len + 1}, {prefix_len})", prefix_len
-    )
-    return f"(({f1} * CAST({CMS_FOLD_COMBINE} AS BIGINT) + {f2}) % {CMS_P})"
 
 
 def cms_build(

@@ -303,16 +303,6 @@ def simhash_bits(toks: Column, bits: int = 32) -> Column:
     )
 
 
-def hamming_distance_bits(a: Column, b: Column, bits: int = 32) -> Column:
-    """Hamming distance between two equal-length bit strings."""
-    pairs = F.zip_with(
-        F.split(a, ""),
-        F.split(b, ""),
-        lambda x, y: F.when(x != y, 1).otherwise(0),
-    )
-    return F.aggregate(pairs, F.lit(0), lambda acc, v: acc + v)
-
-
 # ------------------------------------------------------- n-gram jaccard
 
 

@@ -15,8 +15,8 @@ columns, computed in the scan projection), so the join carries
 key + hash — a few bytes per row regardless of document width — and
 wide text/binary columns are pruned from the shuffle entirely.  The
 summary is one groupBy over the status column.  At 100 TB both sides
-shuffle once on the key; with both snapshots bucketed on the key
-(`plans/bucketing`), the join plans with zero Exchange.
+shuffle once on the key; with both snapshots bucketed on the key,
+the join plans with zero Exchange.
 
 ``include_cols`` on the detail frame re-joins the changed keys back to
 the snapshots to fetch full rows — keys-first, so the wide fetch only

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mongo2mysql_spark.plans.ddl import column
+
 BIG_OBJECT_KEYS = 25  # Porter.php:281
 
 
@@ -37,7 +39,7 @@ BIG_OBJECT_KEYS = 25  # Porter.php:281
 class SpillField:
     """A field diverted to a child table (the reference's ``_arr``)."""
 
-    path: str  # dotted access path into the source frame, e.g. "profile.tags"
+    path: tuple[str, ...]  # field names from the frame's root, e.g. ("profile", "tags")
     flat_name: str  # path-flattened name, e.g. "profile_tags"
     data_type: T.DataType
     kind: str  # "array" | "big_struct" | "map"
@@ -50,7 +52,7 @@ class FlattenResult:
 
 
 def _walk(
-    dtype: T.DataType, path: str, flat: str, out_cols: list[Column],
+    dtype: T.DataType, path: tuple[str, ...], flat: str, out_cols: list[Column],
     spills: list[SpillField], ts_seconds: bool, sep: str,
 ) -> None:
     if isinstance(dtype, T.ArrayType):
@@ -66,12 +68,12 @@ def _walk(
         for f in dtype.fields:
             _walk(
                 f.dataType,
-                f"{path}.{f.name}" if path else f.name,
+                (*path, f.name),
                 f"{flat}{sep}{f.name}" if flat else f.name,
                 out_cols, spills, ts_seconds, sep,
             )
         return
-    col = F.col(path)
+    col = column(*path)
     if ts_seconds and isinstance(dtype, T.TimestampType):
         col = F.date_trunc("second", col)  # seconds precision, Porter.php:291
     out_cols.append(col.alias(flat))
@@ -88,7 +90,7 @@ def flatten(df: DataFrame, ts_seconds: bool = True, sep: str = "_") -> FlattenRe
     out_cols: list[Column] = []
     spills: list[SpillField] = []
     for f in df.schema.fields:
-        _walk(f.dataType, f.name, f.name, out_cols, spills, ts_seconds, sep)
+        _walk(f.dataType, (f.name,), f.name, out_cols, spills, ts_seconds, sep)
     return FlattenResult(parent=df.select(*out_cols), spills=spills)
 
 
@@ -99,6 +101,6 @@ def flat_column_count(schema: T.StructType, sep: str = "_") -> int:
     n = 0
     for f in schema.fields:
         cols: list[Column] = []
-        _walk(f.dataType, f.name, f.name, cols, spills, False, sep)
+        _walk(f.dataType, (f.name,), f.name, cols, spills, False, sep)
         n += len(cols)
     return n

@@ -55,10 +55,3 @@ def table_too_wide(schema, limit: int = WIDE_ROW_LIMIT) -> bool:
     from mongo2mysql_spark.operators.flatten import flat_column_count
 
     return flat_column_count(schema) > limit
-
-
-def json_row_width(col: Column) -> Column:
-    """Per-row width of a dynamic JSON payload (for the schemaless
-    path): number of top-level keys. Rows above the limit are skipped
-    exactly like Porter.php:190-194."""
-    return F.size(F.from_json(col, "map<string,string>"))

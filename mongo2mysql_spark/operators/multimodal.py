@@ -89,37 +89,6 @@ def decode_metadata(df: DataFrame, mode: str = "fake") -> DataFrame:
     ).mapInPandas(run, schema=DECODED_SCHEMA)
 
 
-RESIZED_SCHEMA = "media_id long, out_width int, out_height int, resized binary"
-
-
-def resize_images(df: DataFrame, max_side: int = 256, mode: str = "fake") -> DataFrame:
-    """Resize stage as ``mapInPandas``: aspect-preserving downscale to
-    ``max_side``.  ``df`` must be a decoded frame joined back to its
-    payload (needs width/height + payload).  The ``fake`` kernel
-    computes the real output geometry (the testable contract) and
-    passes the payload through truncated — ``real`` is the
-    PIL.Image.thumbnail seam."""
-    if mode == "real":  # pragma: no cover - cluster-image integration point
-        raise NotImplementedError("real resize needs PIL on the image")
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = pdf[["media_id"]].copy()
-            ow, oh, data = [], [], []
-            for w, h, payload in zip(pdf["width"], pdf["height"], pdf["payload"]):
-                scale = min(1.0, max_side / max(int(w), int(h)))
-                ow.append(max(1, int(int(w) * scale)))
-                oh.append(max(1, int(int(h) * scale)))
-                # stand-in for re-encoded pixels: bounded payload slice
-                data.append(bytes(payload)[: max_side])
-            out["out_width"] = ow
-            out["out_height"] = oh
-            out["resized"] = data
-            yield out
-
-    return df.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
 def extract_features(df: DataFrame, dim: int = 16, mode: str = "fake") -> DataFrame:
     """Feature-extraction stage: payload -> float embedding (the CLIP/
     wav2vec seam).  The ``fake`` kernel derives a deterministic unit
@@ -148,16 +117,6 @@ def extract_features(df: DataFrame, dim: int = 16, mode: str = "fake") -> DataFr
             yield out
 
     return df.mapInPandas(run, schema="media_id long, features array<float>")
-
-
-def sample_frames(df: DataFrame, every_nth: int = 10) -> DataFrame:
-    """Frame-sampling plan for video payloads: one output row per
-    sampled frame index — pure expression (sequence + explode), the
-    actual pixel extraction being part of the decode seam."""
-    return df.withColumn(
-        "frame_index",
-        F.explode(F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_nth))),
-    )
 
 
 FRAME_SCHEMA = (

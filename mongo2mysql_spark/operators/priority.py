@@ -43,23 +43,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 H_HEX = 7              # md5 hex chars -> 28-bit hash window
-H_SPACE = 1 << (4 * H_HEX)
 P_SHIFT = 40           # q = (w << P_SHIFT) DIV (h+1) = priority x2^12
 E_SHIFT = P_SHIFT - 4 * H_HEX  # the x2^12 scale q and west share
 W_MAX = 1 << 20        # validated weight cap: w << 40 stays in BIGINT
-
-
-def priority_hash(key, salt: str):
-    """The 28-bit salted hash h (alpha = (h+1)/2^28)."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", F.lit(salt), key.cast("string"))),
-            1,
-            H_HEX,
-        ),
-        16,
-        10,
-    ).cast("long")
 
 
 def sql_priority_hash(key_sql: str, salt: str) -> str:
@@ -213,8 +199,8 @@ def priority_merge(
 
 
 def sql_ph_spark(key_col: str, salt: str) -> str:
-    """The Spark-SQL text of :func:`priority_hash` (used inside
-    F.expr so the q division stays one integral `div`)."""
+    """The 28-bit salted hash h (alpha = (h+1)/2^28) as Spark-SQL text
+    (used inside F.expr so the q division stays one integral `div`)."""
     return (
         f"CAST(conv(substring(md5(concat_ws('|', '{salt}',"
         f" CAST({key_col} AS STRING))), 1, {H_HEX}), 16, 10) AS BIGINT)"

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mongo2mysql_spark.plans.ddl import column
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -55,9 +57,7 @@ def profile_table(df: DataFrame, exact_distinct: bool = False) -> DataFrame:
     aggs: list = [F.count(F.lit(1)).alias("__n")]
     for f in df.schema.fields:
         c, dt = f.name, f.dataType
-        # Spark column-ref quoting: dots need backticks, and a literal
-        # backtick in the name must double (Mongo field names allow it)
-        col = F.col("`" + c.replace("`", "``") + "`")
+        col = column(c)
         aggs.append(F.count(col).alias(f"__cnt__{c}"))
         distinct = (
             F.count_distinct(col) if exact_distinct else F.approx_count_distinct(col)

@@ -75,11 +75,3 @@ def add_table_column(df, key_col: str, collection_name: str, out_col: str = "_ta
     return df.withColumn(
         out_col, route_key_expr(F.col(key_col), collection_name, kludge_rules)
     )
-
-
-def key_histogram(df, table_col: str = "_table"):
-    """The reference's ``$allKeys`` tally (Porter.php:328-332) as a
-    distributed groupBy.  Note the reference initializes each key's
-    counter to 0 on first sight, so its tally is occurrences−1; we
-    report the true count."""
-    return df.groupBy(table_col).count()

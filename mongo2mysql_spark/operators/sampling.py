@@ -167,46 +167,6 @@ def sql_hash_sample_flag(key_sql: str, rate: float = 0.1, salt: str = "sample") 
     return f"CASE WHEN {sql_hex_bucket(key_sql, salt)} < '{_threshold(rate)}' THEN 1 ELSE 0 END"
 
 
-def temperature_mix_rates(
-    df, domain_col: str, temperature: float = 2.0, target_frac: float | None = None
-) -> dict[str, float]:
-    """Derive per-domain keep rates from the corpus itself: multinomial
-    temperature sampling (the multilingual-pretraining recipe — e.g.
-    mBERT/XLM-R exponentiated smoothing): sample domains proportional to
-    ``count^(1/T)`` instead of raw counts, so T>1 upsamples small
-    domains relative to dominant ones and T=1 keeps natural proportions.
-
-    Returns the ``rates`` dict :func:`weighted_mixture_flag` consumes:
-    per-domain keep probabilities scaled so the LARGEST implied rate is
-    1.0 (no domain can keep more rows than it has), or so the total
-    expected kept fraction equals ``target_frac`` when given (capped at
-    1.0 per domain).  One aggregation over the corpus — the domain
-    count table is tiny and collected; everything downstream stays a
-    narrow expression.
-    """
-    from pyspark.sql import functions as F
-
-    counts = {
-        r[0]: r[1]
-        for r in df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("n")).collect()
-        if r[0] is not None
-    }
-    if not counts:
-        return {}
-    total = sum(counts.values())
-    weights = {d: (n / total) ** (1.0 / temperature) for d, n in counts.items()}
-    wsum = sum(weights.values())
-    # target share of the OUTPUT mixture per domain
-    share = {d: w / wsum for d, w in weights.items()}
-    # keep-rate r_d satisfies r_d * n_d ∝ share_d; normalize per the cap
-    raw = {d: share[d] / counts[d] for d in counts}
-    if target_frac is None:
-        scale = 1.0 / max(raw.values())
-    else:
-        scale = target_frac * total / sum(raw[d] * counts[d] for d in counts)
-    return {d: min(1.0, raw[d] * scale) for d in sorted(counts)}
-
-
 def systematic_weighted_select(
     df: "DataFrame",  # noqa: F821 - forward ref, imported below
     weight_col: str,

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mongo2mysql_spark.plans.ddl import column
+
 
 def add_num(
     df: DataFrame,
@@ -181,7 +183,7 @@ class Numbering:
         else:
             delta = _long_array(self._deltas.get(None, []))[pid]
         num = (F.col("__mid") + delta).cast("int").alias(self.out_col)
-        return df.select(*self.columns, num)
+        return df.select(*map(column, self.columns), num)
 
     def unpersist(self) -> None:
         self.cached.unpersist()

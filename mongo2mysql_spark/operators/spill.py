@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mongo2mysql_spark.operators.flatten import SpillField
+from mongo2mysql_spark.plans.ddl import column
 
 
 def child_table_name(parent_table: str, flat_name: str) -> str:
@@ -64,7 +65,7 @@ def spill_child(df: DataFrame, spill: SpillField, id_col: str = "_id") -> DataFr
         # posexplode (inner): null/empty arrays yield no child rows, same
         # as the reference's foreach over an empty array
         exploded = df.select(
-            parent_id, F.posexplode(F.col(spill.path)).alias("_index", "__elem")
+            parent_id, F.posexplode(column(*spill.path)).alias("_index", "__elem")
         )
         return exploded.select(
             "_parentid", "_index", *_element_cols(spill.data_type.elementType, spill.flat_name, "__elem")
@@ -72,7 +73,7 @@ def spill_child(df: DataFrame, spill: SpillField, id_col: str = "_id") -> DataFr
     if spill.kind == "map":
         assert isinstance(spill.data_type, T.MapType)
         exploded = df.select(
-            parent_id, F.posexplode(F.map_entries(F.col(spill.path))).alias("__pos", "__kv")
+            parent_id, F.posexplode(F.map_entries(column(*spill.path))).alias("__pos", "__kv")
         )
         return exploded.select(
             "_parentid",
@@ -87,7 +88,7 @@ def spill_child(df: DataFrame, spill: SpillField, id_col: str = "_id") -> DataFr
             *[
                 F.struct(
                     F.lit(f.name).alias("_index"),
-                    F.col(f"{spill.path}.{f.name}").cast("string").alias(spill.flat_name),
+                    column(*spill.path, f.name).cast("string").alias(spill.flat_name),
                 )
                 for f in spill.data_type.fields
                 if not isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))

@@ -12,6 +12,9 @@ Primary keys follow Porter.php:115-120: ``_id`` on parent tables,
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 _TYPE_NEEDS_KEY_LEN = ("text",)
 
 
@@ -23,6 +26,14 @@ def quote_ident(name: str) -> str:
     and an injection surface.  (sqlite accepts the same syntax, so the
     live-sink tests cover it.)"""
     return "`" + name.replace("`", "``") + "`"
+
+
+def column(*path: str) -> Column:
+    """Spark column reference to the field at ``path`` (one name per
+    nesting level), each name backtick-quoted the way ``quote_ident``
+    quotes it: a bare ``F.col("a.b")`` reads a ``.`` in a Mongo field
+    name as nesting and a backtick as quoting."""
+    return F.col(".".join(map(quote_ident, path)))
 
 
 def _col_def(name: str, db_type: str) -> str:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mongo2mysql_spark.operators.sequence import Numbering
+from mongo2mysql_spark.plans.ddl import column
 from mongo2mysql_spark.plans.lattice import db_type_for_spark
 
 # Spark-side mirror of lattice.ISO_DATETIME_RE (Java regex, Porter.php:372).
@@ -32,13 +33,11 @@ ISO_RE_SQL = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d{1,4})?.*"
 def _schema_stat_aggs(fields) -> list:
     aggs = []
     for field in fields:
-        name = field.name
-        aggs.append(F.count(F.col(name)).alias(f"__cnt__{name}"))
+        name, col = field.name, column(field.name)
+        aggs.append(F.count(col).alias(f"__cnt__{name}"))
         if field.dataType.typeName() == "string":
-            aggs.append(F.max(F.length(name)).alias(f"__len__{name}"))
-            aggs.append(
-                F.min(F.col(name).rlike(ISO_RE_SQL).cast("int")).alias(f"__iso__{name}")
-            )
+            aggs.append(F.max(F.length(col)).alias(f"__len__{name}"))
+            aggs.append(F.min(col.rlike(ISO_RE_SQL).cast("int")).alias(f"__iso__{name}"))
     return aggs
 
 

@@ -102,7 +102,7 @@ def etl_child_spill_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Tb(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("_id"), F.split("text", " ").alias("token")
     )
-    spill = SpillField("token", "token", T.ArrayType(T.StringType()), "array")
+    spill = SpillField(("token",), "token", T.ArrayType(T.StringType()), "array")
     child = spill_child(d, spill)
     # global sequence over one persisted range partitioning: no
     # single-reducer no-partition window

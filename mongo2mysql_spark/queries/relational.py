@@ -2187,17 +2187,6 @@ def subquery_min_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Exact percentiles — registry slot folded into agg_stats_by_returnflag's
-# p50/p90/med_qty columns (round-3 slot consolidation).
-def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = Tf(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.percentile("l_extendedprice", 0.5).alias("p50"),
-        F.percentile("l_extendedprice", 0.9).alias("p90"),
-        F.median("l_quantity").alias("med_qty"),
-    )
-
-
 @register(
     "asof_join_error_purchase",
     """

@@ -60,34 +60,6 @@ def write_ivf_store(
     cent.write.mode("overwrite").parquet(os.path.join(path, _CENTROIDS))
 
 
-def append_ivf_store(
-    batch: DataFrame, path: str, id_col: str, vec_col: str
-) -> None:
-    """Incremental index maintenance at the LAYOUT level: assign the
-    batch against the store's sidecar centroids (frozen at build time —
-    the same contract as the PQ code store's codebook: retraining
-    centroids re-shards the world, a scheduled rebuild, not an ingest
-    path) and append files into ONLY the touched cell directories.
-    Untouched cells are never listed, read, or rewritten — ingest I/O
-    is O(batch) at any store size, and readers keep partition-pruning
-    correctly because a vector's cell is a pure function of the frozen
-    centroids.
-
-    Append-only by id: a re-published id would coexist with its old
-    version (parquet appends don't upsert) — corrections go through the
-    PQ-store-style delta/merge design or a rebuild; this is the bulk
-    new-vector path."""
-    from mongo2mysql_spark.operators.similarity import assign_centroids
-
-    cent = read_centroids(batch.sparkSession, path)
-    assigned = assign_centroids(batch, cent, id_col, vec_col).select(
-        F.col(id_col), F.col(vec_col), F.col("centroid_id")
-    )
-    assigned.write.mode("append").partitionBy("centroid_id").parquet(
-        os.path.join(path, _CELLS)
-    )
-
-
 def read_centroids(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(os.path.join(path, _CENTROIDS))
 

@@ -74,16 +74,17 @@ def stringify_temporals(df: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from mongo2mysql_spark.plans.ddl import column
+
     cols = []
     for f in df.schema.fields:
+        col = column(f.name)
         if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
-            cols.append(
-                F.date_format(F.col(f.name), "yyyy-MM-dd HH:mm:ss").alias(f.name)
-            )
+            cols.append(F.date_format(col, "yyyy-MM-dd HH:mm:ss").alias(f.name))
         elif isinstance(f.dataType, T.DateType):
-            cols.append(F.col(f.name).cast("string").alias(f.name))
+            cols.append(col.cast("string").alias(f.name))
         else:
-            cols.append(F.col(f.name))
+            cols.append(col)
     return df.select(*cols)
 
 

@@ -34,9 +34,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-
-
 def list_collections(sf_dir: str) -> list[str]:
     """Source enumeration (reference parity: A1, Porter.php:344-349)."""
     return sorted(

@@ -57,91 +57,3 @@ def streaming_first_n_per_key(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-
-
-def streaming_rolling_zscore(
-    stream: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    value_col: str,
-    window: int = 20,
-    min_points: int = 5,
-    threshold: float = 3.0,
-) -> DataFrame:
-    """Streaming analogue of ``operators/anomaly.rolling_zscore``: per-key
-    trailing-window z-score with the window carried ACROSS micro-batches
-    in the state store (at most ``window`` doubles per key — bounded
-    state by construction, no watermark needed for boundedness).
-
-    Rows are scored in ``order_cols`` order within each micro-batch;
-    like every streaming-vs-batch lift here, replaying a bounded,
-    in-order stream reproduces the batch operator exactly (asserted in
-    tests).  Out-of-order arrival ACROSS batches scores against the
-    state as of arrival — the streaming trade-off, same as any
-    monitoring system scoring live points against a trailing baseline.
-    """
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        list(stream.schema.fields)
-        + [
-            StructField("roll_mean", DoubleType()),
-            StructField("roll_std", DoubleType()),
-            StructField("zscore", DoubleType()),
-            StructField("is_anomaly", BooleanType()),
-        ]
-    )
-    in_cols = [f.name for f in stream.schema.fields]
-
-    def score(key, pdfs, state):
-        import math
-
-        import pandas as pd
-
-        tail: list[float] = list(state.get[0]) if state.exists else []
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(order_cols, kind="mergesort").reset_index(drop=True)
-        means, stds, zs, flags = [], [], [], []
-        for v in batch[value_col]:
-            prev = tail[-window:]
-            if len(prev) >= min_points:
-                mean = sum(prev) / len(prev)
-                var = sum((x - mean) ** 2 for x in prev) / len(prev)
-                std = math.sqrt(var)
-                means.append(mean)
-                stds.append(std)
-                if std > 0:
-                    z = (float(v) - mean) / std
-                    zs.append(z)
-                    flags.append(abs(z) > threshold)
-                else:
-                    zs.append(None)
-                    flags.append(False)
-            else:
-                means.append(None)
-                stds.append(None)
-                zs.append(None)
-                flags.append(False)
-            tail.append(float(v))
-            if len(tail) > window:
-                tail = tail[-window:]
-        state.update((tail,))
-        out = batch[in_cols].copy()
-        out["roll_mean"] = means
-        out["roll_std"] = stds
-        out["zscore"] = zs
-        out["is_anomaly"] = flags
-        yield out
-
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        score,
-        out_schema,
-        "tail array<double>",
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from mongo2mysql_spark.functions.text import tokens, winnow_fingerprints
+from mongo2mysql_spark.functions.text import shingle_hashes, tokens, winnow_mins
 from mongo2mysql_spark.operators.decontam import (
     contamination_profile,
     remove_contaminated,
@@ -80,10 +80,15 @@ def _winnow_ref(toks: list[str], k: int, w: int) -> list[int]:
     return sorted(set(mins))
 
 
+def _winnow(toks, k, w):
+    """Winnowing fingerprints of a token array, as the slots compose them."""
+    return winnow_mins(shingle_hashes(toks, k), w)
+
+
 def test_winnow_matches_python_reference(spark):
     docs = load_table(spark, SF, "documents").limit(20)
     got = docs.select(
-        "doc_id", winnow_fingerprints(tokens(F.col("text")), k=5, w=4).alias("fp")
+        "doc_id", _winnow(tokens(F.col("text")), k=5, w=4).alias("fp")
     ).collect()
     raw = {r["doc_id"]: r["text"] for r in docs.collect()}
     assert len(got) == 20
@@ -100,7 +105,7 @@ def test_winnow_edge_cases(spark):
     out = {
         r["doc_id"]: list(r["fp"])
         for r in spark.createDataFrame(rows)
-        .select("doc_id", winnow_fingerprints(F.split("text", " "), k=5, w=4).alias("fp"))
+        .select("doc_id", _winnow(F.split("text", " "), k=5, w=4).alias("fp"))
         .collect()
     }
     assert out[1] == []
@@ -123,7 +128,7 @@ def test_winnow_shift_invariance(spark):
     out = {
         r["doc_id"]: set(r["fp"])
         for r in spark.createDataFrame(rows)
-        .select("doc_id", winnow_fingerprints(F.split("text", " "), k=5, w=4).alias("fp"))
+        .select("doc_id", _winnow(F.split("text", " "), k=5, w=4).alias("fp"))
         .collect()
     }
     assert out[1] & out[2]
@@ -268,8 +273,6 @@ def test_winnow_property_fuzz_vs_python_reference(spark):
 
     from pyspark.sql import Row
 
-    from mongo2mysql_spark.functions.text import winnow_fingerprints
-
     rng = random.Random(20260815)
     vocab = [f"w{i}" for i in range(30)]
     rows = []
@@ -279,7 +282,7 @@ def test_winnow_property_fuzz_vs_python_reference(spark):
     out = {
         r["doc_id"]: list(r["fp"])
         for r in spark.createDataFrame(rows)
-        .select("doc_id", winnow_fingerprints(F.split("text", " "), k=5, w=4).alias("fp"))
+        .select("doc_id", _winnow(F.split("text", " "), k=5, w=4).alias("fp"))
         .collect()
     }
     for row in rows:

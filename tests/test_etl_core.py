@@ -20,7 +20,7 @@ from mongo2mysql_spark.operators.flatten import flat_column_count, flatten
 from mongo2mysql_spark.operators.routing import add_table_column, route_key_expr
 from mongo2mysql_spark.operators.sequence import add_num, add_num_two_phase
 from mongo2mysql_spark.operators.spill import child_table_name, spill_child
-from mongo2mysql_spark.plans.ddl import create_table_sql, evolve_schema_sql
+from mongo2mysql_spark.plans.ddl import create_table_sql, evolve_schema_sql, quote_ident
 from mongo2mysql_spark.plans.infer import infer_table_schema
 from mongo2mysql_spark.porter import PorterConfig, SparkPorter
 from mongo2mysql_spark.sources.jdbc import upsert_sql, write_upsert
@@ -270,6 +270,74 @@ def test_porter_end_to_end(spark, docs):
     assert any("PRIMARY KEY (`_parentid`, `_index`)" in s for s in exp.ddl)
     # title: 600-char string on one row → text in that table's schema
     assert exp.schemas["user"]["title"] == "text"
+
+
+# Field names MongoDB (>= 5.0) allows that Spark column references parse:
+# a '.' reads as nesting and a backtick as quoting.  "a.b" has a sibling
+# struct a{b}, whose flattened name is a_b.
+_ODD_DOCS = [
+    {"_id": i, "a.b": i, "a": {"b": 100 + i}, "x`y": f"s{i}",
+     "p": {"c`d": 2 * i, "e.f": 3 * i}, "t`x": [i, 10 + i]}
+    for i in range(3)
+]
+_ODD_TABLES = {
+    "c": (
+        ["_id", "a_b", "a.b", "p_c`d", "p_e.f", "x`y", "_num"],
+        [(i, 100 + i, i, 2 * i, 3 * i, f"s{i}", i + 1) for i in range(3)],
+    ),
+    "c__t`x": (
+        ["_parentid", "_index", "t`x", "_num"],
+        [(i, j, v, 2 * i + j + 1) for i in range(3) for j, v in enumerate((i, 10 + i))],
+    ),
+}
+
+
+@pytest.mark.parametrize("path", ["porter", "sync"])
+def test_field_names_with_dots_and_backticks(spark, tmp_path, path):
+    """Field names holding '.' or a backtick reach the sqlite sink with
+    their own values and quoted DDL, through the porter and through an
+    incremental sync call."""
+    import functools
+    import re
+
+    from mongo2mysql_spark import sync
+    from mongo2mysql_spark.sources.jdbc import execute_ddl, stringify_temporals
+    from tests.test_sinks_sources import _FakeCollection
+
+    factory = functools.partial(sqlite3.connect, str(tmp_path / "odd.db"))
+    ddl: list[str] = []
+
+    def run_ddl(stmts):
+        ddl.extend(stmts)
+        execute_ddl([re.sub(r"`\((\d+)\)", "`", s) for s in stmts], factory)
+
+    porter = SparkPorter(spark, PorterConfig())
+    if path == "porter":
+        porter.run(
+            {"c": sync._default_batch_df(spark, _ODD_DOCS)},
+            sink=lambda t, df: write_upsert(
+                stringify_temporals(df), t, factory, max_connections=1
+            ),
+            ddl_executor=run_ddl,
+        )
+    else:
+        got = sync.incremental_export(
+            spark, _FakeCollection(_ODD_DOCS), "c", porter, factory,
+            ddl_executor=run_ddl,
+        )
+        assert got["docs"] == 3 and got["tables"] == set(_ODD_TABLES)
+
+    con = factory()
+    try:
+        for table, (cols, rows) in _ODD_TABLES.items():
+            cur = con.execute(f"SELECT * FROM {quote_ident(table)} ORDER BY 1, 2")
+            assert [d[0] for d in cur.description] == cols, table
+            assert cur.fetchall() == rows, table
+    finally:
+        con.close()
+    text = "\n".join(ddl)
+    for ident in ("`c__t``x`", "`a.b`", "`p_c``d`", "`p_e.f`", "`x``y`", "`t``x`"):
+        assert ident in text, (ident, text)
 
 
 @pytest.mark.slow

@@ -715,65 +715,3 @@ def test_ivf_store_partition_pruned_probe(spark, tmp_path):
         ).collect()
     )
     assert got == want
-
-
-def test_ivf_store_append_is_o_batch_and_serves_union(spark, tmp_path):
-    """append_ivf_store must leave every pre-existing file byte-stable
-    (size+mtime — untouched cells are never rewritten; ingest I/O is
-    O(batch) at any store size) and the served search must equal
-    topk_ivf over the UNION corpus with the same frozen centroids."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mongo2mysql_spark.operators.similarity import topk_ivf
-    from mongo2mysql_spark.sources.ivfstore import (
-        append_ivf_store,
-        topk_ivf_partitioned,
-        write_ivf_store,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    half1 = e.filter(F.col("vec_id") % 2 == 0)
-    half2 = e.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "ivf")
-    # centroids frozen from the FULL corpus so both halves route the
-    # same way the union would (the deployment trains routing once)
-    write_ivf_store(
-        half1, path, "vec_id", "embedding", centroid_stride=97,
-        centroids=e.filter(F.col("vec_id") % 97 == 0),
-    )
-
-    def snapshot():
-        out = {}
-        for root, _d, files in os.walk(os.path.join(path, "cells")):
-            for f in files:
-                # _SUCCESS/.crc commit markers are refreshed by design;
-                # DATA files are the byte-stability contract
-                if f.startswith(("_", ".")):
-                    continue
-                p = os.path.join(root, f)
-                out[p] = (os.path.getsize(p), os.path.getmtime(p))
-        return out
-
-    before = snapshot()
-    append_ivf_store(half2, path, "vec_id", "embedding")
-    after = snapshot()
-    for p, meta in before.items():
-        assert after[p] == meta, f"pre-existing file rewritten: {p}"
-    assert len(after) > len(before)
-
-    q = e.filter(F.col("vec_id") < 5)
-    got = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"])
-        for r in topk_ivf_partitioned(
-            spark, path, q, "vec_id", "embedding", k=5, nprobe=2
-        ).collect()
-    )
-    want = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"])
-        for r in topk_ivf(
-            e, q, "vec_id", "embedding", centroid_stride=97, k=5, nprobe=2
-        ).collect()
-    )
-    assert got == want

@@ -1,22 +1,12 @@
-"""Tests for skew helpers, file sources, and the dynamic JSON path."""
+"""Tests for skew helpers, the dynamic JSON path and the smaller operators."""
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from mongo2mysql_spark.operators.dynamic import infer_json_schema, parse_json_column
 from mongo2mysql_spark.operators.skew import salted_agg, salted_join
-from mongo2mysql_spark.sources.files import (
-    read_csv,
-    read_jsonl,
-    read_orc,
-    write_csv,
-    write_jsonl,
-    write_orc,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -47,21 +37,6 @@ def test_salted_join_matches_plain(spark):
     plain = li.join(o, "l_orderkey").count()
     salted = salted_join(li, o, "l_orderkey", salt_buckets=4).count()
     assert plain == salted
-
-
-def test_csv_jsonl_round_trip(spark):
-    df = spark.read.parquet(f"{SF}/region.parquet")
-    with tempfile.TemporaryDirectory() as tmp:
-        write_csv(df, f"{tmp}/r_csv")
-        write_jsonl(df, f"{tmp}/r_json")
-        c = read_csv(spark, f"{tmp}/r_csv", schema="r_regionkey int, r_name string")
-        j = read_jsonl(spark, f"{tmp}/r_json", schema="r_regionkey int, r_name string")
-        write_orc(df, f"{tmp}/r_orc")
-        o = read_orc(spark, f"{tmp}/r_orc")
-        base = sorted(map(repr, df.collect()))
-        assert sorted(map(repr, c.collect())) == base
-        assert sorted(map(repr, j.collect())) == base
-        assert sorted(map(repr, o.select("r_regionkey", "r_name").collect())) == base
 
 
 def test_infer_json_schema_and_parse(spark):
@@ -364,16 +339,12 @@ def test_pack_sequences_invariants(spark):
     assert total_seqs == (cum + L - 1) // L or cum % L == 0
 
 
-def test_asof_forward_and_nearest_match_bruteforce(spark):
-    """All three as-of directions must agree with a per-row brute-force
-    scan of the right side (inclusive match, nearest ties backward)."""
+def test_asof_backward_matches_bruteforce(spark):
+    """The backward as-of join must agree with a per-row brute-force
+    scan of the right side (inclusive match)."""
     import random
 
-    from mongo2mysql_spark.operators.asof import (
-        asof_join_backward,
-        asof_join_forward,
-        asof_join_nearest,
-    )
+    from mongo2mysql_spark.operators.asof import asof_join_backward
 
     rng = random.Random(7)
     lrows = [(i, rng.randrange(3), float(rng.randrange(100))) for i in range(200)]
@@ -387,34 +358,16 @@ def test_asof_forward_and_nearest_match_bruteforce(spark):
     left = spark.createDataFrame(lrows, "lid int, k int, lts double")
     right = spark.createDataFrame(rrows, "k int, rts double, val string")
 
-    def brute(direction):
-        out = {}
-        for lid, k, lts in lrows:
-            cands = [(rts, v) for (rk, rts, v) in rrows if rk == k]
-            if direction == "backward":
-                c = [(rts, v) for rts, v in cands if rts <= lts]
-                out[lid] = max(c)[1] if c else None
-            elif direction == "forward":
-                c = [(rts, v) for rts, v in cands if rts >= lts]
-                out[lid] = min(c)[1] if c else None
-            else:
-                if not cands:
-                    out[lid] = None
-                    continue
-                best = min(cands, key=lambda rv: (abs(rv[0] - lts), rv[0] > lts))
-                out[lid] = best[1]
-        return out
+    brute = {}
+    for lid, k, lts in lrows:
+        c = [(rts, v) for (rk, rts, v) in rrows if rk == k and rts <= lts]
+        brute[lid] = max(c)[1] if c else None
 
-    for direction, fn in (
-        ("backward", asof_join_backward),
-        ("forward", asof_join_forward),
-        ("nearest", asof_join_nearest),
-    ):
-        got = {
-            r["lid"]: r["val"]
-            for r in fn(left, right, "k", "lts", "rts", ["val"]).collect()
-        }
-        assert got == brute(direction), direction
+    got = {
+        r["lid"]: r["val"]
+        for r in asof_join_backward(left, right, "k", "lts", "rts", ["val"]).collect()
+    }
+    assert got == brute
 
 
 def test_weighted_mixture_flag_matches_python(spark):

@@ -160,40 +160,6 @@ def test_lsh_band_shuffle_is_narrow(spark):
     assert "InMemoryTableScan" in plan  # signatures persisted, not re-derived
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Co-located join lever: after bucketed staging on the join key,
-    the orders<->lineitem equi-join plans with ZERO Exchange (the
-    shuffle was paid once at staging time)."""
-    from mongo2mysql_spark.plans.bucketing import read_staged, stage_bucketed
-    from mongo2mysql_spark.sources.parquet import load_table
-
-    # (warehouse dir is a static conf; managed tables land in the
-    # session default and are dropped — files included — in finally)
-    o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_totalprice")
-    li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
-    stage_bucketed(o, "b_orders", ["o_orderkey"], 4, sort_cols=["o_orderkey"])
-    stage_bucketed(li, "b_lineitem", ["l_orderkey"], 4, sort_cols=["l_orderkey"])
-    try:
-        # disable broadcast: at test scale AQE would broadcast the dim,
-        # hiding the co-located SortMergeJoin this lever exists for
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        joined = read_staged(spark, "b_orders").join(
-            read_staged(spark, "b_lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = physical_plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # both sides arrive co-located
-        # sanity: result matches the plain (shuffled) join
-        assert joined.count() == o.join(li, o.o_orderkey == li.l_orderkey).count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_range_join_is_equi_join_not_nested_loop(spark):
     """The range join must plan as an equi-join on the bucket id even
     with broadcast disabled (both sides big at scale) — never a
@@ -910,3 +876,164 @@ def test_lazy_checkpoints_only_shrink():
         )
     )
     assert dict(found) == LAZY_CHECKPOINTS
+
+
+# Top-level package defs that no entry point reaches, each kept for the
+# reason given.  The list may only shrink: deleting a def (with the
+# tests that exercise only it) drops its entry, and no new unreached
+# def may join.
+UNREACHED_DEFS = {
+    # references that a test checks a reached def against
+    "operators/anomaly.py:rolling_zscore": "float twin of rolling_frame_stats in test_rolling_frame_stats_agrees_with_float_zscore",
+    "operators/pq.py:_l2sq_seq": "sequential fold that test_expanded_distance_bit_equals_fold checks the codegen expansion against",
+    "operators/pq.py:_sub": "helper of _l2sq_seq",
+    "operators/pq.py:_dists_to_cents": "unexpanded distance form in test_expanded_distance_bit_equals_fold",
+    "operators/priority.py:priority_sample": "one-shot sample that test_priority checks streaming/priostore's fold against",
+    "operators/sequence.py:add_num": "window form of _num that test_numbering checks Numbering against",
+    "operators/rollup.py:hypertable_rollup": "one-shot rollup that the streaming and incremental refresh tests compare with",
+    "operators/zorder.py:hilbert_ref": "scalar Hilbert curve that test_with_hilbert_matches_reference_and_duckdb checks with_hilbert against",
+    "functions/vector.py:dequantize_embedding": "inverse of quantize_embedding in test_embedding_quantization_roundtrip",
+    # documented in README's prose
+    "operators/zorder.py:cluster_by_z": "README 'Physical layout & runtime pruning' documents it",
+    # fixtures that build a reached def's inputs
+    "operators/kmv.py:kmv_sketch": "test_kmv builds the sketches that kmv_stats/kmv_union/kmv_intersect_est read",
+    "operators/pq.py:pq_residual_encode": "the custom encode of test_pq_store_custom_encode_serves_residual_codes",
+    # only their own tests use them; each goes with those tests
+    "functions/text.py:clean_text": "test_clean_text_semantics_idempotence_and_duckdb_parity",
+    "functions/vector.py:dot_exact": "test_vector_dot_forms_agree",
+    "functions/vector.py:dot_fast": "test_vector_dot_forms_agree",
+    "functions/vector.py:cosine_exact": "test_vector_dot_forms_agree",
+    "functions/vector.py:norm_exact": "helper of cosine_exact",
+    "functions/vector.py:_dec_sum": "helper of dot_exact and norm_exact",
+    "operators/bloom.py:bloom_probe": "test_bloom",
+    "operators/bloom.py:bloom_merge": "test_merge_equals_union_build",
+    "operators/diffing.py:snapshot_diff_summary": "test_snapshot_diff_statuses_and_pruned_shuffle, test_versioned_table_time_travel_rollback_vacuum",
+    "operators/diffing.py:changed_rows": "test_snapshot_diff_statuses_and_pruned_shuffle",
+    "operators/joinexec.py:chain_plan_tree": "test_execute_chain_plan_follows_dp_structure",
+    "operators/joinexec.py:execute_star_plan": "test_execute_star_plan_peel_order_and_broadcasts",
+    "operators/joinexec.py:snowflake_plan_tree": "test_execute_snowflake_plan_structure_and_answer",
+    "operators/joinexec.py:graph_plan_tree": "test_execute_graph_plan_cycle_edge_and_structure, tools/probe_graphexec.py",
+    "operators/multimodal.py:extract_features": "test_multimodal_features, test_chunk_embed_search_pipeline_composes",
+    "operators/priority.py:priority_merge": "test_priority_sketch_merge_equals_one_shot",
+    "operators/sketches.py:heavy_hitters": "test_countmin_guarantees_and_merge, test_targeted_salted_join_matches_plain",
+    "operators/skew.py:salted_agg": "test_salted_agg_matches_plain",
+    "operators/skew.py:salted_join": "test_salted_join_matches_plain",
+    "operators/skew.py:salted_join_targeted": "test_targeted_salted_join_matches_plain",
+    "operators/urls.py:registered_domain": "test_url_host_and_domain, test_registered_domain_extra_multilabel_suffixes",
+    "operators/zorder.py:cluster_by_hilbert": "test_cluster_by_hilbert_bounds_both_columns",
+    "operators/zorder.py:z_bucket_stats": "test_zorder's zone-map tests",
+    "operators/zorder.py:hilbert_bucket_stats": "test_zorder's zone-map tests",
+    "plans/lattice.py:guess_db_type": "test_guess_db_type, test_guess_unknown_raises",
+    "plans/lattice.py:ObjectIdStr": "test_guess_db_type",
+    "plans/lattice.py:widen_all": "test_widen_all_fold",
+    "queries/relational.py:sort_limit_orders": "test_sort_limit_is_take_ordered",
+    "sources/jdbc.py:write_upsert_partitioned": "test_sinks_sources' partitioned-write tests, test_write_upsert_partitioned_scans_upstream_once",
+    "sources/jdbc.py:read_partitioned": "test_read_partitioned_executes_fragments_in_parallel",
+    "sources/jdbc.py:plan_read_partitions": "test_plan_read_partitions_* and the partitioned read/write tests",
+    "sources/jdbc.py:fragment_layout": "test_write_upsert_partitioned_fragment_layout_contract",
+    "sources/lake.py:write_partitioned": "test_lake's partitioned-write tests, test_dynamic_partition_pruning_fires_on_partitioned_join",
+    "sources/lake.py:compact_parquet": "test_compaction_*",
+    "sources/lake.py:write_clustered": "test_clustered_write_narrows_file_ranges, test_zorder_write_bounds_both_dims, test_bloom_index_skips_files_on_point_lookup",
+    "sources/lake.py:write_zordered": "test_zorder_write_bounds_both_dims",
+    "sources/lake.py:add_zorder_key": "test_zorder_key_rejects_overflow",
+    "sources/lake.py:merge_into_partitioned": "test_merge_into_partitioned_touches_only_affected_dirs, test_rollup_incremental_refresh_equals_one_shot",
+    "sources/lake.py:write_bloom_index": "test_bloom_index_skips_files_on_point_lookup",
+    "sources/lake.py:read_with_bloom_skip": "test_bloom_index_skips_files_on_point_lookup",
+    "sources/lake.py:_bloom_positions_py": "test_bloom_index_python_probe_parity",
+    "sources/versioned.py:compact": "test_versioned_manifest_compaction_bounds_file_count",
+    "sources/versioned.py:vacuum": "test_versioned_table_time_travel_rollback_vacuum",
+    "streaming/pipeline.py:foreach_batch_upsert": "test_foreach_batch_upsert_sqlite",
+    "streaming/pipeline.py:streaming_dedup": "test_streaming_dedup_matches_batch_distinct",
+    "streaming/pipeline.py:streaming_route": "test_streaming_route_matches_batch",
+}
+
+
+def _unreached_package_code() -> set[str]:
+    """Package modules no entry point imports, and top-level package
+    defs (``module:name``) no entry point reaches.
+
+    Roots: the ``@register``ed slot builders, the public defs of
+    ``cli.py``, ``pipelines.py``, ``sync.py`` and ``porter.py``, every
+    name (string constants included: perfbench patches layers by name)
+    in ``bench.py``, ``__spark_entry__.py`` and ``perfbench/*.py``, and
+    the module-level code of each imported module.  Reached code
+    reaches a def by naming it (a ``Name``, an ``Attribute`` or an
+    import alias) and a module by importing it, to a fixed point.
+    Matching is by name, so a name reused anywhere counts as reached;
+    docstrings, tests and ``tools/`` reach nothing."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "mongo2mysql_spark"
+    def_types = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    modules = {str(p.relative_to(pkg)): ast.parse(p.read_text()) for p in sorted(pkg.rglob("*.py"))}
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    for rel, tree in modules.items():
+        for node in tree.body:
+            if isinstance(node, def_types):
+                defs.setdefault(node.name, []).append((f"{rel}:{node.name}", node))
+
+    def refs(node, strings: bool) -> tuple[set[str], set[str]]:
+        """(names, imported names) that ``node`` holds."""
+        names, imported = set(), set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                names.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                names.add(n.attr)
+            elif isinstance(n, ast.alias):
+                imported.update(n.name.split("."))
+            elif isinstance(n, ast.ImportFrom) and n.module:
+                imported.update(n.module.split("."))
+            elif strings and isinstance(n, ast.Constant) and isinstance(n.value, str):
+                names.update(n.value.split("."))
+        return names | imported, imported
+
+    def module_code(tree) -> list:
+        """What importing the module runs: its statements other than
+        defs, and the defs' decorators."""
+        return [
+            part
+            for n in tree.body
+            for part in (n.decorator_list if isinstance(n, def_types) else [n])
+        ]
+
+    entry_modules = {"cli.py", "pipelines.py", "sync.py", "porter.py"}
+    todo = [
+        (ast.Name(node.name), False)
+        for rel, tree in modules.items()
+        for node in tree.body
+        if isinstance(node, def_types)
+        and (
+            any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                for d in node.decorator_list
+            )
+            or (rel in entry_modules and not node.name.startswith("_"))
+        )
+    ]
+    entry_files = [root / "bench.py", root / "__spark_entry__.py", *sorted((root / "perfbench").glob("*.py"))]
+    todo += [(ast.parse(p.read_text()), True) for p in entry_files]
+    imported_mods = {rel for rel in modules if rel in entry_modules or rel.endswith("__init__.py")}
+    todo += [(n, False) for rel in imported_mods for n in module_code(modules[rel])]
+    reached: set[str] = set()
+    while todo:
+        names, imported = refs(*todo.pop())
+        for rel, tree in modules.items():
+            if rel not in imported_mods and pathlib.PurePath(rel).stem in imported:
+                imported_mods.add(rel)
+                todo += [(n, False) for n in module_code(tree)]
+        for name in names - reached:
+            reached.add(name)
+            todo += [(node, False) for _, node in defs.get(name, [])]
+    unreached = {where for name, ds in defs.items() if name not in reached for where, _ in ds}
+    return unreached | (set(modules) - imported_mods)
+
+
+def test_every_package_def_is_reached_or_kept_for_a_reason():
+    """Code no entry point reaches is deleted, with the tests that
+    exercise only it, unless ``UNREACHED_DEFS`` says why it stays."""
+    unreached = _unreached_package_code()
+    assert sorted(unreached - set(UNREACHED_DEFS)) == [], "unreached: delete it or list it"
+    assert sorted(set(UNREACHED_DEFS) - unreached) == [], "reached or gone: drop the entry"

@@ -263,71 +263,3 @@ def test_incremental_export_reads_only_new_docs(spark, tmp_path):
                             batch_size=7)
     assert r3["docs"] == 0 and coll4.queries == [{"_id": {"$gt": 24}}]
     assert dump(db) == dump(db_full)
-
-
-# -------------------------------------------- composite CMS string fold
-
-
-def test_cms_composite_fold_separates_url_scale_aliases(spark, tmp_path):
-    """URL keys sharing the first 16 chars AND length alias PERMANENTLY
-    under the single-window fold (a systematic merge upstream of the
-    sketch); the two-window composite separates them, stays inside the
-    cms_bucket key domain, matches its DuckDB restatement bit for bit,
-    and serves per-URL estimates the single fold provably fuses."""
-    import duckdb
-
-    from mongo2mysql_spark.operators.cms import (
-        CMS_KEY_MAX,
-        cms_build,
-        cms_estimate,
-        cms_fold_key,
-        cms_fold_key_composite,
-        cms_fold_key_composite_sql,
-    )
-
-    u1 = "https://www.example.com/path/a?id=1"
-    u2 = "https://www.example.com/path/b?id=2"  # same first 16, same len
-    urls = [u1] * 7 + [u2] * 3
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    folds = (
-        df.select(
-            cms_fold_key(F.col("url")).alias("f1"),
-            cms_fold_key_composite(F.col("url")).alias("fc"),
-        )
-        .distinct()
-        .collect()
-    )
-    f1s = {r["f1"] for r in folds}
-    fcs = {r["fc"] for r in folds}
-    assert len(f1s) == 1  # the provable single-fold alias
-    assert len(fcs) == 2  # the composite separates them
-    assert all(0 <= v <= CMS_KEY_MAX for v in fcs)
-
-    # engine parity of the composite fold itself
-    path = str(tmp_path / "urls")
-    df.write.parquet(path)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW urls AS SELECT * FROM read_parquet('{path}/*.parquet')"
-    )
-    duck = {
-        r[0]
-        for r in con.execute(
-            f"SELECT DISTINCT {cms_fold_key_composite_sql('url')} FROM urls"
-        ).fetchall()
-    }
-    assert duck == fcs
-
-    # sketched through the composite, the two URLs keep their own
-    # counts; through the single fold they fuse to the total
-    keyed = df.select(cms_fold_key_composite(F.col("url")).alias("k"))
-    grid = cms_build(keyed, "k", depth=4, width=64)
-    qry = (
-        df.distinct()
-        .select("url", cms_fold_key_composite(F.col("url")).alias("k"))
-    )
-    est = {
-        r["url"]: r["est"]
-        for r in cms_estimate(grid, qry, "k", depth=4, width=64).collect()
-    }
-    assert est[u1] == 7 and est[u2] == 3

@@ -528,17 +528,6 @@ def test_list_collections_gating_without_pymongo():
         list_collections("mongodb://h:27017", "db")
 
 
-def test_read_avro_gating_without_jar(spark, tmp_path):
-    """Avro reads degrade to a clear remedy when spark-avro is absent
-    (this container), instead of an opaque ClassNotFound."""
-    import pytest
-
-    from mongo2mysql_spark.sources.files import read_avro
-
-    with pytest.raises(RuntimeError, match="spark-avro not on classpath"):
-        read_avro(spark, str(tmp_path / "nope.avro"))
-
-
 def test_widen_then_upsert_interleave_live(spark, tmp_path):
     """Full rerun lifecycle on one LIVE table: CREATE -> upsert batch 1
     -> a wider batch arrives -> evolution DDL runs -> upsert batch 2 —

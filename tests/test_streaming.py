@@ -263,58 +263,6 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert got == {"a": 3, "b": 1, "c": 1}
 
 
-def test_streaming_rolling_zscore_matches_batch(spark):
-    """Replaying the bounded events stream through the stateful rolling
-    z-score reproduces the batch operator row-for-row (scores, flags,
-    and NULL warmups)."""
-    from pyspark.sql import functions as F
-
-    from mongo2mysql_spark.operators.anomaly import rolling_zscore
-    from mongo2mysql_spark.sources import load_table
-    from mongo2mysql_spark.streaming.pipeline import run_to_memory, stream_events
-    from mongo2mysql_spark.streaming.stateful import streaming_rolling_zscore
-    from tests.conftest import SF_DIR
-
-    keep = "user_id < 15"
-    stream = stream_events(spark, SF_DIR).filter(keep).select(
-        "user_id", "event_id", "ts", "value"
-    )
-    got = run_to_memory(
-        streaming_rolling_zscore(
-            stream, ["user_id"], ["ts", "event_id"], "value",
-            window=10, min_points=3,
-        ),
-        mode="append",
-        shuffle_partitions=8,
-    ).collect()
-
-    batch = load_table(spark, SF_DIR, "events").filter(keep).select(
-        "user_id", "event_id", "ts", "value"
-    )
-    want = rolling_zscore(
-        batch, ["user_id"], "ts", "value", window=10, min_points=3,
-        tiebreak_cols=["event_id"],
-    ).collect()
-
-    def keyed(rows):
-        return {
-            r["event_id"]: (r["zscore"], r["is_anomaly"]) for r in rows
-        }
-
-    g, w = keyed(got), keyed(want)
-    assert set(g) == set(w) and len(g) > 100
-    n_scored = 0
-    for eid, (z, flag) in w.items():
-        gz, gflag = g[eid]
-        if z is None:
-            assert gz is None, eid
-        else:
-            assert gz is not None and abs(gz - z) < 1e-9 * max(1.0, abs(z)), eid
-            n_scored += 1
-        assert gflag == flag, eid
-    assert n_scored > 50
-
-
 def test_streaming_rollup_refresh_equals_one_shot(spark, tmp_path):
     """Two stream runs (disjoint halves of events) against one partial
     store must serve hour/day/week levels IDENTICAL to the one-shot
