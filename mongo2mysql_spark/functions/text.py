@@ -176,32 +176,6 @@ PII_PATTERNS = (
 )
 
 
-# Corpus pre-clean patterns, applied in order (Java/RE2 shared subset,
-# like PII_PATTERNS): markup out first, then invisible characters, then
-# whitespace normalization.
-CLEAN_PATTERNS = (
-    # HTML/XML-ish tags: must START like a tag (letter, /, or !) so
-    # prose comparisons ("a < b and b > c") survive; bounded, no nesting
-    (r"</?[A-Za-z!][^<>]{0,300}>", " "),
-    (r"&(?:amp|lt|gt|quot|nbsp|#\d{1,7});", " "),  # common entities
-    (r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]", ""),     # C0 controls (keep \t \n \r)
-    (r"\s+", " "),                        # collapse whitespace runs
-)
-
-
-def clean_text(text: Column) -> Column:
-    """Standard corpus pre-clean before tokenization: strip HTML-ish
-    markup and entities, drop control characters, collapse whitespace,
-    trim.  Chained JVM ``regexp_replace`` (whole-stage codegen, no UDF)
-    in the same Java/RE2 shared subset as the PII scrub, so a DuckDB
-    restatement is bit-identical (parity-fuzzed in tests).  Idempotent:
-    clean(clean(x)) == clean(x)."""
-    out = text
-    for pattern, repl in CLEAN_PATTERNS:
-        out = F.regexp_replace(out, pattern, repl)
-    return F.trim(out)
-
-
 def redact_pii(text: Column) -> Column:
     """Replace URLs, emails, phone-shaped and long digit runs with typed
     placeholders — the standard scrub pass before training-corpus

@@ -12,16 +12,12 @@ tiebreaks, making results reproducible everywhere.
 Unlike a shuffled SUM, an array fold has no partition-order
 nondeterminism, so no decimal accumulation is needed — double folds
 are ~5× cheaper inside (interpreted) higher-order functions.
-``dot_exact``/``norm_exact`` keep the exact-decimal form for callers
-that need order-free accumulation over *shuffled* data.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-_DEC = "decimal(30,15)"
 
 
 def _products(a: Column, b: Column) -> Column:
@@ -55,38 +51,6 @@ def sql_dot(a: str, b: str) -> str:
 
 def sql_norm(a: str) -> str:
     return f"sqrt({sql_dot(a, a)})"
-
-
-# ---------------------------------------------------- exact-decimal variants
-
-
-def _dec_sum(arr: Column) -> Column:
-    return F.aggregate(
-        arr,
-        F.lit(0).cast(_DEC),
-        lambda acc, v: (acc + v.cast(_DEC)).cast(_DEC),
-    )
-
-
-def dot_exact(a: Column, b: Column) -> Column:
-    """Exact-decimal dot product → double.  Only needed when the
-    accumulation order is NOT fixed (e.g. summing partial dots across a
-    shuffle); for whole-array folds use ``dot_seq``."""
-    return _dec_sum(_products(a, b)).cast("double")
-
-
-def norm_exact(a: Column) -> Column:
-    return F.sqrt(_dec_sum(_products(a, a)).cast("double"))
-
-
-def cosine_exact(a: Column, b: Column, scale: int = 6) -> Column:
-    cos = dot_exact(a, b) / (norm_exact(a) * norm_exact(b))
-    return F.round(cos, scale)
-
-
-def dot_fast(a: Column, b: Column) -> Column:
-    """Alias of ``dot_seq`` kept for callers reading 'fast'."""
-    return dot_seq(a, b)
 
 
 # ------------------------------------------------------------ quantization

@@ -66,15 +66,6 @@ def bloom_build(
     ).distinct()
 
 
-def bloom_merge(*filters: DataFrame) -> DataFrame:
-    """Union of independently built filters — equivalent to building
-    once over the union of their key sets (tested)."""
-    out = filters[0]
-    for f in filters[1:]:
-        out = out.unionByName(f)
-    return out.distinct()
-
-
 def bloom_probe(
     candidates: DataFrame,
     bloom: DataFrame,

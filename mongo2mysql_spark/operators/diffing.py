@@ -13,14 +13,9 @@ Plan shape: ONE full-outer join on the key.  Change detection compares
 a single 64-bit fingerprint per side (``xxhash64`` over the compared
 columns, computed in the scan projection), so the join carries
 key + hash — a few bytes per row regardless of document width — and
-wide text/binary columns are pruned from the shuffle entirely.  The
-summary is one groupBy over the status column.  At 100 TB both sides
-shuffle once on the key; with both snapshots bucketed on the key,
-the join plans with zero Exchange.
-
-``include_cols`` on the detail frame re-joins the changed keys back to
-the snapshots to fetch full rows — keys-first, so the wide fetch only
-touches the (usually tiny) changed subset.
+wide text/binary columns are pruned from the shuffle entirely.  At
+100 TB both sides shuffle once on the key; with both snapshots
+bucketed on the key, the join plans with zero Exchange.
 """
 
 from __future__ import annotations
@@ -72,33 +67,3 @@ def snapshot_diff(
         .otherwise(F.lit(UNCHANGED))
     )
     return joined.select(*key_cols, status.alias("status"))
-
-
-def snapshot_diff_summary(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: list[str],
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
-    """One row per status with its key count — the audit artifact."""
-    return (
-        snapshot_diff(old, new, key_cols, compare_cols)
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def changed_rows(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: list[str],
-    compare_cols: list[str] | None = None,
-    statuses: tuple[str, ...] = (ADDED, CHANGED),
-) -> DataFrame:
-    """Full NEW-side rows for keys whose status is in ``statuses`` —
-    the incremental-work input (re-embed / re-decontam just these).
-    Keys-first: the wide row fetch joins only the changed key set."""
-    keys = snapshot_diff(old, new, key_cols, compare_cols).filter(
-        F.col("status").isin(*statuses)
-    )
-    return new.join(keys.select(*key_cols, "status"), key_cols, "inner")

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mongo2mysql_spark.functions.text import tokens, word_shingles
+from mongo2mysql_spark.functions.text import tokens
 
 
 def hashed_grams(df: DataFrame, id_col: str, text_col: str,

@@ -177,30 +177,6 @@ def execute_snowflake_plan(
     return out
 
 
-def execute_star_plan(
-    fact: tuple[str, DataFrame],
-    dims: list[tuple[str, DataFrame, str, str]],
-    peel: dict[tuple[int, ...], int],
-    dim_rows: list[int] | None = None,
-    broadcast_rows: int = BROADCAST_ROWS,
-) -> DataFrame:
-    """Build the left-deep star join in the DP's peel order (fact
-    first, then each dimension in :func:`star_peel_sequence` order —
-    the q5-shaped warehouse plan).  Each dimension is broadcast when
-    its cardinality fits ``broadcast_rows``; ``dim_rows`` supplies the
-    counts (the ANALYZE pass already knows them — pass them to keep
-    the executor job-free; None falls back to counting).
-    """
-    if dim_rows is None:
-        dim_rows = [ddf.count() for _, ddf, _fk, _dk in dims]
-    out = fact[1]
-    for d in star_peel_sequence(len(dims), peel):
-        _name, ddf, fk, dk = dims[d]
-        side = F.broadcast(ddf) if dim_rows[d] <= broadcast_rows else ddf
-        out = out.join(side, F.col(fk) == F.col(dk))
-    return out
-
-
 def graph_plan_tree(
     names: list[str], split: dict[int, int], mask: int | None = None
 ) -> tuple | str:

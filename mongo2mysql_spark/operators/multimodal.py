@@ -1,6 +1,6 @@
 """Multimodal column plumbing (extension layer): image/audio/video as
-opaque ``binary`` payloads + typed metadata, with decode / feature
-extraction as Arrow-batched ``mapInPandas`` stages.
+opaque ``binary`` payloads + typed metadata, with decode, audio
+framing and image patching as Arrow-batched ``mapInPandas`` stages.
 
 The container has no image/audio libraries, so the decode kernel is a
 STUB with two modes:
@@ -45,7 +45,7 @@ def payload_frame(df: DataFrame, id_col: Column, payload: Column, media_type: Co
 
 
 def decode_metadata(df: DataFrame, mode: str = "fake") -> DataFrame:
-    """Decode/feature-extract stage as ``mapInPandas`` (Arrow batches).
+    """Decode stage as ``mapInPandas`` (Arrow batches).
 
     ``df`` must be a payload_frame.  ``mode='real'`` marks the seam for
     actual media libraries (not present in this container).
@@ -87,36 +87,6 @@ def decode_metadata(df: DataFrame, mode: str = "fake") -> DataFrame:
     return df.select(
         "media_id", "media_type", "n_bytes", "checksum"
     ).mapInPandas(run, schema=DECODED_SCHEMA)
-
-
-def extract_features(df: DataFrame, dim: int = 16, mode: str = "fake") -> DataFrame:
-    """Feature-extraction stage: payload -> float embedding (the CLIP/
-    wav2vec seam).  The ``fake`` kernel derives a deterministic unit
-    vector from the payload's sha256 — downstream ANN/dedup plumbing
-    (array<float> column, cosine math) is exercised for real."""
-    if mode == "real":  # pragma: no cover - cluster-image integration point
-        raise NotImplementedError("real feature extraction needs a model runtime")
-
-    def run(batches: Iterator) -> Iterator:
-        import hashlib
-        import math as m
-        import struct
-
-        for pdf in batches:
-            out = pdf[["media_id"]].copy()
-            vecs = []
-            for payload in pdf["payload"]:
-                h = hashlib.sha256(bytes(payload)).digest()
-                raw = [
-                    struct.unpack(">H", h[(2 * i) % 30 : (2 * i) % 30 + 2])[0] / 65535.0 - 0.5
-                    for i in range(dim)
-                ]
-                norm = m.sqrt(sum(x * x for x in raw)) or 1.0
-                vecs.append([x / norm for x in raw])
-            out["features"] = vecs
-            yield out
-
-    return df.mapInPandas(run, schema="media_id long, features array<float>")
 
 
 FRAME_SCHEMA = (

@@ -172,30 +172,14 @@ def priority_sketch(
     witness must survive merging.  Any element ranked <= k+1 in a
     union is ranked <= k+1 in its own part (at most k union elements
     beat it), so the union's top-(k+1) is contained in the union of
-    part sketches — :func:`priority_merge` over DISJOINT parts is
-    therefore EXACTLY :func:`priority_sample` of the concatenation,
-    bit for bit (tests/test_priority.py pins it).  At 100 TB this is
+    part sketches — finalizing their union over DISJOINT parts
+    (streaming/priostore.py) is therefore EXACTLY
+    :func:`priority_sample` of the concatenation, bit for bit
+    (tests/test_priority.py pins it).  At 100 TB this is
     the point: per-partition/per-day sketches of k+1 rows each merge
     without rescanning anything."""
     base = _priority_base(df, key_col, weight_col, group_cols, salt)
     return _priority_ranked(base, k + 1, group_cols or []).drop("prank")
-
-
-def priority_merge(
-    sketches: list[DataFrame], k: int,
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Merge :func:`priority_sketch` frames over DISJOINT key sets
-    into the finished sample (same schema as :func:`priority_sample`).
-    Exact by the containment argument on the sketch docstring; inputs
-    are |groups|·(k+1)-row frames, so the merge never touches base
-    data."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    return _priority_finalize(u, k, group_cols or [])
 
 
 def sql_ph_spark(key_col: str, salt: str) -> str:

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def embedding_moments(df: DataFrame, vec_col: str) -> tuple[int, np.ndarray, np.ndarray]:

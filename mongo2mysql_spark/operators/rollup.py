@@ -131,10 +131,7 @@ def rollup_merge(store: DataFrame | None, batch_partials: DataFrame,
     rows ever seen (asserted in tests).  This is the continuous-
     aggregate refresh: each new ingest batch costs ONE aggregation of
     the batch plus one merge shuffled at partial (not raw) cardinality —
-    the raw history is never rescanned.  At scale the store lives as a
-    date-partitioned parquet table and the merge rides
-    ``lake.merge_into_partitioned`` so only the dates the batch touches
-    are rewritten (late data lands in its own bucket's partition).
+    the raw history is never rescanned.
     """
     if store is None:
         return batch_partials

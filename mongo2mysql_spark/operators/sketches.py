@@ -1,7 +1,5 @@
-"""Count-min sketch + heavy hitters (extension layer): approximate
-per-key frequencies in fixed memory — the hot-key detector that tells
-the skew levers (operators/skew.py) WHICH keys need salting at 100 TB,
-without an exact full-cardinality count.
+"""Count-min sketch (extension layer): approximate per-key frequencies
+in fixed memory, without an exact full-cardinality count.
 
 Cormode & Muthukrishnan, "An Improved Data Stream Summary: The
 Count-Min Sketch and its Applications" (J. Algorithms 2005): a depth x
@@ -101,24 +99,4 @@ def countmin_estimate(
     return (
         joined.groupBy(*group_cols)
         .agg(F.min(F.coalesce(F.col("c"), F.lit(0))).alias(out_col))
-    )
-
-
-def heavy_hitters(
-    df: DataFrame, key: Column, phi: float = 0.01, depth: int = 4,
-    width: int = 1024,
-) -> DataFrame:
-    """Keys whose estimated frequency is >= phi * N (one-sided: the
-    result is a SUPERSET of the true phi-heavy keys, since estimates
-    never undercount) — exactly the candidate set the salting levers
-    want.  Two passes over the data (sketch build + distinct keys),
-    both narrow; the sketch and the threshold broadcast."""
-    sk = countmin_build(df, key, depth, width)
-    n = df.count()
-    distinct = df.select(key.alias("key")).distinct()
-    est = countmin_estimate(
-        distinct, sk, F.col("key"), depth, width
-    )
-    return est.filter(F.col("est") >= F.lit(float(phi) * n)).select(
-        "key", "est"
     )

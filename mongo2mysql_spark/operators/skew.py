@@ -1,55 +1,19 @@
-"""Skew mitigation: salting for hot keys (SURVEY.md §4 scale levers).
+"""Skew mitigation: salting for hot groups (SURVEY.md §4 scale levers).
 
 Document-database key distributions are Zipfian (the reference's own
-``$allKeys`` tally, Porter.php:328-332) — one destination table can
-dominate.  AQE's skew-join splitting handles the join case; this module
-handles the *aggregation* case with the classic two-phase salted
-combine, and provides a salted-join helper for pre-AQE-style explicit
-control.
+``$allKeys`` tally, Porter.php:328-332) — one group can dominate.
+AQE's skew-join splitting handles the join case; this module handles
+per-group top-k, whose plain window sends each group to one reducer,
+with a two-phase salted ranking.
 
-Both are pure DataFrame compositions; correctness is independent of the
-salt count (tested), so the salt is a pure throughput knob.
+A pure DataFrame composition; correctness is independent of the salt
+count (tested), so the salt is a pure throughput knob.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str]],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation with a salt column: phase 1 aggregates on
-    (keys + salt) — spreading a hot key over ``salt_buckets`` reducers —
-    phase 2 merges the partials on the true keys.
-
-    ``aggs``: {out_col: (in_col, fn)} with fn ∈ {sum, count, min, max}
-    (the algebraic functions whose partials re-combine exactly).
-    """
-    salt = (F.spark_partition_id() + F.crc32(F.concat_ws("§", *keys))) % salt_buckets
-    phase1_aggs = []
-    phase2_aggs = []
-    for out, (col, fn) in aggs.items():
-        if fn == "count":
-            phase1_aggs.append(F.count(F.col(col)).alias(f"__p_{out}"))
-            phase2_aggs.append(F.sum(F.col(f"__p_{out}")).alias(out))
-        elif fn == "sum":
-            phase1_aggs.append(F.sum(F.col(col)).alias(f"__p_{out}"))
-            phase2_aggs.append(F.sum(F.col(f"__p_{out}")).alias(out))
-        elif fn == "min":
-            phase1_aggs.append(F.min(F.col(col)).alias(f"__p_{out}"))
-            phase2_aggs.append(F.min(F.col(f"__p_{out}")).alias(out))
-        elif fn == "max":
-            phase1_aggs.append(F.max(F.col(col)).alias(f"__p_{out}"))
-            phase2_aggs.append(F.max(F.col(f"__p_{out}")).alias(out))
-        else:
-            raise ValueError(f"non-algebraic agg not salt-safe: {fn}")
-    partial = df.withColumn("__salt", salt).groupBy(*keys, "__salt").agg(*phase1_aggs)
-    return partial.groupBy(*keys).agg(*phase2_aggs)
 
 
 def salted_topk_per_group(
@@ -83,64 +47,3 @@ def salted_topk_per_group(
         .filter(F.col("rank") <= k)
         .drop("__salt", "__rn")
     )
-
-
-def salted_join(
-    big: DataFrame, small: DataFrame, key: str, salt_buckets: int = 8
-) -> DataFrame:
-    """Explicit salted equi-join: the big side gets a random-ish salt in
-    [0, n); the small side is replicated n× with every salt value, so
-    the hot key's rows spread over n reducers.  AQE skew-join does this
-    adaptively; the explicit form documents the technique and works when
-    AQE is off (e.g. inside streaming micro-batches)."""
-    b = big.withColumn("__salt", (F.crc32(F.col(key).cast("string")) + F.spark_partition_id()) % salt_buckets)
-    replicate = F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("__salt")
-    s = small.select("*", replicate)
-    return b.join(s, [key, "__salt"]).drop("__salt")
-
-
-def salted_join_targeted(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    hot_keys: DataFrame,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Targeted salting: salt ONLY the detected hot keys — the
-    production refinement of `salted_join` once
-    `operators/sketches.heavy_hitters` has named the offenders.
-
-    Blanket salting replicates the ENTIRE small side ``salt_buckets``
-    times; with a hot-key list (tiny — broadcast) only hot-key rows
-    replicate, and the long tail joins 1:1 exactly as an unsalted join
-    would.  At 100 TB this is the difference between multiplying a
-    dimension table by 8 and multiplying a few hundred rows of it.
-
-    ``hot_keys`` must have a column named ``key``; both inputs keep
-    their full row sets (inner-join semantics on ``key``, equivalence
-    to the plain join is tested)."""
-    hot = F.broadcast(hot_keys.select(F.col(key).alias(key)).distinct()
-                      .withColumn("__hot", F.lit(1)))
-    b = (
-        big.join(hot, key, "left")
-        .withColumn(
-            "__salt",
-            F.when(
-                F.col("__hot").isNotNull(),
-                (F.crc32(F.col(key).cast("string")) + F.spark_partition_id())
-                % salt_buckets,
-            ).otherwise(F.lit(0)),
-        )
-        .drop("__hot")
-    )
-    s_flagged = small.join(hot, key, "left")
-    s = s_flagged.select(
-        "*",
-        F.explode(
-            F.when(
-                F.col("__hot").isNotNull(),
-                F.sequence(F.lit(0), F.lit(salt_buckets - 1)),
-            ).otherwise(F.array(F.lit(0)))
-        ).alias("__salt"),
-    ).drop("__hot")
-    return b.join(s, [key, "__salt"]).drop("__salt")

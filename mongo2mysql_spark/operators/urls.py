@@ -10,8 +10,8 @@ The unit operations are:
   (``utm_*``, click ids), lowercase the host (paths stay
   case-sensitive), drop trailing slashes, sort surviving query
   parameters so param order can't split a group.
-- **url_host / registered_domain** — the aggregation keys for
-  host-level stats and blocklist joins.
+- **url_host** — the aggregation key for host-level stats and
+  blocklist joins.
 - **url_dedup** — min-id representative per normalized URL (the exact
   dedup recipe of operators/dedup.py applied to the URL key).
 - **host_profile** — docs + distinct pages per host, the table host
@@ -81,46 +81,6 @@ def normalize_url(url: Column) -> Column:
 def url_host(norm_url: Column) -> Column:
     """Host of an already-normalized URL (text before '/' or '?')."""
     return F.element_at(F.split(norm_url, "[/?]", 2), 1)
-
-
-# common multi-part public suffixes (the high-traffic subset of the
-# public suffix list; pass the full PSL as `extra_suffixes` when loaded)
-MULTIPART_SUFFIXES = (
-    "co.uk", "org.uk", "gov.uk", "ac.uk", "com.au", "net.au", "org.au",
-    "co.jp", "ne.jp", "or.jp", "co.in", "co.za", "com.br", "com.cn",
-    "com.mx", "com.tr", "co.kr", "com.sg",
-)
-
-
-def registered_domain(
-    host: Column, extra_suffixes: tuple[str, ...] = ()
-) -> Column:
-    """Registrable domain of a host ('a.b.example.com' -> 'example.com',
-    'news.x.co.uk' -> 'x.co.uk').  Uses the built-in high-traffic
-    multi-part-suffix subset of the public suffix list (extend via
-    ``extra_suffixes`` when the full PSL is loaded); everything else
-    falls back to the last two labels.  A host that IS a listed suffix
-    has no registrable domain and passes through unchanged (so bare
-    suffixes never collapse into one '' group key), and each suffix
-    extracts len(labels)+1 trailing labels — 3+-label PSL entries
-    (e.g. 'pref.aichi.jp') work, not just the two-label built-ins.
-    One chained-when expression — no UDF, no lookup join needed at
-    this list size."""
-    two = F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
-    out = two
-    # shortest suffixes first: the when-chain's LAST writer wins, so a
-    # longer nested suffix ('x.co.uk') must wrap a shorter one ('co.uk')
-    for suffix in sorted(
-        MULTIPART_SUFFIXES + tuple(extra_suffixes), key=lambda s: s.count(".")
-    ):
-        nlabels = suffix.count(".") + 2
-        pat = r"([^.]+" + r"(?:\.[^.]+)" * (nlabels - 1) + r")$"
-        out = (
-            F.when(host == suffix, host)
-            .when(host.endswith("." + suffix), F.regexp_extract(host, pat, 1))
-            .otherwise(out)
-        )
-    return out
 
 
 def url_dedup(

@@ -15,9 +15,9 @@ hashable operator:
 
 - :func:`z_value` is pure integer bit arithmetic (shift/and/or), bit-
   identical in DuckDB, so Morton keys themselves hash cross-engine;
-- :func:`z_bucket_stats` emits the per-bucket (count, min/max per
-  column) boxes for the z layout AND the linear layout side by side —
-  the zone-map geometry both engines can verify;
+- :func:`layout_bucket_stats` emits the per-bucket (count, min/max
+  per column) boxes for the z, linear and Hilbert layouts side by
+  side — the zone-map geometry both engines can verify;
 - :func:`prune_counts` evaluates a rectangular predicate against
   those boxes: how many buckets (files) must be read under each
   layout — the actual skipping win, as exact integers.
@@ -122,67 +122,16 @@ def _norm_base(df: DataFrame, cols: list[str], bits: int) -> DataFrame:
     )
 
 
-def z_bucket_stats(
-    df: DataFrame, cols: list[str], bits: int, n_buckets: int
-) -> DataFrame:
-    """Per-bucket zone-map boxes under the z layout AND the linear
-    (leading-column sort) layout, side by side — deterministic
-    fixed-width key ranges so both engines agree exactly.
-
-    Columns are RANGE-NORMALIZED to ``bits`` bits before interleaving
-    (``((c - lo)·2^bits) DIV (hi - lo + 1)`` with data-derived lo/hi —
-    the standard z-order recipe; interleaving RAW values with unequal
-    domains wastes the top interleave bits on the narrow column's
-    constant zeros and degenerates to a coarse linear layout, a
-    pitfall this operator's first draft measured).  The reported
-    min/max boxes are raw-domain (what a scan's row-group pruning
-    consumes).
-
-    Output: (layout, bucket, n, min0, max0, min1, max1) with layout
-    in {'z', 'linear'}; z buckets split the normalized Morton key's
-    top log2(n_buckets) bits, linear buckets split the LEADING
-    column's normalized value the same way."""
-    n = len(cols)
-    if n != 2:
-        raise ValueError("z_bucket_stats compares 2-column layouts")
-    if n_buckets < 2 or n_buckets & (n_buckets - 1):
-        raise ValueError(f"n_buckets must be a power of two: {n_buckets}")
-    shift = n * bits - (n_buckets - 1).bit_length()
-    lshift = bits - (n_buckets - 1).bit_length()
-    base = _norm_base(df, cols, bits)
-    z = z_value([F.col("nc0"), F.col("nc1")], bits)
-    zb = base.select(
-        F.lit("z").alias("layout"),
-        F.shiftright(z, shift).cast("long").alias("bucket"),
-        "c0", "c1",
-    )
-    lb = base.select(
-        F.lit("linear").alias("layout"),
-        F.shiftright(F.col("nc0"), lshift).cast("long").alias("bucket"),
-        "c0", "c1",
-    )
-    return (
-        zb.unionByName(lb)
-        .groupBy("layout", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("c0").alias("min0"),
-            F.max("c0").alias("max0"),
-            F.min("c1").alias("min1"),
-            F.max("c1").alias("max1"),
-        )
-    )
-
-
 def sql_z_bucket_stats(
     source_sql: str, cols_sql: list[str], bits: int, n_buckets: int,
     prefix: str = "zb",
 ) -> str:
-    """DuckDB twin of :func:`z_bucket_stats`; ends in
+    """DuckDB twin of :func:`layout_bucket_stats`' 'z' and 'linear'
+    rows; ends in
     ``<prefix>stats(layout, bucket, n, min0, max0, min1, max1)``."""
     n = len(cols_sql)
     if n != 2:
-        raise ValueError("z_bucket_stats compares 2-column layouts")
+        raise ValueError("sql_z_bucket_stats compares 2-column layouts")
     if n_buckets < 2 or n_buckets & (n_buckets - 1):
         raise ValueError(f"n_buckets must be a power of two: {n_buckets}")
     x = prefix
@@ -359,54 +308,30 @@ def sql_with_hilbert(
     return ",\n    ".join(ctes)
 
 
-def hilbert_bucket_stats(
-    df: DataFrame, cols: list[str], bits: int, n_buckets: int
-) -> DataFrame:
-    """Zone-map boxes under the HILBERT layout — same output shape as
-    :func:`z_bucket_stats` with layout = 'hilbert' (union them and one
-    :func:`prune_counts` call compares all layouts).  Hilbert's
-    unit-step locality (consecutive indexes are grid neighbors —
-    pinned in tests on the reference walk) gives boxes at least as
-    tight as Morton's, whose curve jumps across the grid at quadrant
-    seams."""
-    n = len(cols)
-    if n != 2:
-        raise ValueError("hilbert_bucket_stats compares 2-column layouts")
-    if n_buckets < 2 or n_buckets & (n_buckets - 1):
-        raise ValueError(f"n_buckets must be a power of two: {n_buckets}")
-    shift = 2 * bits - (n_buckets - 1).bit_length()
-    base = with_hilbert(
-        _norm_base(df, cols, bits), "nc0", "nc1", bits, out="hd"
-    )
-    return (
-        base.select(
-            F.lit("hilbert").alias("layout"),
-            F.shiftright(F.col("hd"), shift).cast("long").alias("bucket"),
-            "c0", "c1",
-        )
-        .groupBy("layout", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("c0").alias("min0"),
-            F.max("c0").alias("max0"),
-            F.min("c1").alias("min1"),
-            F.max("c1").alias("max1"),
-        )
-    )
-
-
 def layout_bucket_stats(
     df: DataFrame, cols: list[str], bits: int, n_buckets: int
 ) -> DataFrame:
-    """All three layouts' zone-map boxes in ONE pass: row-identical to
-    ``z_bucket_stats(df, ...) UNION hilbert_bucket_stats(df, ...)``
-    (tested), but the input is scanned once — the shared normalized
-    base (+ Hilbert walk) fans out to the three (layout, bucket) tags
-    via a narrow explode, and one map-side-combined groupBy aggregates
-    all layouts together.  The separate operators scan ``df`` twice
-    per layout family (domain aggregate + main pass, 6 scans for the
-    z/linear/hilbert comparison this fuses — measured as the dominant
-    build cost of the zorder readout slot)."""
+    """Per-bucket zone-map boxes under the z, linear (leading-column
+    sort) and Hilbert layouts in ONE pass — deterministic fixed-width
+    key ranges so both engines agree exactly (DuckDB twins:
+    :func:`sql_z_bucket_stats` and :func:`sql_hilbert_bucket_stats`,
+    unioned; tested).
+
+    Columns are RANGE-NORMALIZED to ``bits`` bits before interleaving
+    (``((c - lo)·2^bits) DIV (hi - lo + 1)`` with data-derived lo/hi —
+    the standard z-order recipe; interleaving RAW values with unequal
+    domains wastes the top interleave bits on the narrow column's
+    constant zeros and degenerates to a coarse linear layout).  The
+    reported min/max boxes are raw-domain (what a scan's row-group
+    pruning consumes).
+
+    Output: (layout, bucket, n, min0, max0, min1, max1); z and Hilbert
+    buckets split the top log2(n_buckets) bits of the normalized curve
+    index, linear buckets split the LEADING column's normalized value
+    the same way.  The shared normalized base (+ Hilbert walk) fans out
+    to the three (layout, bucket) tags via a narrow explode, and one
+    map-side-combined groupBy aggregates all layouts together, so the
+    domain aggregate and the main pass run once for all three."""
     n = len(cols)
     if n != 2:
         raise ValueError("layout_bucket_stats compares 2-column layouts")
@@ -455,13 +380,13 @@ def sql_hilbert_bucket_stats(
     source_sql: str, cols_sql: list[str], bits: int, n_buckets: int,
     prefix: str = "hb",
 ) -> str:
-    """DuckDB twin of :func:`hilbert_bucket_stats`; ends in
+    """DuckDB twin of :func:`layout_bucket_stats`' 'hilbert' rows; ends in
     ``<prefix>stats(layout, bucket, n, min0, max0, min1, max1)``.
     Reuses the same normalization CTE shape as the z restatement
     (its own prefix, so the two can coexist in one WITH list)."""
     n = len(cols_sql)
     if n != 2:
-        raise ValueError("hilbert_bucket_stats compares 2-column layouts")
+        raise ValueError("sql_hilbert_bucket_stats compares 2-column layouts")
     if n_buckets < 2 or n_buckets & (n_buckets - 1):
         raise ValueError(f"n_buckets must be a power of two: {n_buckets}")
     x = prefix
@@ -491,20 +416,3 @@ def sql_hilbert_bucket_stats(
              min(c0) AS min0, max(c0) AS max0,
              min(c1) AS min1, max(c1) AS max1
       FROM {x}w{bits + 1} GROUP BY 1, 2)"""
-
-
-def cluster_by_hilbert(
-    df: DataFrame, cols: list[str], bits: int, n_files: int
-) -> DataFrame:
-    """The Hilbert write-side layout — :func:`cluster_by_z` with the
-    Hilbert index as the range-partition key.  ``cols`` must already
-    be in [0, 2^bits) (normalize with the same range recipe the stats
-    use); two columns only (the walk is 2-D)."""
-    if len(cols) != 2:
-        raise ValueError("cluster_by_hilbert is 2-D")
-    keyed = with_hilbert(df, cols[0], cols[1], bits, out="__h")
-    return (
-        keyed.repartitionByRange(n_files, "__h")
-        .sortWithinPartitions("__h")
-        .drop("__h")
-    )

@@ -100,16 +100,6 @@ def widen(type1: str, type2: str) -> str:
     return "varchar(255)"
 
 
-def widen_all(types) -> str:
-    """Fold of ``widen`` over an iterable (left-to-right, mirroring the
-    reference's incremental per-row widening)."""
-    it = iter(types)
-    acc = next(it)
-    for t in it:
-        acc = widen(acc, t)
-    return acc
-
-
 # ------------------------------------------------------- Spark-type bridging
 
 _SPARK_SIMPLE = {

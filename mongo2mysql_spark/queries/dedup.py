@@ -16,7 +16,6 @@ from mongo2mysql_spark.functions.text import tokens, word_shingles
 from mongo2mysql_spark.queries.text import sql_quality
 from mongo2mysql_spark.operators.dedup import (
     content_hash,
-    dedup_exact,
     embedding_neardup_pairs,
     lsh_plan_sql,
     minhash_signature,

@@ -1993,20 +1993,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------------- sort/limit/set
-
-
-# Not a registry entry (slot ceded to corpus_clean_pipeline): global
-# top-N semantics stay covered by topk_parts_per_brand's ordered output
-# and the TakeOrderedAndProject plan assertion in tests/test_plans.py,
-# which drives this function directly.
-def sort_limit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = T(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_totalprice", "o_orderdate")
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(20)
-    )
+# -------------------------------------------------------------------- set ops
 
 
 _SET_OPS_SQL = """

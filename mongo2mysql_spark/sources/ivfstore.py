@@ -16,8 +16,8 @@ ride the same layout (``pq_encode(keep=["centroid_id"])``).
 
 Reference parity: none — the reference has no vector surface; this is
 the extension layer's storage counterpart to ``operators/similarity``'s
-IVF search (SURVEY §2 EXT), same role as ``sources/lake``'s z-order
-layout for range predicates.
+IVF search (SURVEY §2 EXT), same role as ``operators/zorder``'s
+``cluster_by_z`` layout for range predicates.
 """
 
 from __future__ import annotations

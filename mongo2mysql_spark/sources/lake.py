@@ -1,60 +1,19 @@
-"""Lake-layout write path: partitioned, sorted, size-bounded parquet
-(SURVEY.md §2 'Scans/sources/sinks' — the 100 TB write-side concerns the
+"""Lake write path: the training-corpus shard writer
+(SURVEY.md §2 'Scans/sources/sinks' — the write-side concerns the
 reference never had: it wrote one MySQL row at a time, Porter.php:207).
 
-Three levers a large-scale pipeline needs from its staging writes:
-
-- **Partition layout** (`write_partitioned`): hive-style
-  ``partitionBy`` directories so downstream reads get partition
-  PRUNING (a filter on the partition column skips whole directories
-  at plan time — visible as ``PartitionFilters`` in the scan node).
-  The frame is shuffled onto its partition columns first so each
-  directory is written by few tasks (without this, every task writes
-  a file into every directory: tasks × partitions small files).
-- **File sizing**: ``maxRecordsPerFile`` bounds the large end; the
-  pre-shuffle bounds the small end.  Target ~128 MB files: big enough
-  to amortize footer/open costs, small enough to split scans evenly.
-- **Row-group stats ordering** (``sort_cols``): sorting within files
-  clusters values so parquet min/max row-group statistics become
-  selective — reads with range predicates on the sort key skip row
-  groups ("poor man's z-order" for one dimension).
-- **Compaction** (`compact_parquet`): streaming/incremental appends
-  accumulate small files; periodic rewrite to ~target-size files keeps
-  scan task counts sane.  One coalesce-free repartition = one shuffle
-  of the data being compacted.
+``write_training_shards`` writes a globally shuffled, fixed-shard
+corpus: a deterministic per-record rank, one shuffle keyed on shard,
+rows ordered by rank inside each shard directory.  ``parquet_files``
+lists the data files under a parquet root.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    sort_cols: list[str] | None = None,
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Hive-partitioned parquet write with small-file-safe task layout.
-
-    ``repartition(*partition_cols)`` co-locates each output directory's
-    rows on few tasks; ``sortWithinPartitions`` then orders rows inside
-    each task so every file covers a narrow range of ``sort_cols``
-    (selective parquet min/max stats).  AQE may coalesce the shuffle's
-    small partitions, further reducing file count."""
-    out = df.repartition(*[F.col(c) for c in partition_cols])
-    if sort_cols:
-        out = out.sortWithinPartitions(*partition_cols, *sort_cols)
-    writer = out.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.partitionBy(*partition_cols).parquet(path)
 
 
 def write_training_shards(
@@ -99,94 +58,6 @@ def write_training_shards(
         writer.json(path)
 
 
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    num_files: int | None = None,
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Globally range-clustered parquet: ``repartitionByRange`` assigns
-    each task a contiguous slice of ``cluster_cols``, and the in-task
-    sort orders rows inside it — every output file covers a narrow,
-    non-overlapping value range, so parquet min/max stats prune files
-    AND row groups for range predicates on the cluster key (the
-    single-dimension equivalent of z-ordering).  One shuffle; the range
-    boundaries come from Spark's reservoir sample of the input."""
-    parts = [F.col(c) for c in cluster_cols]
-    out = (
-        df.repartitionByRange(num_files, *parts)
-        if num_files
-        else df.repartitionByRange(*parts)
-    )
-    out = out.sortWithinPartitions(*cluster_cols)
-    writer = out.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(path)
-
-
-def add_zorder_key(
-    df: DataFrame, cols: list[str], bits: int = 16, out_col: str = "_z"
-) -> DataFrame:
-    """Morton (z-order) key over N numeric columns: each value is
-    scaled into ``bits`` buckets of its observed [min, max] range (one
-    tiny stats job, the same price Delta's OPTIMIZE ZORDER pays), then
-    the per-dimension bucket bits are interleaved into one long.
-    Sorting by the key clusters rows that are close in EVERY dimension
-    — the multi-column generalization of `write_clustered`'s range
-    layout.  The whole key is one codegen expression (shift/mask/add
-    terms, no UDF).  Nulls sort first (scaled bucket 0)."""
-    if not (1 <= len(cols) * bits <= 63):
-        raise ValueError(f"bits×dims must fit a long, got {len(cols)}×{bits}")
-    mins = [F.min(F.col(c).cast("double")).alias(f"__mn_{i}") for i, c in enumerate(cols)]
-    maxs = [F.max(F.col(c).cast("double")).alias(f"__mx_{i}") for i, c in enumerate(cols)]
-    row = df.agg(*mins, *maxs).first()
-    top = (1 << bits) - 1
-    scaled = []
-    for i, c in enumerate(cols):
-        mn, mx = row[f"__mn_{i}"], row[f"__mx_{i}"]
-        span = (mx - mn) if (mn is not None and mx is not None and mx > mn) else 1.0
-        s = (F.coalesce(F.col(c).cast("double"), F.lit(mn or 0.0)) - F.lit(mn or 0.0)) / F.lit(
-            span
-        ) * F.lit(float(top))
-        scaled.append(F.least(F.greatest(s.cast("long"), F.lit(0)), F.lit(top)))
-    nd = len(cols)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, s in enumerate(scaled):
-            z = z + F.shiftleft(F.shiftright(s, i).bitwiseAND(F.lit(1)), i * nd + j)
-    return df.withColumn(out_col, z)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    num_files: int | None = None,
-    bits: int = 16,
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered parquet: range-partition + in-task sort on the
-    Morton key, so every output file covers a small hyper-rectangle of
-    the z-ordered column space — parquet min/max stats prune files and
-    row groups for predicates on ANY of the z-order columns, not just a
-    single leading sort key.  One stats job + one shuffle."""
-    keyed = add_zorder_key(df, zorder_cols, bits=bits)
-    out = (
-        keyed.repartitionByRange(num_files, F.col("_z"))
-        if num_files
-        else keyed.repartitionByRange(F.col("_z"))
-    )
-    out = out.sortWithinPartitions("_z").drop("_z")
-    writer = out.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(path)
-
-
 def parquet_files(path: str) -> list[str]:
     """Data files under a parquet root (recursive, excludes _SUCCESS)."""
     found = []
@@ -197,187 +68,4 @@ def parquet_files(path: str) -> list[str]:
     return sorted(found)
 
 
-def merge_into_partitioned(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    partition_col: str,
-) -> list[str]:
-    """Partition-scoped MERGE (REPLACE-on-key upsert) into a
-    hive-partitioned parquet dataset, without a table format:
-
-    1. the update batch's distinct partition values — a tiny collect
-       (CDC batches touch few partitions);
-    2. read ONLY those partitions of the base (partition pruning — the
-       scan never sees untouched directories);
-    3. anti-join the base slice on ``key_cols`` (drop rows being
-       replaced), union the updates, rewrite JUST those directories via
-       staging + directory swap — untouched partitions' files are never
-       read, rewritten, or moved.
-
-    Returns the list of partition values rewritten.  Cost is
-    proportional to the touched partitions, not the table — the lake
-    analogue of the JDBC sink's REPLACE idempotence (A15): re-merging
-    the same batch is a no-op in content terms.
-
-    Contract: ``key_cols`` must be partition-stable (a key never moves
-    between partition values — the norm for date/tenant-partitioned
-    CDC); updates must carry ``partition_col``.
-    """
-    touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    if not touched:
-        return []
-    base = spark.read.parquet(path).filter(F.col(partition_col).isin(touched))
-    merged = base.join(
-        updates.select(*key_cols).distinct(), key_cols, "left_anti"
-    ).unionByName(updates.select(*base.columns))
-    staging = path.rstrip("/") + ".__merge_staging__"
-    write_partitioned(merged, staging, [partition_col])
-    import shutil
-
-    for v in touched:
-        sub = f"{partition_col}={v}"
-        src, dst = os.path.join(staging, sub), os.path.join(path, sub)
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        os.rename(src, dst)
-    shutil.rmtree(staging)
-    return sorted(str(v) for v in touched)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet dataset into ~target-size files; returns the
-    new file count.  Reads the current on-disk size (compressed — the
-    right sizing basis for scan planning), computes the target file
-    count, and rewrites via one shuffle.  Partitioned datasets keep
-    their layout: compaction re-shuffles onto the partition columns so
-    each directory collapses to few files.
-
-    The rewrite goes through a staging directory then an atomic-ish
-    rename, so a failed compaction never destroys the input."""
-    files = parquet_files(path)
-    total = sum(os.path.getsize(f) for f in files)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + ".__compact_staging__"
-    if partition_cols:
-        write_partitioned(df, staging, partition_cols)
-    else:
-        df.repartition(n_files).write.mode("overwrite").parquet(staging)
-    backup = path.rstrip("/") + ".__compact_backup__"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    import shutil
-
-    shutil.rmtree(backup)
-    return len(parquet_files(path))
-
-
 # ------------------------------------------------- bloom file skipping
-
-
-def write_bloom_index(
-    spark: SparkSession,
-    path: str,
-    key_col: str,
-    m_bits: int = 1 << 16,
-    k: int = 3,
-) -> dict:
-    """Per-file Bloom-filter sidecar for equality-predicate file
-    skipping — the third pruning mode next to partition dirs and
-    min/max stats (Delta/Iceberg ship the same idea as per-file bloom
-    metadata): min/max stats prune RANGES but are useless for point
-    lookups on high-cardinality unclustered keys, where a tiny bloom
-    per file answers "could this file contain key X" directly.
-
-    One pass over the table: every row contributes its key's k
-    md5-derived positions (operators/bloom.bloom_position) tagged with
-    ``input_file_name()``; the distinct (file, pos) set lands in an
-    underscore-prefixed sidecar dir (``<path>/_bloom/<key>``) that
-    parquet readers ignore.  Sidecar size is bounded by
-    files × min(m, keys_per_file × k) — KBs per file at practical m.
-
-    Returns {"n_files": ..., "n_positions": ...}.
-    """
-    from mongo2mysql_spark.operators.bloom import bloom_position
-
-    df = spark.read.parquet(path).select(
-        F.input_file_name().alias("file"), F.col(key_col)
-    )
-    positions = df.select(
-        "file",
-        F.explode(
-            F.array(*[bloom_position(F.col(key_col), j, m_bits) for j in range(k)])
-        ).alias("pos"),
-    ).distinct()
-    side_dir = os.path.join(path, "_bloom", key_col)
-    positions.write.mode("overwrite").parquet(side_dir)
-    import json
-
-    meta = {
-        "m_bits": m_bits,
-        "k": k,
-        "n_files": positions.select("file").distinct().count(),
-        "n_positions": positions.count(),
-    }
-    with open(os.path.join(side_dir, "_meta.json"), "w") as fh:
-        json.dump(meta, fh)
-    return meta
-
-
-def _bloom_positions_py(value: object, k: int, m_bits: int) -> list[int]:
-    """Driver-side mirror of operators/bloom.bloom_position: md5 of
-    '<value>#<j>', first 12 hex digits, mod m.  Matches Spark's
-    CAST(value AS STRING) for ints and strings (parity-tested)."""
-    import hashlib
-
-    return [
-        int(hashlib.md5(f"{value}#{j}".encode()).hexdigest()[:12], 16) % m_bits
-        for j in range(k)
-    ]
-
-
-def read_with_bloom_skip(
-    spark: SparkSession,
-    path: str,
-    key_col: str,
-    value: object,
-) -> tuple[DataFrame, dict]:
-    """Equality read ``key_col = value`` that opens only the files
-    whose bloom admits the value.  Probes the sidecar (one tiny job on
-    the (file, pos) set — never the data), reads candidate files, and
-    re-applies the exact predicate (bloom false positives are filtered
-    by the scan, never returned).  Returns (result, report) with
-    ``report = {"n_files_total", "n_files_read"}``.
-
-    No false negatives: a key present in a file always probes positive
-    (the bloom contract), so the result equals the full-scan filter.
-    """
-    import json
-
-    side_dir = os.path.join(path, "_bloom", key_col)
-    with open(os.path.join(side_dir, "_meta.json")) as fh:
-        meta = json.load(fh)
-    probes = _bloom_positions_py(value, meta["k"], meta["m_bits"])
-    side = spark.read.parquet(side_dir)
-    n_total = side.select("file").distinct().count()
-    candidates = [
-        r["file"]
-        for r in side.filter(F.col("pos").isin(probes))
-        .groupBy("file")
-        .agg(F.countDistinct("pos").alias("n"))
-        .filter(F.col("n") == len(set(probes)))
-        .collect()
-    ]
-    report = {"n_files_total": n_total, "n_files_read": len(candidates)}
-    if not candidates:
-        empty = spark.read.parquet(path).filter(F.col(key_col) == value).limit(0)
-        return empty, report
-    result = spark.read.parquet(*candidates).filter(F.col(key_col) == value)
-    return result, report

@@ -19,9 +19,7 @@ Plan shape: ONE left join of the dimension against the (deduplicated)
 batch on the key — change batches are small next to the dimension, so
 Catalyst broadcasts them — then a single projection that routes each
 row to carry-through / close / reopen; new keys arrive via one
-anti-join union.  No window over the dimension, no global sort.  At
-100 TB pair this with ``lake.merge_into_partitioned`` so only the
-partitions containing touched keys are rewritten.
+anti-join union.  No window over the dimension, no global sort.
 
 Idempotent by construction: re-applying a batch finds every change
 already recorded (attributes equal on the open version) and produces

@@ -17,8 +17,7 @@ Design (the standard metadata-layer shape):
 - reads resolve a manifest and hand Spark the explicit file list:
   a reader holding version N is isolated from every later commit;
 - ``rollback`` is a NEW commit whose file set is the old version's
-  (history is never rewritten); ``vacuum`` deletes data directories
-  unreferenced by any kept manifest.
+  (history is never rewritten).
 
 Scale: the data path is ordinary parquet (all pruning/pushdown
 applies); manifests are O(files) JSON — the known metadata bottleneck
@@ -32,7 +31,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,7 +63,7 @@ def commit(df: DataFrame, table: str, mode: str = "append") -> int:
 
     ``append``: new version = parent's file set + this commit's files.
     ``overwrite``: new version = this commit's files only (old data
-    files remain on disk for time travel until ``vacuum``).
+    files remain on disk for time travel).
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown mode: {mode}")
@@ -144,46 +142,3 @@ def rollback(table: str, to_version: int) -> int:
     }
     _publish_manifest(table, version, manifest)
     return version
-
-
-def compact(spark: SparkSession, table: str) -> int:
-    """Rewrite the head version's content as one fresh commit — the
-    file-count bound for append-heavy tables.
-
-    Append commits grow the manifest by one entry per data file, and
-    every snapshot read plans over that whole list: after N appends of
-    F files each the manifest holds N·F paths (the O(files)-JSON
-    bottleneck the module docstring flags; real formats amortize it
-    with avro manifest lists).  Compaction reads the head snapshot and
-    commits it as a single ``overwrite`` — the new manifest references
-    only the rewritten files, while every historical version still
-    resolves (its data dirs remain until ``vacuum``).  Run it when the
-    manifest length passes a few thousand entries, then ``vacuum`` to
-    reclaim the superseded directories."""
-    return commit(read_version(spark, table), table, mode="overwrite")
-
-
-def vacuum(table: str, keep_last: int = 2) -> list[str]:
-    """Drop manifests older than the last ``keep_last`` versions and
-    delete data directories no kept version references.  Returns the
-    removed directory names."""
-    head = current_version(table)
-    if head is None:
-        return []
-    cutoff = head - keep_last + 1
-    vdir = os.path.join(table, _VDIR)
-    for f in list(os.listdir(vdir)):
-        if f.startswith("v") and f.endswith(".json") and int(f[1:-5]) < cutoff:
-            os.remove(os.path.join(vdir, f))
-    referenced = set()
-    for f in os.listdir(vdir):
-        if f.startswith("v") and f.endswith(".json"):
-            for p in _load_manifest(table, int(f[1:-5]))["files"]:
-                referenced.add(p.split(os.sep)[1])
-    removed = []
-    data_root = os.path.join(table, "data")
-    for d in sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []:
-        if d not in referenced:
-            shutil.rmtree(os.path.join(data_root, d))
-            removed.append(d)
-    return removed

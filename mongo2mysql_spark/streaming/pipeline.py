@@ -2,11 +2,11 @@
 reference, engine extension per SURVEY §7 Step 7).
 
 The batch ETL transforms (routing A10, flatten A8) are stateless
-projections, so they lift to streams unchanged — the same column
-expressions are applied to a ``readStream`` frame.  Stateful pieces use
-the engine's streaming-native forms: watermarks for late data, tumbling
-/ sliding / session windows, ``foreachBatch`` reusing the batch JDBC
-upsert sink for exactly-once-per-epoch delivery.
+projections, so they lift to streams unchanged:
+``stream_collection_export`` runs the batch porter inside
+``foreachBatch``.  Stateful pieces use the engine's streaming-native
+forms: watermarks for late data, tumbling / sliding / session windows,
+watermarked stream-stream joins.
 
 Test harness: the parquet fixtures drive a stream via
 ``processAllAvailable`` into a memory sink, which makes streaming
@@ -90,20 +90,6 @@ def session_windows(stream: DataFrame, gap: str = "30 minutes",
     )
 
 
-def streaming_dedup(stream: DataFrame, keys: list[str], ts_col: str = "ts",
-                    watermark: str = "2 hours") -> DataFrame:
-    """Streaming exact dedup: keep the first arrival per key.
-
-    The streaming analogue of ``operators/dedup.dedup_exact``.  Plain
-    ``dropDuplicates`` on a stream keeps ALL keys ever seen in state —
-    unbounded growth at ingest rates.  ``dropDuplicatesWithinWatermark``
-    bounds state to the late-data horizon: a duplicate arriving within
-    ``watermark`` of the first sighting is dropped, later state is
-    evicted — the only dedup contract that stays finite at 100 TB/day.
-    """
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
 def stream_static_enrich(
     stream: DataFrame, dim: DataFrame, on: str, dim_cols: list[str],
     how: str = "inner",
@@ -136,14 +122,6 @@ def stream_stream_interval_join(
     l_wm = left.withWatermark(left_ts, watermark)
     r_wm = right.withWatermark(right_ts, watermark)
     return l_wm.join(r_wm, F.expr(condition), "inner")
-
-
-def streaming_route(stream: DataFrame, key_col: str, collection: str) -> DataFrame:
-    """The batch routing operator applied to a stream — stateless, so
-    identical semantics (demonstrates the ETL lift)."""
-    from mongo2mysql_spark.operators.routing import add_table_column
-
-    return add_table_column(stream, key_col, collection)
 
 
 def run_to_memory(
@@ -180,18 +158,6 @@ def run_to_memory(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
     return spark.table(name)
-
-
-def foreach_batch_upsert(stream: DataFrame, table: str, connection_factory,
-                         mode: str = "replace", batch_size: int = 1000):
-    """Streaming sink reusing the batch JDBC upsert (A15): REPLACE-on-PK
-    makes epoch replays idempotent — exactly-once effective delivery."""
-    from mongo2mysql_spark.sources.jdbc import write_upsert
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        write_upsert(batch_df, table, connection_factory, mode=mode, batch_size=batch_size)
-
-    return stream.writeStream.foreachBatch(handle)
 
 
 def stream_collection_export(

@@ -31,11 +31,6 @@ single-writer):
 - superseded store directories are removed after publication, keeping
   the previous one so a reader that resolved the old manifest moments
   earlier can finish its scan.
-
-At cluster scale with a date-partitioned store, swap the full-store
-rewrite for ``lake.merge_into_partitioned`` so only the dates a batch
-touches are rewritten — late events land in their own bucket's
-partition.
 """
 
 from __future__ import annotations

@@ -463,3 +463,15 @@ def test_attribution_credit_models(spark):
         for r in got.groupBy("purchase_id").agg(F.sum("credit").alias("s")).collect()
     }
     assert sums == {5: 1.0, 9: 1.0}
+
+
+def test_attr_ctes_share_funnel_window_constant():
+    """The attribution oracle CTEs interpolate FUNNEL_WINDOW_MS (the
+    same constant the Spark branch passes) — a hardcoded ms literal
+    would silently desync the restatement if the window changed."""
+    from mongo2mysql_spark.queries.behavior import (
+        _ATTR_CTES,
+        FUNNEL_WINDOW_MS,
+    )
+
+    assert f"<= {FUNNEL_WINDOW_MS})" in _ATTR_CTES

@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mongo2mysql_spark.operators.bloom import (
-    bloom_build,
-    bloom_merge,
-    bloom_probe,
-)
+from mongo2mysql_spark.operators.bloom import bloom_build, bloom_probe
 
 M, K = 1 << 12, 3
 
@@ -33,16 +29,6 @@ def test_false_positive_rate_bounded(spark):
     )
     # n=200, k=3, m=4096 -> p ~ (1 - e^(-600/4096))^3 ~ 0.26%; allow 5x
     assert fp.count() <= 2000 * 0.013
-
-
-def test_merge_equals_union_build(spark):
-    a, b = _keys(spark, 0, 100), _keys(spark, 50, 150)
-    merged = bloom_merge(
-        bloom_build(a, "k", m_bits=M, k=K), bloom_build(b, "k", m_bits=M, k=K)
-    )
-    direct = bloom_build(a.unionByName(b), "k", m_bits=M, k=K)
-    assert merged.exceptAll(direct).count() == 0
-    assert direct.exceptAll(merged).count() == 0
 
 
 def test_hit_counts_match_probe_join_composition(spark):

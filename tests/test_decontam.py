@@ -288,57 +288,3 @@ def test_winnow_property_fuzz_vs_python_reference(spark):
     for row in rows:
         toks = row.text.split(" ") if row.text else [""]
         assert out[row.doc_id] == _winnow_ref(toks, 5, 4), (row.doc_id, row.text)
-
-
-def test_clean_text_semantics_idempotence_and_duckdb_parity(spark):
-    """Corpus pre-clean: planted markup/entity/control/whitespace cases,
-    idempotence (clean∘clean == clean), and Java-vs-RE2 parity of the
-    exact pattern chain."""
-    import duckdb
-
-    from pyspark.sql import Row
-
-    from mongo2mysql_spark.functions.text import CLEAN_PATTERNS, clean_text
-
-    rows = [
-        Row(i=0, s="keep <b>bold</b> and <a href='x'>link</a> text"),
-        Row(i=1, s="entities &amp; more &lt;tag&gt; &#8217; &nbsp; done"),
-        Row(i=2, s="ctrl\x00chars\x07here\x1fgone"),
-        Row(i=3, s="  runs \t of\n\n whitespace   collapse  "),
-        Row(i=4, s="a < b and b > c stay (tags must start like tags)"),
-        Row(i=5, s=""),
-        Row(i=6, s="<" + "x" * 400 + "> long pseudo-tag survives the bound"),
-    ]
-    df = spark.createDataFrame(rows)
-    got = {
-        r["i"]: r["c"]
-        for r in df.select("i", clean_text(F.col("s")).alias("c")).collect()
-    }
-    assert got[0] == "keep bold and link text"
-    # entity codes become spaces; the word between &lt;...&gt; survives
-    # (it was never a real tag)
-    assert got[1] == "entities more tag done"
-    assert got[2] == "ctrlcharsheregone"
-    assert got[3] == "runs of whitespace collapse"
-    assert "<" in got[4] and ">" in got[4]
-    assert got[5] == ""
-    assert got[6].startswith("<xxx")  # >300-char tag NOT stripped (bounded)
-
-    # idempotence
-    twice = {
-        r["i"]: r["c2"]
-        for r in df.select(
-            "i", clean_text(clean_text(F.col("s"))).alias("c2")
-        ).collect()
-    }
-    assert twice == got
-
-    # DuckDB parity of the exact chain
-    con = duckdb.connect()
-    expr = "?"
-    for pattern, repl in CLEAN_PATTERNS:
-        expr = f"regexp_replace({expr}, '{pattern}', '{repl}', 'g')"
-    expr = f"trim({expr})"
-    for row in rows:
-        want = con.execute(f"SELECT {expr}", [row.s]).fetchone()[0]
-        assert got[row.i] == want, (row.i, got[row.i], want)

@@ -122,81 +122,6 @@ def test_execute_chain_plan_follows_dp_structure(spark, tmp_path):
         )
 
 
-def test_execute_star_plan_peel_order_and_broadcasts(spark, tmp_path):
-    """The star executor joins dims most-selective-first (the DP peel
-    order), broadcasts each dim that fits, and the physical scan order
-    in the plan text is fact-then-peel-order — the left-deep build the
-    DP chose, q5-shaped."""
-    from mongo2mysql_spark.operators.joinexec import (
-        execute_star_plan,
-        star_peel_sequence,
-    )
-    from mongo2mysql_spark.operators.joinorder import (
-        star_join_stats,
-        star_plan_dp,
-    )
-
-    # fact: 300 rows; dims with planted selectivities: d1 matches all,
-    # d2 matches half, d3 matches a tenth → peel order must be 3,2,1
-    fact_rows = [(1 + i % 100, 1 + i % 50, 1 + i % 10, i) for i in range(300)]
-    fp = str(tmp_path / "tbl_fact")
-    spark.createDataFrame(
-        fact_rows, "fk1 long, fk2 long, fk3 long, payload long"
-    ).write.parquet(fp)
-    paths = {"f": fp}
-    dim_specs = [
-        ("d1", [(k,) for k in range(1, 101)], "dk1 long", "fk1", "dk1"),
-        ("d2", [(k,) for k in range(1, 26)], "dk2 long", "fk2", "dk2"),
-        ("d3", [(1,)], "dk3 long", "fk3", "dk3"),
-    ]
-    dims = []
-    for name, rows, schema, fk, dk in dim_specs:
-        p = str(tmp_path / f"tbl_{name}")
-        spark.createDataFrame(rows, schema).write.parquet(p)
-        paths[name] = p
-        dims.append((name, spark.read.parquet(p), fk, dk))
-    fact = ("f", spark.read.parquet(fp))
-
-    rows_fact, est6 = star_join_stats(fact, dims, n_buckets=8)
-    est, cost, peel = star_plan_dp(rows_fact, est6)
-    seq = star_peel_sequence(len(dims), peel)
-    assert seq == [2, 1, 0]  # most-selective dimension first
-
-    with _no_auto_broadcast(spark):
-        got = execute_star_plan(fact, dims, peel,
-                                dim_rows=[100, 25, 1])
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        # every dim fits the threshold → 3 broadcast joins, dims built
-        assert plan.count("BroadcastHashJoin") == 3, plan
-        assert plan.count("BuildRight") == 3, plan
-        # physical scan order: fact first, then dims in peel order
-        # (scan markers: each table's unique ReadSchema struct — plan
-        # text truncates file paths)
-        scan = {
-            "f": "struct<fk1:bigint",
-            "d1": "struct<dk1:bigint>",
-            "d2": "struct<dk2:bigint>",
-            "d3": "struct<dk3:bigint>",
-        }
-        order = ["f"] + [dim_specs[d][0] for d in seq]
-        positions = [plan.index(scan[n]) for n in order]
-        assert positions == sorted(positions), (order, positions)
-
-        # answer unchanged vs declaration order
-        naive = fact[1]
-        for name, ddf, fk, dk in dims:
-            naive = naive.join(ddf, F.col(fk) == F.col(dk))
-        cols = sorted(naive.columns)
-        assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
-            map(tuple, naive.select(*cols).collect())
-        )
-        # a dim past the threshold stays un-broadcast (shuffle join)
-        tight = execute_star_plan(fact, dims, peel, dim_rows=[100, 25, 1],
-                                  broadcast_rows=50)
-        tight_plan = tight._jdf.queryExecution().executedPlan().toString()
-        assert tight_plan.count("BroadcastHashJoin") == 2, tight_plan
-
-
 def test_execute_snowflake_plan_structure_and_answer(spark, tmp_path):
     """The snowflake executor builds each arm as its own subtree in
     the arm's internal DP order, joins arms onto the fact in peel

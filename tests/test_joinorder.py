@@ -253,3 +253,33 @@ def test_chain_estimates_track_true_multiway_join_sizes(spark, tmp_path):
         assert true_n > 0
         # FK chains with mild skew: composed estimate within 2x
         assert 0.5 <= est / true_n <= 2.0, (subset, est, true_n)
+
+
+def test_star_plan_rejects_non_contiguous_label_collision(spark):
+    """Star subsets are arbitrary dim subsets: dims ['a','zz','b','ab']
+    collide ({a,b} and {ab} both label 'fab') even though every
+    contiguous interval is unambiguous — both the Spark planner and
+    the SQL generator must reject the fixture up front instead of
+    emitting duplicate subset keys / duplicate CTE names."""
+    from mongo2mysql_spark.operators.joinorder import (
+        star_join_plan,
+        star_join_plan_sql,
+    )
+
+    with pytest.raises(ValueError, match="subset labels collide"):
+        star_join_plan_sql(
+            ("fact", "f"),
+            [("ta", "a", "k", "k"), ("tzz", "zz", "k", "k"),
+             ("tb", "b", "k", "k"), ("tab", "ab", "k", "k")],
+        )
+    one = spark.createDataFrame([(1,)], "k long")
+    with pytest.raises(ValueError, match="subset labels collide"):
+        star_join_plan(
+            spark, ("f", one),
+            [("a", one, "k", "k"), ("zz", one, "k", "k"),
+             ("b", one, "k", "k"), ("ab", one, "k", "k")],
+        )
+    # interval-unambiguous chain names stay accepted by the chain check
+    from mongo2mysql_spark.operators.joinorder import _check_labels
+
+    _check_labels(["a", "zz", "b", "ab"])

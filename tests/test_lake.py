@@ -1,5 +1,5 @@
-"""Lake write-path behavior: partition pruning reaches the scan,
-file sizing is honored, compaction preserves data."""
+"""Lake and table-layout behavior: training shards, SCD2 history,
+versioned tables, the IVF store's partition-pruned probe."""
 
 from __future__ import annotations
 
@@ -9,203 +9,10 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from mongo2mysql_spark.sources.lake import (
-    compact_parquet,
-    parquet_files,
-    write_partitioned,
-)
+from mongo2mysql_spark.sources.lake import parquet_files
 from mongo2mysql_spark.sources.parquet import load_table
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_partitioned_write_prunes_on_read(spark):
-    """A filter on the partition column must hit PartitionFilters (whole
-    directories skipped at plan time), not a post-scan Filter only."""
-    orders = load_table(spark, SF, "orders")
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "orders_by_status")
-        write_partitioned(
-            orders, path, ["o_orderstatus"], sort_cols=["o_orderdate"]
-        )
-        back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
-        plan = back._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "o_orderstatus" in plan.split(
-            "PartitionFilters"
-        )[1].split("]")[0]
-        want = orders.filter(F.col("o_orderstatus") == "F").count()
-        assert back.count() == want
-        # hive layout on disk: one directory per status value
-        dirs = {d for d in os.listdir(path) if d.startswith("o_orderstatus=")}
-        n_statuses = orders.select("o_orderstatus").distinct().count()
-        assert len(dirs) == n_statuses
-
-
-def test_max_records_per_file(spark):
-    orders = load_table(spark, SF, "orders")  # 1500 rows at sf0.001
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "sized")
-        write_partitioned(orders, path, ["o_orderstatus"], max_records_per_file=200)
-        import pyarrow.parquet as pq
-
-        for f in parquet_files(path):
-            assert pq.ParquetFile(f).metadata.num_rows <= 200
-
-
-def test_compaction_reduces_files_and_preserves_rows(spark):
-    orders = load_table(spark, SF, "orders")
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "frag")
-        # simulate a fragmented incremental landing zone: 64 tiny files
-        orders.repartition(64).write.parquet(path)
-        assert len(parquet_files(path)) >= 32
-        before = sorted(map(repr, spark.read.parquet(path).collect()))
-        n_after = compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
-        assert n_after < 8
-        assert n_after == len(parquet_files(path))
-        after = sorted(map(repr, spark.read.parquet(path).collect()))
-        assert after == before
-
-
-def test_compaction_keeps_partition_layout(spark):
-    orders = load_table(spark, SF, "orders")
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "part_frag")
-        # fragmented partitioned landing: every task writes to every dir
-        orders.repartition(16).write.partitionBy("o_orderstatus").parquet(path)
-        frag = len(parquet_files(path))
-        compact_parquet(
-            spark, path, target_file_bytes=64 * 1024 * 1024,
-            partition_cols=["o_orderstatus"],
-        )
-        assert len(parquet_files(path)) < frag
-        dirs = {d for d in os.listdir(path) if d.startswith("o_orderstatus=")}
-        assert len(dirs) == orders.select("o_orderstatus").distinct().count()
-        # pruning still works after compaction
-        back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
-        assert "PartitionFilters" in back._jdf.queryExecution().executedPlan().toString()
-
-
-def test_clustered_write_narrows_file_ranges(spark):
-    """write_clustered (repartitionByRange + in-task sort) must produce
-    files whose min/max span a narrow non-overlapping slice of the
-    cluster key (what makes parquet stats selective for range reads)."""
-    from mongo2mysql_spark.sources.lake import write_clustered
-
-    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_extendedprice")
-    with tempfile.TemporaryDirectory() as tmp:
-        sorted_path = os.path.join(tmp, "sorted")
-        write_clustered(li, sorted_path, ["l_extendedprice"], num_files=4)
-        import pyarrow.parquet as pq
-
-        files = parquet_files(sorted_path)
-        assert len(files) >= 3
-        global_min = li.agg(F.min("l_extendedprice")).collect()[0][0]
-        global_max = li.agg(F.max("l_extendedprice")).collect()[0][0]
-        spans = []
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            col_idx = [md.schema.column(i).name for i in range(md.num_columns)].index(
-                "l_extendedprice"
-            )
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            spans.append((max(maxs) - min(mins)) / (global_max - global_min))
-        # average file covers well under the full value range
-        assert sum(spans) / len(spans) < 0.6
-
-
-def test_zorder_write_bounds_both_dims(spark):
-    """Z-ordered files must cover a narrow slice of BOTH z-order columns
-    (multi-dim data skipping), where single-dim range clustering leaves
-    the second column's per-file span at ~the full range."""
-    import pyarrow.parquet as pq
-
-    from mongo2mysql_spark.sources.lake import write_clustered, write_zordered
-
-    li = load_table(spark, "/root/testdata/sf0.01", "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-
-    def span_frac(path: str, col: str) -> float:
-        lo, hi = li.agg(F.min(col), F.max(col)).collect()[0]
-        fracs = []
-        for f in parquet_files(path):
-            md = pq.ParquetFile(f).metadata
-            idx = [md.schema.column(i).name for i in range(md.num_columns)].index(col)
-            stats = [md.row_group(rg).column(idx).statistics for rg in range(md.num_row_groups)]
-            fracs.append((max(s.max for s in stats) - min(s.min for s in stats)) / (hi - lo))
-        return sum(fracs) / len(fracs)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        zpath = os.path.join(tmp, "zorder")
-        write_zordered(li, zpath, ["l_orderkey", "l_partkey"], num_files=16)
-        assert len(parquet_files(zpath)) >= 8
-        # each file covers a bounded rectangle: ~1/4 of each dim for 16 files
-        assert span_frac(zpath, "l_orderkey") < 0.5
-        assert span_frac(zpath, "l_partkey") < 0.5
-        # round trip preserves the data
-        assert spark.read.parquet(zpath).count() == li.count()
-
-        cpath = os.path.join(tmp, "range1d")
-        write_clustered(li, cpath, ["l_orderkey"], num_files=16)
-        assert span_frac(cpath, "l_orderkey") < 0.15  # sharper on its one dim
-        assert span_frac(cpath, "l_partkey") > 0.8    # blind on the other
-
-
-def test_zorder_key_rejects_overflow(spark):
-    from mongo2mysql_spark.sources.lake import add_zorder_key
-
-    li = load_table(spark, SF, "lineitem")
-    try:
-        add_zorder_key(li, ["l_orderkey"] * 5, bits=16)
-        raise AssertionError("5×16 bits must be rejected")
-    except ValueError:
-        pass
-
-
-def test_merge_into_partitioned_touches_only_affected_dirs(spark):
-    """CDC merge must replace-by-key inside touched partitions, append
-    new keys, and leave every untouched partition's files byte-for-byte
-    alone (same inodes — never read or rewritten)."""
-    from mongo2mysql_spark.sources.lake import merge_into_partitioned
-
-    orders = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "orders")
-        write_partitioned(orders, path, ["o_orderstatus"])
-        before = {f: os.stat(f).st_ino for f in parquet_files(path)}
-        n0 = spark.read.parquet(path).count()
-
-        # updates: bump price of 5 existing 'F' orders, add 2 new keys
-        some = [r["o_orderkey"] for r in orders.filter(F.col("o_orderstatus") == "F")
-                .orderBy("o_orderkey").limit(5).collect()]
-        upd = spark.createDataFrame(
-            [(k, 999.5, "F") for k in some] + [(10**9 + i, 1.5, "F") for i in range(2)],
-            "o_orderkey bigint, o_totalprice double, o_orderstatus string",
-        )
-        touched = merge_into_partitioned(spark, path, upd, ["o_orderkey"], "o_orderstatus")
-        assert touched == ["F"]
-
-        back = spark.read.parquet(path)
-        assert back.count() == n0 + 2
-        got = {r["o_orderkey"]: r["o_totalprice"]
-               for r in back.filter(F.col("o_orderkey").isin(some + [10**9, 10**9 + 1])).collect()}
-        assert all(got[k] == 999.5 for k in some)
-        assert got[10**9] == 1.5 and got[10**9 + 1] == 1.5
-        # untouched partitions: identical files, same inodes
-        after = {f: os.stat(f).st_ino for f in parquet_files(path)}
-        for f, ino in before.items():
-            if "o_orderstatus=F" not in f:
-                assert after.get(f) == ino, f
-        # idempotence: re-merging the same batch changes nothing
-        merge_into_partitioned(spark, path, upd, ["o_orderkey"], "o_orderstatus")
-        assert spark.read.parquet(path).count() == n0 + 2
 
 
 def test_training_shards_shuffle(spark):
@@ -428,23 +235,22 @@ def test_scd2_random_batches_match_python_reference(spark):
     assert got == want
 
 
-def test_versioned_table_time_travel_rollback_vacuum(spark, tmp_path):
+def test_versioned_table_time_travel_and_rollback(spark, tmp_path):
     """Versioned parquet table: snapshot isolation (a reader pinned to
     v0 is untouched by later commits), append/overwrite semantics per
-    version, rollback restores an old file set as a NEW version, vacuum
-    removes only unreferenced data dirs, and snapshot_diff works across
-    two versions without copying."""
-    import os
+    version, rollback restores an old file set as a NEW version, and
+    snapshot_diff works across two versions without copying."""
+    from collections import Counter
 
+    import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from mongo2mysql_spark.operators.diffing import snapshot_diff_summary
+    from mongo2mysql_spark.operators.diffing import snapshot_diff
     from mongo2mysql_spark.sources.versioned import (
         commit,
         current_version,
         read_version,
         rollback,
-        vacuum,
     )
 
     table = str(tmp_path / "docs_v")
@@ -465,12 +271,12 @@ def test_versioned_table_time_travel_rollback_vacuum(spark, tmp_path):
     assert v0.count() == 100
 
     # diff two pinned versions without copying either
-    summary = {
-        r["status"]: r["n"]
-        for r in snapshot_diff_summary(
+    summary = Counter(
+        r["status"]
+        for r in snapshot_diff(
             read_version(spark, table, 1), read_version(spark, table, 2), ["id"]
         ).collect()
-    }
+    )
     # id=0: 0*2 == 0*3, genuinely unchanged
     assert summary["removed"] == 100 and summary["changed"] == 49
     assert summary["unchanged"] == 1
@@ -479,22 +285,8 @@ def test_versioned_table_time_travel_rollback_vacuum(spark, tmp_path):
     assert rollback(table, 1) == 3
     assert read_version(spark, table).count() == 150
     assert read_version(spark, table, 2).count() == 50  # history intact
-
-    # vacuum keeping the last 2 versions (v2, v3): v0/v1 manifests go,
-    # but v3 (rollback) references v0+v1 data dirs, so only the
-    # overwrite commit's dir that v2 references is kept via v2... all
-    # referenced -> nothing removed with keep_last=2
-    removed = vacuum(table, keep_last=2)
-    assert removed == []
-    assert read_version(spark, table).count() == 150
-    # drop everything but the head: v2's dir becomes unreferenced
-    removed = vacuum(table, keep_last=1)
-    assert len(removed) == 1
-    assert read_version(spark, table).count() == 150
-    import pytest as _pytest
-
     with _pytest.raises(FileNotFoundError):
-        read_version(spark, table, 0)
+        read_version(spark, table, 9)
 
 
 def test_versioned_concurrent_commit_raises(spark, tmp_path):
@@ -528,39 +320,6 @@ def test_versioned_concurrent_commit_raises(spark, tmp_path):
         V.current_version = orig
     # the racer's manifest is untouched and the table still reads
     assert read_version(spark, table, 0).count() == 10
-
-
-def test_versioned_manifest_compaction_bounds_file_count(spark, tmp_path):
-    """Append commits grow the manifest one entry per data file; compact
-    rewrites the head as a single commit whose manifest references only
-    the fresh files, content and history both preserved."""
-    from mongo2mysql_spark.sources.versioned import (
-        _load_manifest,
-        commit,
-        compact,
-        current_version,
-        read_version,
-    )
-
-    table = str(tmp_path / "t")
-    for i in range(4):
-        commit(
-            spark.range(i * 10, (i + 1) * 10).repartition(3),
-            table,
-            mode="append" if i else "overwrite",
-        )
-    head = current_version(table)
-    before = _load_manifest(table, head)["files"]
-    assert len(before) >= 8  # 4 commits x >=2 files each
-
-    v = compact(spark, table)
-    after = _load_manifest(table, v)["files"]
-    assert len(after) < len(before)
-    assert len({f.split("/")[1] for f in after}) == 1  # one commit dir
-    # content identical, history still resolvable
-    rows = lambda df: sorted(r["id"] for r in df.collect())  # noqa: E731
-    assert rows(read_version(spark, table, v)) == rows(read_version(spark, table, head))
-    assert rows(read_version(spark, table, 0)) == list(range(10))
 
 
 def test_upsert_commits_per_batch_before_failure(spark, tmp_path):
@@ -603,69 +362,6 @@ def test_mongodb_reader_options_sample_and_pipeline_interaction():
     assert opts["sampleSize"] == "5"
     assert opts["aggregation.pipeline"] == pipeline
     assert "aggregation.pipeline" not in reader_options("mongodb://h/", "db", "c")
-
-
-def test_bloom_index_skips_files_on_point_lookup(spark, tmp_path):
-    """Bloom file skipping: a point lookup on a clustered key opens a
-    strict subset of files, returns exactly the full-scan answer, and
-    an absent key touches (almost) nothing — with zero false negatives
-    by construction."""
-    from pyspark.sql import functions as F
-
-    from mongo2mysql_spark.sources.lake import (
-        parquet_files,
-        read_with_bloom_skip,
-        write_bloom_index,
-        write_clustered,
-    )
-
-    path = str(tmp_path / "tbl")
-    df = spark.range(0, 2000).select(
-        F.col("id"), (F.col("id") % 100).alias("k"), (F.col("id") * 7).alias("v")
-    )
-    # cluster on k so each key lands in few files
-    write_clustered(df, path, ["k"], num_files=8)
-    n_files = len(parquet_files(path))
-    assert n_files >= 4
-
-    meta = write_bloom_index(spark, path, "k")
-    assert meta["n_files"] == n_files
-
-    # sidecar must be invisible to plain readers
-    assert spark.read.parquet(path).count() == 2000
-
-    got, report = read_with_bloom_skip(spark, path, "k", 42)
-    expect = sorted(r.id for r in df.filter("k = 42").collect())
-    assert sorted(r.id for r in got.collect()) == expect
-    assert report["n_files_total"] == n_files
-    assert 1 <= report["n_files_read"] < n_files
-
-    # absent key: no false negatives to worry about, near-zero reads
-    got2, report2 = read_with_bloom_skip(spark, path, "k", 12345)
-    assert got2.count() == 0
-    assert report2["n_files_read"] <= 1  # FP allowance
-
-
-def test_bloom_index_python_probe_parity(spark):
-    """The driver-side probe hash must equal the Spark-side position
-    expression for int and string keys — the no-false-negative
-    guarantee rides on this."""
-    from pyspark.sql import functions as F
-
-    from mongo2mysql_spark.operators.bloom import bloom_position
-    from mongo2mysql_spark.sources.lake import _bloom_positions_py
-
-    m, k = 1 << 16, 3
-    vals = [0, 42, 999999, "site3.example.com", "a b c"]
-    df = spark.createDataFrame([(str(v),) for v in vals], "x string")
-    spark_pos = df.select(
-        "x", *[bloom_position(F.col("x"), j, m).alias(f"p{j}") for j in range(k)]
-    ).collect()
-    for row in spark_pos:
-        v = row.x
-        # int-typed keys stringify identically on both sides
-        expected = _bloom_positions_py(v, k, m)
-        assert [row.p0, row.p1, row.p2] == expected
 
 
 def test_ivf_store_partition_pruned_probe(spark, tmp_path):

@@ -8,13 +8,13 @@ from datetime import datetime
 import pytest
 from hypothesis import given, strategies as st
 
+from mongo2mysql_spark.plans.infer import infer_table_schema
 from mongo2mysql_spark.plans.lattice import (
     ObjectIdStr,
     UnknownTypeError,
     guess_db_type,
     varchar_bucket,
     widen,
-    widen_all,
 )
 
 # -------------------------------------------------------------- guess parity
@@ -42,15 +42,25 @@ from mongo2mysql_spark.plans.lattice import (
         ("x" * 512, "varchar(512)"),
     ],
 )
-def test_guess_db_type(value, expected):
+def test_guess_db_type(spark, value, expected):
+    """The scalar guess (Porter.php:358-396) and the distributed schema
+    pass agree on every quirk case: a one-value column infers as the
+    value guesses."""
     assert guess_db_type(value) == expected
+    if isinstance(value, ObjectIdStr):
+        return  # Spark has no ObjectId type: the porter reads ids as strings
+    spark_type = {int: "long", float: "double", datetime: "timestamp"}.get(type(value), "string")
+    df = spark.createDataFrame([(value,)], f"v {spark_type}")
+    assert infer_table_schema(df) == {"v": expected}
 
 
-def test_guess_unknown_raises():
+def test_guess_unknown_raises(spark):
     with pytest.raises(UnknownTypeError):
         guess_db_type(object())
     with pytest.raises(UnknownTypeError):
         guess_db_type(True)  # PHP is_int(bool) is false → throw
+    with pytest.raises(UnknownTypeError):
+        infer_table_schema(spark.createDataFrame([(True,)], "v boolean"))
 
 
 # -------------------------------------------------------------- widen parity
@@ -108,11 +118,6 @@ def test_widen_not_associative_documented():
     closure instead of folding in row order (lattice.py docstring)."""
     a, b, c = "varchar(50)", "varchar(512)", "datetime"
     assert widen(widen(a, c), b) != widen(widen(a, b), c)
-
-
-def test_widen_all_fold():
-    assert widen_all(["int", "double", "int"]) == "double"
-    assert widen_all(["int", "varchar(100)"]) == "varchar(255)"
 
 
 def test_varchar_bucket_bounds():

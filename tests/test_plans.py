@@ -62,14 +62,6 @@ def test_semi_anti_join_strategies(spark):
     assert "LeftAnti" in plan
 
 
-def test_sort_limit_is_take_ordered(spark):
-    """Global top-N must not global-sort: TakeOrderedAndProject."""
-    from mongo2mysql_spark.queries.relational import sort_limit_orders
-
-    df = sort_limit_orders(spark, SF_DIR)
-    assert "TakeOrderedAndProject" in physical_plan(df)
-
-
 def test_flatten_has_no_shuffle(spark):
     df = REGISTRY["etl_flatten"].fn(spark, SF_DIR)
     plan = physical_plan(df)
@@ -350,12 +342,11 @@ def test_dynamic_partition_pruning_fires_on_partitioned_join(spark, tmp_path):
     when the dim filter only selects a few."""
     from pyspark.sql import functions as F
 
-    from mongo2mysql_spark.sources.lake import write_partitioned
     from mongo2mysql_spark.sources.parquet import load_table
 
     orders = load_table(spark, SF_DIR, "orders")
     path = str(tmp_path / "orders_by_status")
-    write_partitioned(orders, path, ["o_orderstatus"])
+    orders.write.partitionBy("o_orderstatus").parquet(path)
 
     fact = spark.read.parquet(path)
     dim = spark.createDataFrame(
@@ -675,6 +666,33 @@ def test_every_persist_site_has_a_release_path():
     )
 
 
+def test_every_module_import_is_used():
+    """Every top-level import in a package module (``__init__`` aside,
+    whose imports re-export) is used in that module: an import that
+    outlives the code that used it hides which modules depend on
+    which.  AST-based, like the persist guard above."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "mongo2mysql_spark"
+    unused = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text())
+        names = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                unused += [
+                    f"{path.relative_to(pkg)}:{node.lineno} {bound}"
+                    for a in node.names
+                    if (bound := a.asname or a.name.split(".")[0]) not in names
+                ]
+    assert not unused, unused
+
+
 def test_environment_reads_are_deployment_settings_only():
     """The package reads the environment only for deployment settings:
     the data path, the core count and the driver heap.  A behaviour
@@ -885,6 +903,10 @@ def test_lazy_checkpoints_only_shrink():
 UNREACHED_DEFS = {
     # references that a test checks a reached def against
     "operators/anomaly.py:rolling_zscore": "float twin of rolling_frame_stats in test_rolling_frame_stats_agrees_with_float_zscore",
+    "operators/bloom.py:bloom_probe": "probe-then-join composition that test_hit_counts_match_probe_join_composition checks bloom_hit_counts against",
+    "operators/joinexec.py:chain_plan_tree": "the DP's chain tree that test_execute_chain_plan_follows_dp_structure checks execute_chain_plan's plan against",
+    "operators/joinexec.py:snowflake_plan_tree": "the DP's snowflake tree that test_execute_snowflake_plan_structure_and_answer checks execute_snowflake_plan's plan against",
+    "operators/joinexec.py:graph_plan_tree": "the DP's join tree that test_execute_graph_plan_cycle_edge_and_structure checks execute_graph_plan's plan against",
     "operators/pq.py:_l2sq_seq": "sequential fold that test_expanded_distance_bit_equals_fold checks the codegen expansion against",
     "operators/pq.py:_sub": "helper of _l2sq_seq",
     "operators/pq.py:_dists_to_cents": "unexpanded distance form in test_expanded_distance_bit_equals_fold",
@@ -893,58 +915,13 @@ UNREACHED_DEFS = {
     "operators/rollup.py:hypertable_rollup": "one-shot rollup that the streaming and incremental refresh tests compare with",
     "operators/zorder.py:hilbert_ref": "scalar Hilbert curve that test_with_hilbert_matches_reference_and_duckdb checks with_hilbert against",
     "functions/vector.py:dequantize_embedding": "inverse of quantize_embedding in test_embedding_quantization_roundtrip",
+    "plans/lattice.py:guess_db_type": "scalar guessDbType (Porter.php:358-396) that test_guess_db_type checks plans.infer against",
+    "plans/lattice.py:ObjectIdStr": "the ObjectId input of guess_db_type in test_guess_db_type",
     # documented in README's prose
     "operators/zorder.py:cluster_by_z": "README 'Physical layout & runtime pruning' documents it",
     # fixtures that build a reached def's inputs
     "operators/kmv.py:kmv_sketch": "test_kmv builds the sketches that kmv_stats/kmv_union/kmv_intersect_est read",
     "operators/pq.py:pq_residual_encode": "the custom encode of test_pq_store_custom_encode_serves_residual_codes",
-    # only their own tests use them; each goes with those tests
-    "functions/text.py:clean_text": "test_clean_text_semantics_idempotence_and_duckdb_parity",
-    "functions/vector.py:dot_exact": "test_vector_dot_forms_agree",
-    "functions/vector.py:dot_fast": "test_vector_dot_forms_agree",
-    "functions/vector.py:cosine_exact": "test_vector_dot_forms_agree",
-    "functions/vector.py:norm_exact": "helper of cosine_exact",
-    "functions/vector.py:_dec_sum": "helper of dot_exact and norm_exact",
-    "operators/bloom.py:bloom_probe": "test_bloom",
-    "operators/bloom.py:bloom_merge": "test_merge_equals_union_build",
-    "operators/diffing.py:snapshot_diff_summary": "test_snapshot_diff_statuses_and_pruned_shuffle, test_versioned_table_time_travel_rollback_vacuum",
-    "operators/diffing.py:changed_rows": "test_snapshot_diff_statuses_and_pruned_shuffle",
-    "operators/joinexec.py:chain_plan_tree": "test_execute_chain_plan_follows_dp_structure",
-    "operators/joinexec.py:execute_star_plan": "test_execute_star_plan_peel_order_and_broadcasts",
-    "operators/joinexec.py:snowflake_plan_tree": "test_execute_snowflake_plan_structure_and_answer",
-    "operators/joinexec.py:graph_plan_tree": "test_execute_graph_plan_cycle_edge_and_structure, tools/probe_graphexec.py",
-    "operators/multimodal.py:extract_features": "test_multimodal_features, test_chunk_embed_search_pipeline_composes",
-    "operators/priority.py:priority_merge": "test_priority_sketch_merge_equals_one_shot",
-    "operators/sketches.py:heavy_hitters": "test_countmin_guarantees_and_merge, test_targeted_salted_join_matches_plain",
-    "operators/skew.py:salted_agg": "test_salted_agg_matches_plain",
-    "operators/skew.py:salted_join": "test_salted_join_matches_plain",
-    "operators/skew.py:salted_join_targeted": "test_targeted_salted_join_matches_plain",
-    "operators/urls.py:registered_domain": "test_url_host_and_domain, test_registered_domain_extra_multilabel_suffixes",
-    "operators/zorder.py:cluster_by_hilbert": "test_cluster_by_hilbert_bounds_both_columns",
-    "operators/zorder.py:z_bucket_stats": "test_zorder's zone-map tests",
-    "operators/zorder.py:hilbert_bucket_stats": "test_zorder's zone-map tests",
-    "plans/lattice.py:guess_db_type": "test_guess_db_type, test_guess_unknown_raises",
-    "plans/lattice.py:ObjectIdStr": "test_guess_db_type",
-    "plans/lattice.py:widen_all": "test_widen_all_fold",
-    "queries/relational.py:sort_limit_orders": "test_sort_limit_is_take_ordered",
-    "sources/jdbc.py:write_upsert_partitioned": "test_sinks_sources' partitioned-write tests, test_write_upsert_partitioned_scans_upstream_once",
-    "sources/jdbc.py:read_partitioned": "test_read_partitioned_executes_fragments_in_parallel",
-    "sources/jdbc.py:plan_read_partitions": "test_plan_read_partitions_* and the partitioned read/write tests",
-    "sources/jdbc.py:fragment_layout": "test_write_upsert_partitioned_fragment_layout_contract",
-    "sources/lake.py:write_partitioned": "test_lake's partitioned-write tests, test_dynamic_partition_pruning_fires_on_partitioned_join",
-    "sources/lake.py:compact_parquet": "test_compaction_*",
-    "sources/lake.py:write_clustered": "test_clustered_write_narrows_file_ranges, test_zorder_write_bounds_both_dims, test_bloom_index_skips_files_on_point_lookup",
-    "sources/lake.py:write_zordered": "test_zorder_write_bounds_both_dims",
-    "sources/lake.py:add_zorder_key": "test_zorder_key_rejects_overflow",
-    "sources/lake.py:merge_into_partitioned": "test_merge_into_partitioned_touches_only_affected_dirs, test_rollup_incremental_refresh_equals_one_shot",
-    "sources/lake.py:write_bloom_index": "test_bloom_index_skips_files_on_point_lookup",
-    "sources/lake.py:read_with_bloom_skip": "test_bloom_index_skips_files_on_point_lookup",
-    "sources/lake.py:_bloom_positions_py": "test_bloom_index_python_probe_parity",
-    "sources/versioned.py:compact": "test_versioned_manifest_compaction_bounds_file_count",
-    "sources/versioned.py:vacuum": "test_versioned_table_time_travel_rollback_vacuum",
-    "streaming/pipeline.py:foreach_batch_upsert": "test_foreach_batch_upsert_sqlite",
-    "streaming/pipeline.py:streaming_dedup": "test_streaming_dedup_matches_batch_distinct",
-    "streaming/pipeline.py:streaming_route": "test_streaming_route_matches_batch",
 }
 
 

@@ -150,35 +150,6 @@ def test_priority_weight_domain_enforced(spark):
         priority_sample(df, "doc_id", "w", k=2).collect()
 
 
-def test_priority_sketch_merge_equals_one_shot(spark):
-    """Mergeability: sketches (top-(k+1) state) of three DISJOINT
-    parts merge into EXACTLY the one-shot sample of the whole —
-    membership, priorities, tau, and estimator terms bit for bit,
-    grouped and ungrouped."""
-    from mongo2mysql_spark.operators.priority import (
-        priority_merge,
-        priority_sample,
-        priority_sketch,
-    )
-
-    rows = [(i, w, "g%d" % (i % 2)) for i, w in _ITEMS]
-    df = spark.createDataFrame(rows, "doc_id long, w long, grp string")
-    parts = [
-        df.filter(F.col("doc_id") % 3 == r) for r in range(3)
-    ]
-    for gc in (["grp"], None):
-        one_shot = priority_sample(df, "doc_id", "w", k=9,
-                                   group_cols=gc)
-        merged = priority_merge(
-            [priority_sketch(p, "doc_id", "w", k=9, group_cols=gc)
-             for p in parts],
-            k=9, group_cols=gc,
-        )
-        assert sorted(map(tuple, merged.collect())) == sorted(
-            map(tuple, one_shot.collect())
-        ), gc
-
-
 def test_prio_store_fold_equals_one_shot(spark, tmp_path):
     """The streaming store (streaming/priostore.py): three disjoint
     batch folds == the one-shot sample bit for bit; replay of an

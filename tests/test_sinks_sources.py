@@ -793,293 +793,12 @@ def test_mongo_cursor_batches_retry_budget_is_consecutive():
     assert len(coll.queries) == 3  # initial + 2 retries
 
 
-def test_plan_read_partitions_covers_every_row():
-    """Partition predicates are a disjoint cover of the integers:
-    every key (including keys OUTSIDE the sampled [lo, hi]) matches
-    exactly one fragment — the late-insert guarantee."""
-    import sqlite3
-
-    from mongo2mysql_spark.sources.jdbc import plan_read_partitions
-
-    preds = plan_read_partitions(0, 1000, 7, "k")
-    assert len(preds) == 7
-    con = sqlite3.connect(":memory:")
-    con.execute("CREATE TABLE t (k INTEGER)")
-    keys = list(range(-50, 1100, 7)) + [0, 1000, -1, 1001]
-    con.executemany("INSERT INTO t VALUES (?)", [(k,) for k in keys])
-    total = 0
-    for p in preds:
-        total += con.execute(f"SELECT count(*) FROM t WHERE {p}").fetchone()[0]
-    assert total == len(keys)  # disjoint AND complete
-    # every key matches exactly one predicate
-    multi = con.execute(
-        "SELECT count(*) FROM t WHERE "
-        + " AND ".join(f"({p})" for p in preds[:2])
-    ).fetchone()[0]
-    assert multi == 0
-
-
-def test_plan_read_partitions_edges_and_pushdown():
-    from mongo2mysql_spark.sources.jdbc import plan_read_partitions
-
-    # degenerate range and single partition collapse to catch-all
-    assert plan_read_partitions(5, 5, 4, "k") == ["1=1"]
-    assert plan_read_partitions(0, 10, 1, "k") == ["1=1"]
-    # stride-0 (more partitions than keys) degrades to per-key ranges
-    preds = plan_read_partitions(0, 3, 10, "k")
-    assert len(preds) == 3
-    # extra predicate lands on every fragment
-    preds = plan_read_partitions(0, 100, 3, "k", "src = 'a'")
-    assert all("src = 'a'" in p for p in preds)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        plan_read_partitions(0, 10, 0, "k")
-    with _pytest.raises(ValueError):
-        plan_read_partitions(10, 0, 2, "k")
-
-
-def test_plan_read_partitions_unit_range_collapses_to_catchall():
-    """hi - lo == 1 with num_partitions >= 2: the stride-0 adjustment
-    collapses the plan to ONE fragment, which must be the catch-all —
-    a lone 'k < lo+1' fragment drops hi itself and every late insert
-    (the r9 ADVICE finding)."""
-    import sqlite3
-
-    from mongo2mysql_spark.sources.jdbc import plan_read_partitions
-
-    for n in (2, 3, 16):
-        assert plan_read_partitions(5, 6, n, "k") == ["1=1"]
-    assert plan_read_partitions(5, 6, 3, "k", "src = 'a'") == [
-        "1=1 AND (src = 'a')"
-    ]
-    # end-to-end: rows at lo, hi AND outside the sampled range all land
-    con = sqlite3.connect(":memory:")
-    con.execute("CREATE TABLE t (k INTEGER)")
-    con.executemany("INSERT INTO t VALUES (?)", [(k,) for k in (4, 5, 6, 7)])
-    preds = plan_read_partitions(5, 6, 3, "k")
-    total = sum(
-        con.execute(f"SELECT count(*) FROM t WHERE {p}").fetchone()[0]
-        for p in preds
-    )
-    assert total == 4
-
-
-def _sqlite_connect(path):
-    import sqlite3
-
-    return sqlite3.connect(path)
-
-
-def test_read_partitioned_executes_fragments_in_parallel(spark, tmp_path):
-    """read_partitioned EXECUTES a partition plan: one Spark task per
-    fragment, each opening its own sqlite connection on the executor;
-    the union of fragments is exactly the table (late inserts outside
-    the sampled [lo, hi] included), and the fragment count is the RDD
-    partition count."""
-    import functools
-    import sqlite3
-
-    from mongo2mysql_spark.sources.jdbc import (
-        plan_read_partitions,
-        read_partitioned,
-    )
-
-    db = str(tmp_path / "src.db")
-    con = sqlite3.connect(db)
-    con.execute("CREATE TABLE t (k INTEGER, v TEXT)")
-    rows = [(k, f"v{k}") for k in range(0, 1000, 3)]
-    # late inserts OUTSIDE the planner's sampled [lo, hi]
-    rows += [(-7, "early"), (2024, "late")]
-    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
-    con.commit()
-    con.close()
-
-    preds = plan_read_partitions(0, 999, 4, "k")
-    df = read_partitioned(
-        spark,
-        "t",
-        ["k", "v"],
-        "k long, v string",
-        preds,
-        functools.partial(_sqlite_connect, db),
-        fetch_size=64,
-    )
-    assert df.rdd.getNumPartitions() == 4
-    got = {(r["k"], r["v"]) for r in df.collect()}
-    assert got == set(rows)
-    # single-fragment plan (degenerate range) also round-trips
-    df1 = read_partitioned(
-        spark, "t", ["k"], "k long",
-        plan_read_partitions(5, 6, 3, "k"),
-        functools.partial(_sqlite_connect, db),
-    )
-    assert df1.count() == len(rows)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        read_partitioned(
-            spark, "t", ["k"], "k long", [],
-            functools.partial(_sqlite_connect, db),
-        )
-
-
 def _sqlite_connect_busywait(path):
     import sqlite3
 
-    # parallel fragments contend on sqlite's single writer lock; the
-    # busy timeout makes tasks queue instead of erroring (MySQL has no
-    # such constraint — fragments write disjoint PK ranges in parallel)
+    # writers contend on sqlite's single writer lock; the busy timeout
+    # makes them queue instead of erroring
     return sqlite3.connect(path, timeout=30)
-
-
-def test_write_upsert_partitioned_equals_sequential(spark, tmp_path):
-    """Fragment-parallel upsert == sequential write_upsert: same final
-    table state, one fragment per Spark task (identity partitioner),
-    late re-upserts REPLACE in place."""
-    import functools
-
-    from mongo2mysql_spark.sources.jdbc import (
-        write_upsert,
-        write_upsert_partitioned,
-    )
-
-    rows = [Row(_id=i, v=f"v{i}") for i in range(0, 500, 3)]
-    df = spark.createDataFrame(rows)
-    dbs = {}
-    for name in ("par", "seq"):
-        db = str(tmp_path / f"{name}.db")
-        con = sqlite3.connect(db)
-        con.execute("CREATE TABLE t (_id INTEGER PRIMARY KEY, v TEXT)")
-        con.commit()
-        con.close()
-        dbs[name] = db
-    n = write_upsert_partitioned(
-        df, "t", "_id",
-        functools.partial(_sqlite_connect_busywait, dbs["par"]),
-        num_fragments=4, batch_size=16,
-    )
-    assert n == 4
-    write_upsert(
-        df, "t", functools.partial(_sqlite_connect_busywait, dbs["seq"]),
-        batch_size=16, max_connections=1,
-    )
-    got = {}
-    for name, db in dbs.items():
-        con = sqlite3.connect(db)
-        got[name] = set(con.execute("SELECT _id, v FROM t").fetchall())
-        con.close()
-    assert got["par"] == got["seq"] == {(r._id, r.v) for r in rows}
-    # re-upsert with changed values: REPLACE converges, no duplicates
-    df2 = spark.createDataFrame([Row(_id=i, v=f"w{i}") for i in range(0, 500, 3)])
-    write_upsert_partitioned(
-        df2, "t", "_id",
-        functools.partial(_sqlite_connect_busywait, dbs["par"]),
-        num_fragments=4, batch_size=16,
-    )
-    con = sqlite3.connect(dbs["par"])
-    upd = set(con.execute("SELECT _id, v FROM t").fetchall())
-    con.close()
-    assert upd == {(r._id, r.v) for r in df2.collect()}
-
-
-def test_write_upsert_partitioned_killed_fragment_retry_converges(spark, tmp_path):
-    """The A15 retry contract on the fragment executor: a fragment
-    killed mid-write leaves a committed prefix; re-running the same
-    partitioned upsert converges to exactly-once row state (REPLACE
-    idempotence over the fragment's own key range — Porter.php:207
-    semantics under task retry)."""
-    import functools
-
-    from mongo2mysql_spark.sources.jdbc import write_upsert_partitioned
-
-    db = str(tmp_path / "t.db")
-    trip = str(tmp_path / "trip")
-    con = sqlite3.connect(db)
-    con.execute("CREATE TABLE t (_id TEXT PRIMARY KEY, v INT)")
-    con.commit()
-    con.close()
-    factory = functools.partial(_failing_once_connect, db, trip, 2)
-    df = spark.createDataFrame([Row(_id=f"{i:03d}", v=i) for i in range(60)])
-    # string PK: key_col cast to long is NULL -> single fragment, the
-    # all-NULL domain path (numeric-PK fragmenting is the test above)
-    with pytest.raises(Exception, match="injected mid-partition failure"):
-        write_upsert_partitioned(
-            df.coalesce(1), "t", "_id", factory,
-            num_fragments=1, batch_size=7,
-        )
-    con = sqlite3.connect(db)
-    n_partial = con.execute("SELECT COUNT(*) FROM t").fetchone()[0]
-    con.close()
-    assert 0 < n_partial < 60  # real committed prefix survived the kill
-    write_upsert_partitioned(
-        df.coalesce(1), "t", "_id", factory, num_fragments=1, batch_size=7
-    )
-    con = sqlite3.connect(db)
-    n, vsum = con.execute("SELECT COUNT(*), SUM(v) FROM t").fetchone()
-    con.close()
-    assert (n, vsum) == (60, sum(range(60)))
-
-
-def test_write_upsert_partitioned_fragment_layout_contract(spark, tmp_path):
-    """Fragment boundaries agree with the read planner (shared
-    fragment_layout): every row lands in the fragment whose read
-    predicate selects it; degenerate domains collapse to one fragment;
-    empty frames write nothing and open no connection."""
-    import functools
-
-    from mongo2mysql_spark.sources.jdbc import (
-        fragment_layout,
-        plan_read_partitions,
-        write_upsert_partitioned,
-    )
-
-    assert fragment_layout(5, 5, 8) == (1, 1)
-    assert fragment_layout(5, 6, 3)[0] == 1
-    n, stride = fragment_layout(0, 999, 4)
-    assert (n, stride) == (4, 249)
-    # cross-check: the executor's clamp assigns each key to the same
-    # fragment index whose planner predicate matches it
-    preds = plan_read_partitions(0, 999, 4, "k")
-    con = sqlite3.connect(":memory:")
-    con.execute("CREATE TABLE probe (k INTEGER)")
-    for k in (0, 248, 249, 500, 996, 999):
-        con.execute("DELETE FROM probe")
-        con.execute("INSERT INTO probe VALUES (?)", (k,))
-        sql_frag = [
-            i for i, p in enumerate(preds)
-            if con.execute(f"SELECT count(*) FROM probe WHERE {p}").fetchone()[0]
-        ]
-        clamp = min(n - 1, max(0, k // stride))
-        assert sql_frag == [clamp]
-    con.close()
-    # degenerate: single-key domain still writes everything
-    db = str(tmp_path / "one.db")
-    c = sqlite3.connect(db)
-    c.execute("CREATE TABLE t (_id INTEGER PRIMARY KEY, v TEXT)")
-    c.commit()
-    c.close()
-    df = spark.createDataFrame([Row(_id=7, v="a")])
-    assert write_upsert_partitioned(
-        df, "t", "_id", functools.partial(_sqlite_connect_busywait, db),
-        num_fragments=8,
-    ) == 1
-    c = sqlite3.connect(db)
-    assert c.execute("SELECT _id, v FROM t").fetchall() == [(7, "a")]
-    c.close()
-    # empty frame: no fragments beyond the catch-all, no rows written
-    empty = spark.createDataFrame([], "_id long, v string")
-    assert write_upsert_partitioned(
-        empty, "t", "_id", functools.partial(_sqlite_connect_busywait, db)
-    ) == 1
-    c = sqlite3.connect(db)
-    assert c.execute("SELECT COUNT(*) FROM t").fetchone()[0] == 1
-    c.close()
-    with pytest.raises(ValueError):
-        write_upsert_partitioned(
-            empty, "t", "nope",
-            functools.partial(_sqlite_connect_busywait, db),
-        )
 
 
 @pytest.mark.slow
@@ -1168,3 +887,73 @@ def test_mongo_export_e2e_cursor_death_exactly_once(spark, tmp_path):
         (p, i) for p in range(23) for i in (0, 1)
     }
     assert all(v == f"t{p}{'ab'[i]}" for p, i, v in kids)
+
+
+@pytest.mark.slow
+def test_incremental_export_reads_only_new_docs(spark, tmp_path):
+    """The CDC-shaped sync (mongo2mysql_spark/sync.py): a second export
+    after N new documents must READ only those N from the source
+    (asserted on the fake collection's issued queries — the reference
+    rewalks everything, Porter.php:508-511), re-derive child-spill rows
+    only for the touched parents, and leave the sink equal to a
+    from-scratch export key for key."""
+    import functools
+    import sqlite3
+
+    from mongo2mysql_spark.porter import PorterConfig, SparkPorter
+    from mongo2mysql_spark.sync import incremental_export, sink_high_water
+
+    def doc(i):
+        return {"_id": i, "v": i * 10, "tokens": [f"t{i}a", f"t{i}b"]}
+
+    old_docs = [doc(i) for i in range(20)]
+    new_docs = [doc(i) for i in range(20, 25)]
+    porter = SparkPorter(spark, PorterConfig())
+
+    def dump(db):
+        con = sqlite3.connect(db)
+        parent = con.execute("SELECT _id, v FROM c ORDER BY _id").fetchall()
+        kids = con.execute(
+            "SELECT _parentid, _index, tokens FROM `c__tokens` "
+            "ORDER BY _parentid, _index"
+        ).fetchall()
+        con.close()
+        return parent, kids
+
+    db = str(tmp_path / "inc.db")
+    factory = functools.partial(_sqlite_connect_busywait, db)
+    assert sink_high_water(factory, "c") is None  # missing table edge
+
+    # first sync: full walk ({} query), everything lands
+    coll1 = _FakeCollection(old_docs)
+    r1 = incremental_export(spark, coll1, "c", porter, factory,
+                            batch_size=7)
+    assert coll1.queries == [{}]
+    assert r1["docs"] == 20 and r1["resumed_from"] is None
+    assert sink_high_water(factory, "c") == 19
+
+    # second sync after 5 new docs: reads ONLY past the high water
+    coll2 = _FakeCollection(old_docs + new_docs)
+    r2 = incremental_export(spark, coll2, "c", porter, factory,
+                            batch_size=7)
+    assert coll2.queries == [{"_id": {"$gt": 19}}]
+    assert r2["docs"] == 5 and r2["resumed_from"] == 19
+    assert r2["tables"] == {"c", "c__tokens"}
+
+    # sink state == a from-scratch export of all 25 docs
+    db_full = str(tmp_path / "full.db")
+    factory_full = functools.partial(_sqlite_connect_busywait, db_full)
+    coll3 = _FakeCollection(old_docs + new_docs)
+    incremental_export(spark, coll3, "c", porter, factory_full,
+                       batch_size=7)
+    assert dump(db) == dump(db_full)
+    parent, kids = dump(db)
+    assert [r[0] for r in parent] == list(range(25))
+    assert len(kids) == 25 * 2
+
+    # idempotence: a third sync with nothing new reads zero documents
+    coll4 = _FakeCollection(old_docs + new_docs)
+    r3 = incremental_export(spark, coll4, "c", porter, factory,
+                            batch_size=7)
+    assert r3["docs"] == 0 and coll4.queries == [{"_id": {"$gt": 24}}]
+    assert dump(db) == dump(db_full)

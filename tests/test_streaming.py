@@ -1,12 +1,10 @@
-"""Streaming-specific behavior beyond the oracle gate: the stateless
-ETL lift, the foreachBatch JDBC sink, and watermark wiring."""
+"""Streaming-specific behavior beyond the oracle gate: stream joins,
+checkpoint recovery, the incremental stores, and watermark wiring."""
 
 from __future__ import annotations
 
-import functools
 import os
 import sqlite3
-import tempfile
 
 import pytest
 
@@ -14,41 +12,14 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from mongo2mysql_spark.streaming.pipeline import (
-    foreach_batch_upsert,
     run_to_memory,
     stream_events,
     stream_static_enrich,
     stream_stream_interval_join,
-    streaming_dedup,
-    streaming_route,
     tumbling_counts,
 )
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_streaming_route_matches_batch(spark):
-    """The routing operator lifted onto a stream produces exactly the
-    batch routing result (stateless projection ⇒ identical semantics)."""
-    from mongo2mysql_spark.operators.routing import add_table_column
-    from mongo2mysql_spark.sources.parquet import load_table
-
-    def with_key(df):
-        return df.withColumn(
-            "_key", F.concat(F.lit("tag:"), F.col("user_id").cast("string"), F.lit(":topics"))
-        )
-
-    stream = streaming_route(with_key(stream_events(spark, SF)), "_key", "events")
-    got = run_to_memory(
-        stream.groupBy("_table").count(), mode="complete"
-    ).collect()
-    batch = (
-        add_table_column(with_key(load_table(spark, SF, "events")), "_key", "events")
-        .groupBy("_table")
-        .count()
-        .collect()
-    )
-    assert sorted(map(repr, got)) == sorted(map(repr, batch))
 
 
 def test_run_to_memory_restores_conf(spark, tmp_path):
@@ -76,32 +47,6 @@ def test_run_to_memory_restores_conf(spark, tmp_path):
 def test_streaming_watermark_present(spark):
     agg = tumbling_counts(stream_events(spark, SF), watermark="2 hours")
     assert "watermark" in agg._jdf.queryExecution().analyzed().toString().lower()
-
-
-def test_foreach_batch_upsert_sqlite(spark):
-    with tempfile.TemporaryDirectory() as tmp:
-        db = os.path.join(tmp, "s.db")
-        conn = sqlite3.connect(db)
-        conn.execute(
-            "CREATE TABLE event_counts (event_type TEXT PRIMARY KEY, n INTEGER)"
-        )
-        conn.commit()
-        conn.close()
-        stream = stream_events(spark, SF)
-        agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-        writer = foreach_batch_upsert(
-            agg.coalesce(1), "event_counts", functools.partial(sqlite3.connect, db)
-        )
-        q = writer.outputMode("complete").start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        conn = sqlite3.connect(db)
-        rows = dict(conn.execute("SELECT event_type, n FROM event_counts").fetchall())
-        conn.close()
-        assert sum(rows.values()) == 1000  # sf0.001 events rows
-        assert set(rows) == {"click", "signup", "purchase", "error", "view"}
 
 
 def test_stateful_first_n_per_key(spark):
@@ -182,21 +127,6 @@ def test_stream_stream_interval_join_matches_batch(spark):
         .select("vid", "pid")
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_streaming_dedup_matches_batch_distinct(spark):
-    """dropDuplicatesWithinWatermark over a bounded replay keeps exactly
-    one row per key — same cardinality as the batch distinct."""
-    from mongo2mysql_spark.sources.parquet import load_table
-
-    stream = stream_events(spark, SF)
-    deduped = streaming_dedup(stream, ["user_id", "event_type"], watermark="1 hour")
-    got = run_to_memory(deduped, mode="append")
-    batch = load_table(spark, SF, "events")
-    expected = batch.select("user_id", "event_type").distinct().count()
-    assert got.count() == expected
-    # every surviving (key) pair is unique
-    assert got.select("user_id", "event_type").distinct().count() == expected
 
 
 def test_checkpoint_recovery_exactly_once(spark, tmp_path):

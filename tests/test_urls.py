@@ -8,7 +8,6 @@ from mongo2mysql_spark.operators.urls import (
     host_blocklist_filter,
     host_profile,
     normalize_url,
-    registered_domain,
     url_dedup,
     url_host,
 )
@@ -37,46 +36,13 @@ def test_normalize_strips_noise(spark):
     assert _norm(spark, "https://www.example.com") == "example.com"
 
 
-def test_url_host_and_domain(spark):
-    cases = {
-        "a.b.news.example.co": "example.co",
-        "example.com": "example.com",
-        # multi-part public suffixes: the registrable domain is 3 labels
-        "news.bbc.co.uk": "bbc.co.uk",
-        "deep.sub.shop.com.au": "shop.com.au",
-        "x.co.jp": "x.co.jp",
-        # a host that IS a suffix has no registrable domain: pass it
-        # through unchanged (an '' would merge every bare suffix into
-        # one group key)
-        "co.uk": "co.uk",
-    }
-    df = spark.createDataFrame([(h,) for h in cases], "h string").select(
-        "h",
-        url_host(F.col("h")).alias("host"),
-        registered_domain(F.col("h")).alias("dom"),
-    )
+def test_url_host(spark):
+    hosts = ["a.b.news.example.co", "example.com", "news.bbc.co.uk", "co.uk"]
+    df = spark.createDataFrame(
+        [(h, f"{h}/p/q?x=1") for h in hosts], "h string, u string"
+    ).select("h", url_host(F.col("u")).alias("host"))
     for r in df.collect():
         assert r.host == r.h
-        assert r.dom == cases[r.h], (r.h, r.dom)
-
-
-def test_registered_domain_extra_multilabel_suffixes(spark):
-    """3+-label PSL entries via extra_suffixes must extract
-    len(suffix_labels)+1 trailing labels (not a hard-coded three), and
-    nested suffixes resolve to the longest match regardless of the
-    order they were passed in."""
-    extra = ("pref.aichi.jp", "x.co.uk")  # 3-label + one nested under co.uk
-    cases = {
-        "www.city.pref.aichi.jp": "city.pref.aichi.jp",
-        "pref.aichi.jp": "pref.aichi.jp",  # bare suffix passes through
-        "deep.a.x.co.uk": "a.x.co.uk",  # longest suffix wins over co.uk
-        "news.bbc.co.uk": "bbc.co.uk",  # built-ins still apply
-    }
-    df = spark.createDataFrame([(h,) for h in cases], "h string").select(
-        "h", registered_domain(F.col("h"), extra_suffixes=extra).alias("dom")
-    )
-    for r in df.collect():
-        assert r.dom == cases[r.h], (r.h, r.dom)
 
 
 def test_url_dedup_and_host_profile(spark):

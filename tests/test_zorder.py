@@ -1,7 +1,7 @@
-"""Z-order clustering (operators/zorder.py): Morton-key bit parity
-against a python reference and DuckDB, the clustered write's tight
-per-partition boxes, the z-vs-linear pruning win on a planted grid,
-and validation."""
+"""Z-order clustering (operators/zorder.py): Morton-key and Hilbert
+bit parity against python references and DuckDB, the clustered write's
+tight per-partition boxes, the zone-map pruning win of z and Hilbert
+over linear, and validation."""
 
 from __future__ import annotations
 
@@ -78,12 +78,18 @@ def test_cluster_by_z_bounds_both_columns(spark):
     assert min(r["sy"] for r in linear) == 63  # y unbounded everywhere
 
 
-def test_z_bucket_stats_and_prune_match_duckdb(spark, tmp_path):
+def test_layout_bucket_stats_equals_separate_union(spark, tmp_path):
+    """The fused single-pass layout_bucket_stats (one scan, all three
+    layouts) is row-identical to the union of the separate z/linear
+    and Hilbert restatements in DuckDB, prune_counts matches its
+    restatement over them, and the pruning win holds on the 2-D box:
+    z reads fewer buckets than linear, Hilbert no more than z."""
     from mongo2mysql_spark.operators.zorder import (
+        layout_bucket_stats,
         prune_counts,
+        sql_hilbert_bucket_stats,
         sql_prune_counts,
         sql_z_bucket_stats,
-        z_bucket_stats,
     )
 
     rows = [((i * 131) % 1024, (i * 577) % 1024) for i in range(2000)]
@@ -95,54 +101,28 @@ def test_z_bucket_stats_and_prune_match_duckdb(spark, tmp_path):
     con.execute(
         f"CREATE VIEW zs AS SELECT * FROM read_parquet('{p}/*.parquet')"
     )
-    stats = z_bucket_stats(src, ["a", "b"], bits=10, n_buckets=64)
-    stats_sql = sql_z_bucket_stats("zs", ["a", "b"], 10, 64)
-    assert not compare(
-        stats, con, f"WITH {stats_sql} SELECT * FROM zbstats"
+    fused = layout_bucket_stats(src, ["a", "b"], bits=10, n_buckets=64)
+    stats_sql = (
+        f"{sql_z_bucket_stats('zs', ['a', 'b'], 10, 64)}, "
+        f"{sql_hilbert_bucket_stats('zs', ['a', 'b'], 10, 64)}, "
+        "zall AS (SELECT * FROM zbstats UNION ALL SELECT * FROM hbstats)"
     )
-    pruned = prune_counts(stats, 100, 200, 300, 400)
-    prune_sql = sql_prune_counts("zbstats", 100, 200, 300, 400)
+    assert not compare(fused, con, f"WITH {stats_sql} SELECT * FROM zall")
+    pruned = prune_counts(fused, 100, 200, 300, 400)
+    prune_sql = sql_prune_counts("zall", 100, 200, 300, 400)
     assert not compare(
         pruned, con,
         f"WITH {stats_sql}, {prune_sql} SELECT * FROM zpcounts",
     )
-    # the pruning win: the 2-D predicate reads fewer buckets under z
-    got = {r["layout"]: r for r in pruned.collect()}
-    assert got["z"]["buckets_read"] < got["linear"]["buckets_read"]
-
-
-def test_layout_bucket_stats_equals_separate_union(spark):
-    """The fused single-pass layout_bucket_stats (one scan, all three
-    layouts) is row-identical to z_bucket_stats UNION
-    hilbert_bucket_stats over the same input — the equivalence the
-    zorder readout slot's optimization rests on."""
-    from mongo2mysql_spark.operators.zorder import (
-        hilbert_bucket_stats,
-        layout_bucket_stats,
-        z_bucket_stats,
-    )
-
-    rows = [((i * 131) % 1024, (i * 577) % 1024) for i in range(2000)]
-    df = spark.createDataFrame(rows, "a long, b long")
-    fused = layout_bucket_stats(df, ["a", "b"], bits=10, n_buckets=64)
-    sep = z_bucket_stats(df, ["a", "b"], bits=10, n_buckets=64).unionByName(
-        hilbert_bucket_stats(df, ["a", "b"], bits=10, n_buckets=64)
-    )
-    assert fused.schema == sep.schema
-    key = lambda r: (r["layout"], r["bucket"])  # noqa: E731
-    got = sorted(map(tuple, fused.collect()), key=lambda t: (t[0], t[1]))
-    want = sorted(map(tuple, sep.collect()), key=lambda t: (t[0], t[1]))
-    assert got == want
+    got = {r["layout"]: r["buckets_read"] for r in pruned.collect()}
+    assert got["z"] < got["linear"], got
+    assert got["hilbert"] <= got["z"], got
     with pytest.raises(ValueError, match="power of two"):
         layout_bucket_stats(df, ["a", "b"], bits=10, n_buckets=48)
 
 
 def test_z_value_domain_and_arity_validation(spark):
-    from mongo2mysql_spark.operators.zorder import (
-        sql_z_value,
-        z_bucket_stats,
-        z_value,
-    )
+    from mongo2mysql_spark.operators.zorder import sql_z_value, z_value
 
     df = spark.createDataFrame([(5000, 1)], "a long, b long")
     with pytest.raises(Exception, match="out of"):
@@ -153,8 +133,6 @@ def test_z_value_domain_and_arity_validation(spark):
         z_value([F.col("a"), F.col("b")], 32)
     with pytest.raises(ValueError, match="bits"):
         sql_z_value(["a", "b", "c"], 21)
-    with pytest.raises(ValueError, match="power of two"):
-        z_bucket_stats(df, ["a", "b"], bits=10, n_buckets=48)
 
 
 def test_hilbert_reference_bijective_unit_step():
@@ -196,61 +174,3 @@ def test_with_hilbert_matches_reference_and_duckdb(spark, tmp_path):
     assert not compare(
         got, con, f"WITH {walk} SELECT a, b, hd FROM hw9"
     )
-
-
-def test_hilbert_stats_match_duckdb_and_prune_at_least_as_well(
-    spark, tmp_path
-):
-    from mongo2mysql_spark.operators.zorder import (
-        hilbert_bucket_stats,
-        prune_counts,
-        sql_hilbert_bucket_stats,
-        z_bucket_stats,
-    )
-
-    rows = [((i * 131) % 1024, (i * 577) % 1024) for i in range(2000)]
-    df = spark.createDataFrame(rows, "a long, b long")
-    p = str(tmp_path / "hs")
-    df.write.parquet(p)
-    src = spark.read.parquet(p)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW hs AS SELECT * FROM read_parquet('{p}/*.parquet')"
-    )
-    hstats = hilbert_bucket_stats(src, ["a", "b"], bits=10, n_buckets=64)
-    hsql = sql_hilbert_bucket_stats("hs", ["a", "b"], 10, 64)
-    assert not compare(
-        hstats, con, f"WITH {hsql} SELECT * FROM hbstats"
-    )
-    # pruning: hilbert reads no more buckets than z on the 2-D box
-    zstats = z_bucket_stats(src, ["a", "b"], bits=10, n_buckets=64)
-    both = prune_counts(
-        zstats.unionByName(hstats), 100, 200, 300, 400
-    )
-    got = {r["layout"]: r for r in both.collect()}
-    assert (
-        got["hilbert"]["buckets_read"] <= got["z"]["buckets_read"]
-    ), got
-
-
-def test_cluster_by_hilbert_bounds_both_columns(spark):
-    """Hilbert clustering bounds both dimensions per partition, like
-    z (and unlike a linear sort) — same grid fixture as the z test."""
-    from mongo2mysql_spark.operators.zorder import cluster_by_hilbert
-
-    rows = [(x, y) for x in range(64) for y in range(64)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    clustered = cluster_by_hilbert(df, ["x", "y"], bits=6, n_files=16)
-    boxes = (
-        clustered.select(F.spark_partition_id().alias("p"), "x", "y")
-        .groupBy("p")
-        .agg(
-            (F.max("x") - F.min("x")).alias("sx"),
-            (F.max("y") - F.min("y")).alias("sy"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    assert sum(r["n"] for r in boxes) == 64 * 64
-    assert max(r["sx"] for r in boxes) <= 31
-    assert max(r["sy"] for r in boxes) <= 31
